@@ -95,14 +95,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
+    val cpus = spark.sparkContext.defaultParallelism
     // Warm up the session once (Hadoop FS init, codegen compiler,
     // broadcast pools) so the alphabetically-first query doesn't absorb
     // several seconds of one-time JVM/session startup cost.
@@ -112,7 +106,7 @@ object Bench {
     }
     calibrate() // JIT warm-up; the measured runs follow
     val calStart = calibrate()
-    val calParStart = calibratePar(cpus.toInt)
+    val calParStart = calibratePar(cpus)
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
@@ -306,7 +300,7 @@ object Bench {
     // stdout line must stay compact. It carries per-FAMILY totals plus a
     // pointer to the full detail file the judge can read directly.
     val calEnd = calibrate()
-    val calParEnd = calibratePar(cpus.toInt)
+    val calParEnd = calibratePar(cpus)
     val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failed,"runs":$nRuns,"reruns":$rerunNames,"runs_detail":$detail,"contended":$contendedAny,"load_start":$loadStart,"load_end":$loadEnd,"cal_start":${r3(calStart)},"cal_end":${r3(calEnd)},"cal_par_start":${r3(calParStart)},"cal_par_end":${r3(calParEnd)},"sf":"$sfDir"}"""
     // core count stamped into the default detail filename (VERDICT r21
     // #7: the driver's 8-core run overwrote the 32-core detail — runs

@@ -16,4 +16,22 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     graft.queries.Relational.oracleSql ++ graft.queries.Sig.oracleSql ++
       graft.queries.Pipeline.oracleSql ++ graft.queries.Stream.oracleSql
+
+  /** The local session every main (Bench, Verify, tools) runs on:
+    * `local[$SPARK_GRAFT_CPUS]` (default 4) with shuffle partitions set
+    * to the same count, parquet TIMESTAMP(NANOS) read as a long, UTC
+    * session time, UI off, log level WARN.
+    */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

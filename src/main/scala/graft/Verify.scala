@@ -1,24 +1,38 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local
-    // iteration on one query without the full dump; driver passes 2)
+    if (args.length < 2) {
+      System.err.println("usage: Verify <sfDir> <outDir> [query,query,...]")
+      sys.exit(2)
+    }
+    // optional 3rd arg: comma-separated query-name filter (gates one
+    // query end to end without the full dump)
     val Array(sfDir, outDir) = args.take(2)
+    // Guard against the pre-round-11 arg order (<outDir> <sfDir>): an
+    // old invocation would silently write query output INTO the
+    // dataset directory. The sf dir must look like a testdata dir.
+    if (!new java.io.File(sfDir, "events.parquet").exists()) {
+      System.err.println(
+        s"arg order check: $sfDir has no events.parquet — expected " +
+          "<sfDir> <outDir> [query,...] (sfDir first)")
+      sys.exit(2)
+    }
     val only: Option[Set[String]] = args.drop(2).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // an unknown or empty filter is a typo, not a 0/0 run
+    only.foreach { names =>
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      if (names.isEmpty || unknown.nonEmpty) {
+        System.err.println(
+          s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}; valid: " +
+            SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
+        sys.exit(2)
+      }
+    }
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     var failed = List.empty[String]
     SparkEntry.queries

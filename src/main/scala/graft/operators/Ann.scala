@@ -200,8 +200,9 @@ object Ann {
     * (per-query centroid scan = nCells vs per-probe posting scan =
     * n/nCells), the classical IVF sizing; this rule gives 142 cells at
     * n=20k (PipelineSpec pins sizedCells(20000) == 142), and the
-    * GraphProbe ×100 run measured a √n-shaped quantizer (its pre-rule
-    * fixed config used 128) halving the ADC probe scan vs a fixed 32.
+    * GraphProbe ×100 run (tools/GraphProbe, recoverable from commit
+    * e9cc669) measured a √n-shaped quantizer (its pre-rule fixed
+    * config used 128) halving the ADC probe scan vs a fixed 32.
     * `kMin` floors tiny corpora so blocking queries (SemDeDup) keep
     * useful clusters; the `min(n, ·)` cap keeps [[kmeansFit]]'s
     * smallest-id init satisfiable. Oracles replay the same rule as

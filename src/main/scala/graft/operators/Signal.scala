@@ -88,32 +88,6 @@ object Signal {
       .withColumn("coords", expr(s"transform($coordsCol, c -> CAST(c AS DOUBLE))"))
       .withMetadata("n", seriesMeta)
 
-  /** Explicit-count keyed repartition feeding a groupBy on the same
-    * keys — MEASURED AS A NET REGRESSION and disabled by default
-    * (optimization round 22): AQE coalesces the seriesify/gridify
-    * exchange to 1–3 byte-sized partitions (packed series are tiny),
-    * which looked like serialized kernel CPU, but the in-JVM A/B
-    * (tools/SigSpreadProbe, alternating per rep so host drift cancels)
-    * shows the explicit spread LOSES on most of the family — the
-    * repartition forfeits the map-side partial collect_list, adds a
-    * plan-forcing `.rdd` width probe, and shuffles raw rows:
-    * sosfilt 1.05 (off) vs 1.32 (on), stft 0.84/0.99, correlate2d
-    * 1.50/1.66, welch_long 1.29/1.45, fftconvolve3d 1.14/1.29 —
-    * only the multi-kernel unions won (complex_modes 1.60/1.33,
-    * dct_roundtrip 1.18/1.05). Net across the family: off. Kept
-    * behind `-Dgraft.sig.spread=true` for re-measurement on wider
-    * hosts; the 100 TB story is unchanged either way (at scale the
-    * agg's shuffle is byte-heavy and AQE sizes it correctly).
-    */
-  private def keyedSpread(df: DataFrame, keys: Seq[String]): DataFrame =
-    if (keys.isEmpty ||
-        !"true".equals(System.getProperty("graft.sig.spread"))) df
-    else {
-      val p = math.max(df.sparkSession.sparkContext.defaultParallelism,
-        df.rdd.getNumPartitions)
-      df.repartition(p, keys.map(col): _*)
-    }
-
   def seriesify(df: DataFrame, keys: Seq[String], dim: String,
                 values: Seq[String]): DataFrame = {
     if (isSeriesified(df) && values.forall(df.columns.contains))
@@ -126,22 +100,20 @@ object Signal {
         values.zipWithIndex.map { case (v, i) =>
           coalesce(col(v).cast("double"), lit(Double.NaN)).as(s"v$i")
         }): _*)
-    val clean0 = df.filter(col(dim).isNotNull)
-    // Keyed series get an EXPLICIT-count repartition on the group keys
-    // (optimization round 22, guide §2.5): the bare groupBy's
-    // ENSURE_REQUIREMENTS exchange is AQE-coalesced by BYTES, and a
-    // packed series is tiny (50 users × 10k samples ≈ 4 MB), so the
-    // final aggregate — where array_sort, the transforms and every
-    // downstream KERNEL expression run — collapsed to 1–3 tasks while
-    // the rest of the machine idled (stage listener: 1-task stages of
-    // 0.4–1.4 s wall carrying the kernel CPU on sig_complex_modes /
-    // sig_fft_norm_roundtrips). The agg reuses HashPartitioning(keys,
-    // p), so the plan keeps exactly ONE hash exchange (PlanShapeSpec's
-    // pin) — REPARTITION_BY_NUM is user-specified and AQE never
-    // coalesces it. p floors at defaultParallelism and keeps the
-    // input's own width when wider, the shingleFrame rule; results are
-    // per-group and partitioning-independent (hash-oracle-pinned).
-    val clean = keyedSpread(clean0, keys)
+    val clean = df.filter(col(dim).isNotNull)
+    // The groupBy's own ENSURE_REQUIREMENTS exchange is the plan's one
+    // hash shuffle (PlanShapeSpec's pin); AQE coalesces it by bytes, so
+    // small packed series can land on 1–3 tasks. An explicit-count
+    // keyed repartition ahead of the groupBy was measured as a net
+    // LOSS (optimization round 22, in-JVM A/B alternating per rep,
+    // tools/SigSpreadProbe — recover it from commit e9cc669): it
+    // forfeits the map-side partial collect_list, adds a plan-forcing
+    // `.rdd` width probe and shuffles raw rows. Min s off/on, sf0.1:
+    // sosfilt 1.05/1.32, stft 0.84/0.99, correlate2d 1.50/1.66,
+    // welch_long 1.29/1.45, fftconvolve3d 1.14/1.29; only the
+    // multi-kernel unions won (complex_modes 1.60/1.33, dct_roundtrip
+    // 1.18/1.05). At scale the agg's shuffle is byte-heavy and AQE
+    // sizes it correctly either way. [[gridify]] follows the same rule.
     val grouped =
       if (keys.isEmpty) clean.groupBy()
       else clean.groupBy(keys.map(col): _*)
@@ -542,9 +514,7 @@ object Signal {
         values.zipWithIndex.map { case (v, i) =>
           coalesce(col(v).cast("double"), lit(Double.NaN)).as(if (i == 0) "v" else s"v$i")
         }: _*)
-    // same explicit-count spread as seriesify (round 22, guide §2.5)
-    val clean = keyedSpread(
-      df.filter(dims.map(col(_).isNotNull).reduce(_ && _)), keys)
+    val clean = df.filter(dims.map(col(_).isNotNull).reduce(_ && _))
     val grouped = (1 to nd).foldLeft(
       clean.groupBy(keys.map(col): _*)
         .agg(array_sort(collect_list(packed)).as("_arr"))) { (g, i) =>

@@ -680,12 +680,6 @@ object TextOps {
       s"shrinkKeep must be in (0,1), got $shrinkKeep")
     require(finalRounds >= 1, s"finalRounds must be >= 1, got $finalRounds")
     graft.functions.Functions.install(df.sparkSession)
-    val dbg0 = sys.env.contains("SPARK_GRAFT_UNIGRAM_DEBUG")
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (dbg0) {
-      System.err.println(f"[unigram] $name: ${(System.nanoTime() - tPhase) / 1e9}%.2f s")
-      tPhase = System.nanoTime()
-    }
     val hist = df
       .select(explode(filter(split(col(textCol), "\\s+"),
         w => length(w) > 0)).as("word"))
@@ -700,7 +694,6 @@ object TextOps {
         col("word").rlike("[\\x{10000}-\\x{10FFFF}]")).count()
       require(bad == 0, s"$bad word type(s) contain the reserved " +
         "separator U+001F or non-BMP characters (surrogate pairs)")
-      phase("hist+badcheck")
       // distributed seed: one partial-aggregated substring histogram
       val subs = hist.select(col("cnt"), explode(expr(
           s"flatten(transform(sequence(1, length(word)), i -> " +
@@ -717,14 +710,12 @@ object TextOps {
             .collect().map(r => (r.getString(0), r.getLong(1)))
           (cs, sm)
         } finally { subs.unpersist(false); () }
-      phase("seed-substrings")
       require(chars.nonEmpty, "unigram fit needs a non-empty corpus")
       require(seedMulti.length >= targetMulti,
         s"corpus yields only ${seedMulti.length} multi-char seed " +
         s"candidates — targetMulti=$targetMulti unreachable; lower the " +
         "target or raise maxLen")
       val totalWords = BigInt(hist.agg(sum(col("cnt"))).collect()(0).getLong(0))
-      phase("totalWords")
       // EM-input partitioning: measured (optimization round 22), the
       // session's 32-way split of the cached histogram is NOT
       // scheduling waste — coalescing the EM input to one
@@ -735,7 +726,6 @@ object TextOps {
       // partitioning; the treeReduce gate below handles the
       // many-partition scale end.
       val emHist = hist
-      phase("em-sizing")
       val charNames = chars.map(_._1)
       val totSeed = (chars.iterator ++ seedMulti.iterator).map(_._2.toDouble).sum
       var vocab: Array[String] = (charNames ++ seedMulti.map(_._1))
@@ -750,10 +740,8 @@ object TextOps {
       var remainingFinal = finalRounds
       var round = 0
       var done = false
-      val dbg = sys.env.contains("SPARK_GRAFT_UNIGRAM_DEBUG")
       while (!done) {
         round += 1
-        val tRound = System.nanoTime()
         require(round <= 1000, "unigram prune loop failed to converge")
         // E-step: map-side soft lattice over word types with the
         // WHOLE partial aggregation inside the task (optimization
@@ -822,9 +810,6 @@ object TextOps {
             }
         }
         bcVocab.destroy()
-        if (dbg) System.err.println(
-          s"[unigram] round $round driver received 1 merged partial of " +
-          s"${merged.length} lanes (vocab ${vocab.length})")
         var ll: BigInt = BigInt(0)
         val counts = scala.collection.mutable.HashMap.empty[String, BigInt]
         merged.foreach { case (p, bytes) =>
@@ -868,8 +853,6 @@ object TextOps {
           Unigram.q(counts.getOrElse(p, BigInt(0)).toDouble + Unigram.EQuant,
             tot + Unigram.EQuant * vocab.length)).toMap
         stats += Unigram.RoundStat(round, nMulti, ll, gain, vocabChanged)
-        if (dbg) System.err.println(
-          f"[unigram] round $round: ${(System.nanoTime() - tRound) / 1e9}%.2f s, nMulti=$nMulti")
         if (nMulti <= targetMulti) {
           // a round that BEGAN at the target vocabulary is a final round
           if (curMulti <= targetMulti) remainingFinal -= 1

@@ -564,8 +564,9 @@ object Pipeline {
     * exact brute-force graph (oracle-replayed verbatim), cross-joined
     * with a measured gate: the ANN-backed graph must recover ≥40% of
     * the exact graph's edges (measured 0.84 at sf0.01, 0.59 at sf0.1
-    * with the sized quantizer — RecallProbe r13; mutual edges square
-    * the per-direction miss rate, so the floor
+    * with the sized quantizer — RecallProbe r13, tools/RecallProbe at
+    * commit e9cc669; mutual edges square the per-direction miss
+    * rate, so the floor
     * sits well under both while still killing any broken swap, which
     * measures ≤0.21 without the rerank tail). This converts the
     * "topkIvfPq is contract-identical" scale claim from prose to a
@@ -690,7 +691,8 @@ object Pipeline {
     * the decile), so this query probes deeper than the mutual-graph
     * one: k′=96, nProbe=24 → 4-NN recall 1.00/0.97 and flag recall
     * 1.00/0.85 at sf0.01/sf0.1 with the √n-sized quantizer
-    * (RecallProbe r13; the shallow np=8/k′=32 config measured
+    * (RecallProbe r13, tools/RecallProbe at commit e9cc669; the
+    * shallow np=8/k′=32 config measured
     * 0.80/0.35 — straddling the floor, hence rejected).
     * emb_outliers stays as the oracle anchor; this key is the path a
     * 100 TB corpus runs: probes scan nProbe/nCells of the corpus as
@@ -788,7 +790,8 @@ object Pipeline {
     *     end-to-end check that centrality SURVIVES the edge swap, not
     *     just the edges — measured 1.00/0.70 at sf0.01/sf0.1; the
     *     shallow np=8/k′=32 config measured 0.60/0.20, under the
-    *     floor, hence this query probes deeper — see RecallProbe r13).
+    *     floor, hence this query probes deeper — see RecallProbe r13,
+    *     tools/RecallProbe at commit e9cc669).
     * The brute variant (graph_pagerank) stays as the oracle anchor;
     * this key is what a 100 TB corpus runs — the ×100 probe measured
     * the ANN edge stage at 94 s vs 677 s brute with a corpus-growing
@@ -1081,7 +1084,8 @@ object Pipeline {
     *
     * `neighbor_is_new` marks delta vectors surfacing in the top-k —
     * the observable proof the batch is searchable without a refit
-    * (5 of 30 rows at sf0.01, 2 of 30 at sf0.1 — StaleProbe).
+    * (5 of 30 rows at sf0.01, 2 of 30 at sf0.1 — StaleProbe,
+    * tools/StaleProbe at commit e9cc669).
     * `stale_recall_ok` is the STALENESS gate: the frozen-model ANN
     * result must recover ≥40% of the fresh exact top-3 over the
     * post-ingest corpus (measured 0.90 at sf0.01, 0.97 at sf0.1 —
@@ -5391,7 +5395,8 @@ object Pipeline {
     * rows are the replayable BMP dHashes (the mm_phash formula replay)
     * cross-joined with two measured gates:
     *   - jpeg_close_ok: ≥90% of docs keep hamming(dHash_bmp,
-    *     dHash_jpeg) ≤ 8 (JpegProbe measured 0.995/0.991 at
+    *     dHash_jpeg) ≤ 8 (JpegProbe, tools/JpegProbe at commit
+    *     e9cc669, measured 0.995/0.991 at
     *     sf0.01/sf0.1; q=90 measures ~0.80 and q=75 ~0.12, so the gate
     *     genuinely tracks codec severity — and these text-noise
     *     rasters are the ADVERSARIAL case for a gradient hash; photos

@@ -146,7 +146,8 @@ object Stream {
     * on this Hadoop-native-lib-free local deployment the DEFAULT
     * checkpoint path made state commits ~50× slower than the state
     * machinery itself, from two sources the StreamProbe thread-dumps
-    * pinned:
+    * pinned (tools/StreamProbe, recoverable from commit e9cc669; its
+    * per-micro-batch lines are now BenchOne's `[batch]` lines):
     *
     *  1. Spark 4.1's checkpoint file checksums (new, default on):
     *     every offsets/commits/state-delta write spawns a side thread

@@ -1970,14 +1970,6 @@ object ManifestTable {
     readFiles(spark, table, s, hit).filter(predicate)
   }
 
-  /** Copy-on-write upsert: delta rows replace same-key rows, new keys
-    * append. Only files whose key range contains at least one delta
-    * key are rewritten; every other file carries forward BY REFERENCE
-    * into the new manifest (zero IO — the property that makes a daily
-    * delta affordable on a 100 TB table). Touched-file detection is a
-    * broadcast join of the (small) file-range list against the delta
-    * keys, collecting only distinct FILE NAMES (control plane).
-    */
   /** Files whose key range may contain one of the frame's keys — the
     * touched tier of upsert/MERGE/delete, decided from manifest
     * metadata alone (broadcast range join, control-plane collect of
@@ -2017,10 +2009,59 @@ object ManifestTable {
     }
   }
 
+  /** Control-plane pool for [[touchedCheckingKeys]]: bounded, daemon
+    * threads; each task runs under the submitting thread's Spark local
+    * properties (see `ThreadInternals.submitCaptured`).
+    */
+  private lazy val keyCheckPool = java.util.concurrent.Executors.newFixedThreadPool(4,
+    r => { val t = new Thread(r, "graft-key-check"); t.setDaemon(true); t })
+
+  /** [[touchedByKeys]] plus the key-hygiene check upsert and MERGE
+    * share: duplicate keys fail loudly like Delta's MERGE does on
+    * multiple matches (ADVICE r14), and NULL keys are counted
+    * separately (ADVICE r15: count_distinct ignores NULLs, so a
+    * null-key frame used to be misreported as "duplicate keys"). All
+    * three counts come from one pass over the (small, delta-sized)
+    * frame, submitted CONCURRENTLY with the touched-file probe
+    * (optimization round 22, guide §2.6 "overlap independent jobs"):
+    * the two control-plane jobs read the same frame and neither
+    * depends on the other, so a streaming sink no longer pays their
+    * walls in sequence every micro-batch. The check runs on
+    * [[keyCheckPool]] under the caller's job group and description,
+    * so cancelling the caller's group reaches it too.
+    */
+  private def touchedCheckingKeys(spark: SparkSession, cur: Snapshot, keys: DataFrame,
+                                  keyCol: String, what: String): Set[String] = {
+    val hygiene = org.apache.spark.sql.graftshim.ThreadInternals
+      .submitCaptured(spark, keyCheckPool) {
+        keys.agg(count(lit(1)).as("n"), count_distinct(col(keyCol)).as("k"),
+          count(when(col(keyCol).isNull, lit(1))).as("nulls")).collect()(0)
+      }
+    val touched = touchedByKeys(spark, cur, keys, keyCol)
+    val counts =
+      try hygiene.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    require(counts.getLong(2) == 0L,
+      s"$what has ${counts.getLong(2)} NULL $keyCol keys — " +
+      "the manifest key column must be non-null")
+    require(counts.getLong(0) == counts.getLong(1),
+      s"$what has duplicate keys: ${counts.getLong(0)} rows but " +
+      s"${counts.getLong(1)} distinct $keyCol")
+    touched
+  }
+
   // delta is NOT persisted despite feeding five plans (optimization
   // round 22 — measured, then reverted): caching the delta left
   // src_/stream_manifest_cdc flat while adding the materialization
   // barrier; the delta lineages here are cheap scans (guide §5).
+  /** Copy-on-write upsert: delta rows replace same-key rows, new keys
+    * append. Only files whose key range contains at least one delta
+    * key are rewritten; every other file carries forward BY REFERENCE
+    * into the new manifest (zero IO — the property that makes a daily
+    * delta affordable on a 100 TB table). Touched-file detection is a
+    * broadcast join of the (small) file-range list against the delta
+    * keys, collecting only distinct FILE NAMES (control plane).
+    */
   def upsert(spark: SparkSession, table: String, delta: DataFrame,
              buckets: Int): Snapshot = commitWithRetry(table) { v =>
     require(v >= 0, s"no manifest in $table/_log")
@@ -2029,28 +2070,8 @@ object ManifestTable {
     enforceConstraints(delta, cur.constraints, s"upsert delta into $table")
     // Duplicate delta keys would survive BOTH the semi and anti joins
     // into `replaced`/`inserts`, silently violating the unique-key
-    // invariant the range stats and pruning rely on. Fail loudly like
-    // Delta's MERGE does on multiple matches (ADVICE r14). NULL keys
-    // are checked separately (ADVICE r15: count_distinct ignores
-    // NULLs, so a null-key delta used to be misreported as
-    // "duplicate keys"). All three counts come from one pass over the
-    // (small, daily-delta-sized) frame.
-    // concurrent with the touched-file probe (round 22, guide §2.6 —
-    // see mergeCoreImpl): independent control-plane jobs over the
-    // same delta, no longer sequential per streaming micro-batch
-    val dupF = scala.concurrent.Future(delta
-      .agg(count(lit(1)).as("n"), count_distinct(col(keyCol)).as("k"),
-        count(when(col(keyCol).isNull, lit(1))).as("nulls")).collect()(0))(
-      scala.concurrent.ExecutionContext.global)
-    val touchedNames = touchedByKeys(spark, cur, delta, keyCol)
-    val dupCheck = scala.concurrent.Await.result(dupF,
-      scala.concurrent.duration.Duration.Inf)
-    require(dupCheck.getLong(2) == 0L,
-      s"upsert delta has ${dupCheck.getLong(2)} NULL $keyCol keys — " +
-      "the manifest key column must be non-null")
-    require(dupCheck.getLong(0) == dupCheck.getLong(1),
-      s"upsert delta has duplicate keys: ${dupCheck.getLong(0)} rows but " +
-      s"${dupCheck.getLong(1)} distinct $keyCol")
+    // invariant the range stats and pruning rely on.
+    val touchedNames = touchedCheckingKeys(spark, cur, delta, keyCol, "upsert delta")
     val (touched, untouched) = cur.files.partition(f => touchedNames(f.name))
 
     // Keys in untouched files cannot collide with delta keys (no range
@@ -2179,26 +2200,14 @@ object ManifestTable {
       notMatchedInsert, notMatchedBySourceDelete, Some(appId -> batchId),
       autoMerge)._2
 
-  private def mergeCore(spark: SparkSession, table: String, source0: DataFrame,
-            buckets: Int,
-            matchedDelete: Option[org.apache.spark.sql.Column],
-            matchedUpdate: Option[org.apache.spark.sql.Column],
-            notMatchedInsert: Option[org.apache.spark.sql.Column],
-            notMatchedBySourceDelete: Option[org.apache.spark.sql.Column],
-            txn: Option[(String, Long)],
-            autoMerge: Boolean = false): (Snapshot, Boolean) = {
-    // NOT persisted (optimization round 22 — measured, then reverted):
-    // the source feeds three consumers (key hygiene, touched-range
-    // join, the merge join), but caching it made
-    // stream_manifest_merge_sink SLOWER (7.4 → 8.6 s min-of-3): the
-    // materialization barrier plus 3 × 32 cached-partition reads cost
-    // more than recomputing the cheap delta-sized lineage — exactly
-    // guide §5's "only cache when recompute beats the pressure".
-    mergeCoreImpl(spark, table, source0, buckets, matchedDelete,
-      matchedUpdate, notMatchedInsert, notMatchedBySourceDelete, txn, autoMerge)
-  }
-
-  private def mergeCoreImpl(spark: SparkSession, table: String, source: DataFrame,
+  // source is NOT persisted (optimization round 22 — measured, then
+  // reverted): it feeds three consumers (key hygiene, touched-range
+  // join, the merge join), but caching it made
+  // stream_manifest_merge_sink SLOWER (7.4 → 8.6 s min-of-3): the
+  // materialization barrier plus 3 × 32 cached-partition reads cost
+  // more than recomputing the cheap delta-sized lineage — exactly
+  // guide §5's "only cache when recompute beats the pressure".
+  private def mergeCore(spark: SparkSession, table: String, source: DataFrame,
             buckets: Int,
             matchedDelete: Option[org.apache.spark.sql.Column],
             matchedUpdate: Option[org.apache.spark.sql.Column],
@@ -2266,30 +2275,12 @@ object ManifestTable {
       // Key hygiene, the upsert discipline: duplicate source keys would
       // fan a matched target row out into several joined rows (Delta's
       // "multiple source rows matched" error); NULL keys break the
-      // matched/not-matched trichotomy. One pass over the (small,
-      // delta-sized) source — submitted CONCURRENTLY with the
-      // touched-file probe below (optimization round 22, guide §2.6
-      // "overlap independent jobs"): the two control-plane jobs read
-      // the same delta-sized source and neither depends on the other,
-      // so a streaming MERGE sink no longer pays their walls in
-      // sequence every micro-batch.
-      val dupF = scala.concurrent.Future(source
-        .agg(count(lit(1)).as("n"), count_distinct(col(keyCol)).as("k"),
-          count(when(col(keyCol).isNull, lit(1))).as("nulls")).collect()(0))(
-        scala.concurrent.ExecutionContext.global)
+      // matched/not-matched trichotomy.
       // Touched tiers: key-range overlap with a source key (broadcast
       // range join, control-plane collect of file NAMES), plus — only
       // when the by-source clause exists — files whose stats admit its
       // predicate (rows it might delete live nowhere else).
-      val matchTouched = touchedByKeys(spark, cur, source, keyCol)
-      val dupCheck = scala.concurrent.Await.result(dupF,
-        scala.concurrent.duration.Duration.Inf)
-      require(dupCheck.getLong(2) == 0L,
-        s"merge source has ${dupCheck.getLong(2)} NULL $keyCol keys — " +
-        "the manifest key column must be non-null")
-      require(dupCheck.getLong(0) == dupCheck.getLong(1),
-        s"merge source has duplicate keys: ${dupCheck.getLong(0)} rows but " +
-        s"${dupCheck.getLong(1)} distinct $keyCol")
+      val matchTouched = touchedCheckingKeys(spark, cur, source, keyCol, "merge source")
       val bySrcTouched: Set[String] = bySrcPe match {
         case Some(pe) =>
           cur.files.filter(f => canMatch(f, st0, pe, physName(cur))).map(_.name).toSet

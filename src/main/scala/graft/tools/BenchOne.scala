@@ -1,10 +1,14 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Time one SparkEntry query N times in a single warmed JVM:
-  * `tools/run.sh graft.tools.BenchOne <query> [sfDir] [runs]` — the
-  * per-run breakdown Bench prints for everything, on demand for one
-  * query (e.g. to confirm cache-reuse behavior across repeat runs).
+  * `tools/run.sh graft.tools.BenchOne <query>[,query...] [sfDir] [runs]`
+  * on [[graft.SparkEntry.localSession]]. Besides each run's wall it
+  * prints one `[stage]` line per stage of 100 ms or more (tasks, wall,
+  * executor run, GC and CPU ms) and, for a streaming query, one
+  * `[batch]` line per micro-batch (input rows, the durationMs split,
+  * state-store rows) — what the Spark UI would show, with the UI off.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -24,22 +28,30 @@ object BenchOne {
     }
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (sys.env.contains("STREAM_PROBE_JOBS"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val s = e.stageInfo
-          val m = s.taskMetrics
-          val wall = s.completionTime.getOrElse(0L) - s.submissionTime.getOrElse(0L)
-          if (wall >= 100) println(f"[stage] ${s.stageId} '${s.name.take(50)}' " +
-            f"tasks=${s.numTasks} wall=$wall ms exec=${m.executorRunTime} " +
-            f"gc=${m.jvmGCTime} cpu=${m.executorCpuTime / 1000000}")
-        }
-      })
+    val spark = graft.SparkEntry.localSession()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val s = e.stageInfo
+        val m = s.taskMetrics
+        val wall = s.completionTime.getOrElse(0L) - s.submissionTime.getOrElse(0L)
+        if (wall >= 100) println(f"[stage] ${s.stageId} '${s.name.take(50)}' " +
+          f"tasks=${s.numTasks} wall=$wall ms exec=${m.executorRunTime} " +
+          f"gc=${m.jvmGCTime} cpu=${m.executorCpuTime / 1000000}")
+      }
+    })
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val d = new java.util.TreeMap[String, java.lang.Long](p.durationMs)
+        val ss = p.stateOperators.map(o =>
+          s"rows=${o.numRowsTotal} commitMs=${o.commitTimeMs} memUsed=${o.memoryUsedBytes}")
+        val q = Option(p.name).getOrElse(p.id)
+        println(s"[batch] $q ${p.batchId} rows=${p.numInputRows} dur=$d " +
+          s"state{${ss.mkString(" | ")}}")
+      }
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
     spark.range(1000).selectExpr("sum(id)").collect()
     graft.Bench.calibrate() // JIT warm-up
     println(f"cal: ${graft.Bench.calibrate()}%.3f s (single-thread ALU anchor)")

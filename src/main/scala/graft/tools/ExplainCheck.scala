@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspector: `tools/run.sh graft.tools.ExplainCheck [query ...]` —
   * prints the formatted physical plan for named SparkEntry queries (all
@@ -8,11 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession()
     graft.functions.Functions.install(spark)
     val names =
       if (args.nonEmpty) args.toSeq

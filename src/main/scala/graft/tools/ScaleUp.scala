@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build a scaled-up copy of the test tables for scale-evidence runs
@@ -24,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    order⋈lineitem join stays consistent across replicas; dim FKs
   *    (custkey/partkey/suppkey) stay in the base dim range.
   *
-  *   tools/run.sh graft.tools.ScaleUp 10
+  *   SPARK_GRAFT_CPUS=$(nproc) tools/run.sh graft.tools.ScaleUp 10
   *   python3 tools/check.py --sf /tmp/graft_scale/x10
   *   SPARK_GRAFT_SF_DIR=/tmp/graft_scale/x10 tools/run.sh graft.Bench
   *
@@ -39,11 +38,7 @@ object ScaleUp {
     val out = new java.io.File(s"/tmp/graft_scale/x$factor")
     graft.Tables.materializeOnce(out, "_READY") { scratch =>
       scratch.mkdirs()
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = graft.SparkEntry.localSession()
       try {
         val replicated = Set("documents", "embeddings", "events",
           "orders", "lineitem")

@@ -60,3 +60,17 @@ object NodeInternals {
     case _ => PredNode.Opaque
   }
 }
+
+object ThreadInternals {
+
+  /** Run `body` on `pool` under a copy of the calling thread's Spark
+    * local properties (job group, description, job tags, scheduler
+    * pool) and active session — Spark's own capture for the async
+    * work a query launches (broadcast builds), so the pooled jobs
+    * answer to the caller's `cancelJobGroup` and carry its labels.
+    */
+  def submitCaptured[T](spark: SparkSession, pool: java.util.concurrent.ExecutorService)
+                       (body: => T): java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(body)
+}

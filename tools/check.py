@@ -23,8 +23,12 @@ def main():
     args = ap.parse_args()
 
     if not args.skip_verify:
+        # named queries become Verify's filter, so one query is gated
+        # end to end without the full dump
         subprocess.run([os.path.join(REPO, "tools/run.sh"), "graft.Verify",
-                        args.sf, args.out], check=True)
+                        args.sf, args.out] +
+                       ([",".join(args.queries)] if args.queries else []),
+                       check=True)
 
     with open(os.path.join(args.out, "oracle_sql.json")) as f:
         oracles = json.load(f)
