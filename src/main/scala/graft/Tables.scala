@@ -83,7 +83,7 @@ object Tables {
     * regenerated source dataset is not served a stale materialization.
     * Fails fast on a missing path instead of fingerprinting nothing.
     */
-  def pathFingerprint(path: String): String = {
+  private def pathFingerprint(path: String): String = {
     val root = new java.io.File(path)
     require(root.exists, s"pathFingerprint: $path does not exist")
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -102,7 +102,7 @@ object Tables {
     * /tmp bounded to one copy per source instead of one per
     * regeneration.
     */
-  def pruneStaleSiblings(current: java.io.File, tag: String): Unit = {
+  private def pruneStaleSiblings(current: java.io.File, tag: String): Unit = {
     Option(current.getParentFile).flatMap(p => Option(p.listFiles)).foreach {
       siblings =>
         siblings.filter(f => f.isDirectory && f.getName.startsWith(s"$tag-") &&
@@ -114,6 +114,22 @@ object Tables {
             f.lastModified < System.currentTimeMillis - 6 * 3600 * 1000L)
           .foreach(rmTree)
     }
+  }
+
+  /** The /tmp cache dir of a fixture derived from `$dir/<table>.parquet`:
+    * `/tmp/<root>/<tag>-<fingerprint><suffix>`, where the tag is the sf
+    * dir with every char outside [A-Za-z0-9.] mapped to `_` and the
+    * suffix versions a fixture format change. Stale siblings are pruned
+    * first; the caller builds into the dir (or a child) with
+    * [[materializeOnce]].
+    */
+  def fixtureDir(root: String, dir: String, table: String,
+                 suffix: String = ""): java.io.File = {
+    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = new java.io.File(
+      s"/tmp/$root/$tag-${pathFingerprint(s"$dir/$table.parquet")}$suffix")
+    pruneStaleSiblings(base, tag)
+    base
   }
 
   private def rmTree(f: java.io.File): Unit = {

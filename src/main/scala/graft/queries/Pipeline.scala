@@ -3362,12 +3362,9 @@ object Pipeline {
     * the original table, so DuckDB replays each snapshot exactly.
     */
   private def materializeManifestTable(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
     // -v3: manifests now log the table schema (round 15); rebuild so
     // snapshotDiff and the evolved read run against schema-carrying logs
-    val base = new java.io.File(s"/tmp/graft_manifest/$tag-$fpTag-v3")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest", dir, "documents", "-v3")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val mx = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
@@ -3507,10 +3504,7 @@ object Pipeline {
     * forcing the latest read to union-schema/NULL-backfill them.
     */
   private def materializeManifestEvolved(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_evo/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_evo", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val mx = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
@@ -3579,10 +3573,7 @@ object Pipeline {
     * manifest from the commit's one stats job.
     */
   private def materializeManifestClustered(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_clu/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_clu", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val table = new java.io.File(scratch, "table").getAbsolutePath
@@ -3633,10 +3624,7 @@ object Pipeline {
     * files) while the create files carry by reference.
     */
   private def materializeManifestOptimize(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_opt/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_opt", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val n = d.count()
@@ -3718,12 +3706,9 @@ object Pipeline {
     * back: v3 re-lists v1's files verbatim.
     */
   private def materializeManifestRestore(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
     // -v2: manifests now stamp in-commit timestamps (round 17);
     // rebuild so the timestamp-travel query resolves real stamps
-    val base = new java.io.File(s"/tmp/graft_manifest_res/$tag-$fpTag-v2")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_res", dir, "documents", "-v2")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val mx = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
@@ -3809,10 +3794,7 @@ object Pipeline {
     * to the table for the query's gates.
     */
   private def materializeManifestDeleteWhere(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_dw/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_dw", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val table = new java.io.File(scratch, "table").getAbsolutePath
@@ -3872,10 +3854,7 @@ object Pipeline {
     * the GDPR shape.
     */
   private def materializeManifestDeleteKeys(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_dk/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_dk", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val table = new java.io.File(scratch, "table").getAbsolutePath
@@ -3929,13 +3908,10 @@ object Pipeline {
     * rewritten; victims land in per-file key-set sidecars.
     */
   private def materializeManifestDv(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
     // -v2: the r19 sidecar format stores the target file name INSIDE
     // the sidecar (`f` column) — a cached r18 fixture would silently
     // read its deletes as no-ops under the single-scan reader
-    val base = new java.io.File(s"/tmp/graft_manifest_dv/$tag-$fpTag-v2")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_dv", dir, "documents", "-v2")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val table = new java.io.File(scratch, "table").getAbsolutePath
@@ -4008,10 +3984,7 @@ object Pipeline {
     * the NEW logical names, whose files store PHYSICAL names.
     */
   private def materializeManifestRename(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_rename/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_rename", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       import graft.sources.ManifestTable
       val d = s.read.parquet(s"$dir/documents.parquet")
@@ -4116,15 +4089,12 @@ object Pipeline {
     */
   private def materializeManifestClone(s: SparkSession, dir: String): String = {
     import graft.sources.ManifestTable
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
     // The SOURCE materializes first at its FINAL path (a clone holds
     // absolute references — cloning inside a build-then-rename scratch
     // would dangle). The divergence upsert lands here too; the clone
     // below pins VERSION AS OF 0, so it is deterministic regardless of
     // how far the source has moved by clone time.
-    val srcBase = new java.io.File(s"/tmp/graft_manifest_clone_src/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(srcBase, tag)
+    val srcBase = graft.Tables.fixtureDir("graft_manifest_clone_src", dir, "documents")
     graft.Tables.materializeOnce(srcBase, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       ManifestTable.create(s,
@@ -4136,8 +4106,7 @@ object Pipeline {
           .withColumn("text", concat(lit("X:"), col("text"))), buckets = 2)
     }
     val src = new java.io.File(srcBase, "table").getAbsolutePath
-    val base = new java.io.File(s"/tmp/graft_manifest_clone/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_clone", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val mx = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
@@ -4176,10 +4145,9 @@ object Pipeline {
     */
   def srcManifestClone(s: SparkSession, dir: String): DataFrame = {
     val base = materializeManifestClone(s, dir)
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
     val src = new java.io.File(
-      s"/tmp/graft_manifest_clone_src/$tag-$fpTag/table").getAbsolutePath
+      graft.Tables.fixtureDir("graft_manifest_clone_src", dir, "documents"),
+      "table").getAbsolutePath
     val dst = new java.io.File(base, "clone").getAbsolutePath
     import graft.sources.ManifestTable._
     val c0 = readSnapshot(dst, 0)
@@ -4234,10 +4202,7 @@ object Pipeline {
     * carry by reference (the pruning the query gates).
     */
   private def materializeManifestMerge(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_merge/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_merge", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       import graft.sources.ManifestTable
       val d = s.read.parquet(s"$dir/documents.parquet")
@@ -4357,10 +4322,7 @@ object Pipeline {
     * full-row update over a narrow band + 50 inserts past the key max.
     */
   private def materializeManifestMergeStr(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_mergestr/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_mergestr", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       import graft.sources.ManifestTable
       val d = s.read.parquet(s"$dir/documents.parquet")
@@ -4468,10 +4430,7 @@ object Pipeline {
     * target value on update and reads NULL on insert.
     */
   private def materializeManifestMergeEvolve(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_mev/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_mev", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       import graft.sources.ManifestTable
       val d = s.read.parquet(s"$dir/documents.parquet")
@@ -4575,12 +4534,9 @@ object Pipeline {
     * be a literal VALUES table.
     */
   private def materializeManifestHistory(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
     // -v2: round 20 added logged byte sizes — a pre-sz cached fixture
     // would read bytesAdded=-1 and fail the sign gate for a non-bug
-    val base = new java.io.File(s"/tmp/graft_manifest_hist/$tag-$fpTag-v2")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_hist", dir, "documents", "-v2")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       import graft.sources.ManifestTable
       val d = s.read.parquet(s"$dir/documents.parquet")
@@ -4648,10 +4604,7 @@ object Pipeline {
     * metadata commit lands.
     */
   private def materializeManifestConstraint(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_ck/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_ck", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       val mx = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
@@ -4724,10 +4677,7 @@ object Pipeline {
     * false-positive rate stays low at any SF.
     */
   private def materializeManifestBloom(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_bloom/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_bloom", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("digest", md5(encode(col("text"), "UTF-8")))
@@ -4788,10 +4738,7 @@ object Pipeline {
     * clusterBy column cannot serve.
     */
   private def materializeManifestZorder(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/orders.parquet")
-    val base = new java.io.File(s"/tmp/graft_manifest_zo/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_manifest_zo", dir, "orders")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val o = s.read.parquet(s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),

@@ -111,10 +111,7 @@ object Sig {
     * identical to sig_rfft.
     */
   def sigRfftPregrouped(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/events.parquet")
-    val base = new java.io.File(s"/tmp/graft_grouped/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_grouped", dir, "events")
     val path = s"$base/events_series"
     // atomic scratch-dir build: concurrent bench/verify JVMs can race
     // here, and Spark's own _SUCCESS can't be trusted across a

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.Tables
 import graft.Tables.{fp2, fp6, fpSql}
@@ -20,25 +22,37 @@ object Stream {
 
   /** events.parquet as a bounded file-source stream of [[Streaming.Event]].
     * ts arrives as a nanos long ([[Tables.tsToNanos]] normalizes either
-    * testdata generation); `timestamp_micros(ts div 1000)` reproduces
-    * the µs truncation every batch oracle uses, so stream and oracle
-    * see identical coordinates.
+    * testdata generation) and leaves at µs through [[asEvents]].
     */
   private def eventStream(s: SparkSession, dir: String) = {
-    import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
     val schema = s.read.parquet(path).schema
     // the file source wants a directory: stream the sf dir with a
     // glob filter selecting just the events table file(s)
-    Tables.tsToNanos(
+    asEvents(Tables.tsToNanos(
       s.readStream.schema(schema).option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-      .select(col("user_id"),
-        timestamp_micros(expr("ts div 1000")).as("ts"),
-        col("event_type"), col("value"))
-      .as[Streaming.Event]
+        .parquet(dir)))
   }
+
+  /** Events with a nanos-long `tsNanos` column as [[Streaming.Event]]s:
+    * `timestamp_micros(ts div 1000)` reproduces the µs truncation every
+    * batch oracle uses, so stream and oracle see identical coordinates.
+    */
+  private def asEvents(df: DataFrame, tsNanos: String = "ts") = {
+    import df.sparkSession.implicits._
+    df.select(col("user_id"), timestamp_micros(expr(s"$tsNanos div 1000")).as("ts"),
+      col("event_type"), col("value")).as[Streaming.Event]
+  }
+
+  /** `sorted` plus its global row index `_rn`, from the distributed
+    * sort + zipWithIndex — no single-partition window (VERDICT r10 #6):
+    * keeping the fixtures warning-free means a real single-partition
+    * WindowExec regression stays visible in logs.
+    */
+  private def withRowIndex(s: SparkSession, sorted: DataFrame): DataFrame =
+    s.createDataFrame(sorted.rdd.zipWithIndex().map { case (r, i) =>
+      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, sorted.schema.add("_rn", LongType))
 
   /** events.parquet re-materialized as `nFiles` time-ordered slices
     * with strictly increasing mtimes (one file per future micro-batch)
@@ -53,13 +67,9 @@ object Stream {
     */
   private def slicedEventStream(s: SparkSession, dir: String, nFiles: Int,
                                 glob: String = "ev_*.parquet") = {
-    import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = Tables.pathFingerprint(s"$dir/events.parquet")
-    val base = new java.io.File(s"/tmp/graft_stream/$tag-$fpTag")
-    Tables.pruneStaleSiblings(base, tag)
-    val root = new java.io.File(base, nFiles.toString)
+    val root = new java.io.File(
+      Tables.fixtureDir("graft_stream", dir, "events"), nFiles.toString)
     // atomic scratch-dir build (ADVICE r8): the _READY marker becomes
     // visible only via the rename of a fully-sliced dir, so concurrent
     // bench/verify JVMs can never stream a half-written slice set
@@ -74,16 +84,8 @@ object Stream {
       // µs-tied rows differently than the oracle's replayed boundary),
       // with the value tie-break making any residual ambiguity
       // observationally equivalent
-      // global slice index WITHOUT a single-partition window (VERDICT
-      // r10 #6): sort (range-partitioned, distributed) + zipWithIndex.
-      // Keeping the harness warning-free means a real single-partition
-      // WindowExec regression stays visible in logs.
-      val sorted = ev.sort(expr("ts div 1000"), col("user_id"), col("value"))
-      val idxSchema = sorted.schema
-        .add("_rn", org.apache.spark.sql.types.LongType)
-      val idx = s.createDataFrame(
-          sorted.rdd.zipWithIndex.map { case (r, i) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, idxSchema)
+      val idx = withRowIndex(s,
+          ev.sort(expr("ts div 1000"), col("user_id"), col("value")))
         .withColumn("_c", expr(s"_rn div $chunk"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       scratch.mkdirs()
@@ -105,25 +107,12 @@ object Stream {
     // not the source file (whose ts may be TimestampType)
     val schema = s.read.option("pathGlobFilter", "ev_*.parquet")
       .parquet(root.getAbsolutePath).schema
-    s.readStream.schema(schema)
+    asEvents(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", glob)
-      .parquet(root.getAbsolutePath)
-      .select(col("user_id"),
-        timestamp_micros(expr("ts div 1000")).as("ts"),
-        col("event_type"), col("value"))
-      .as[Streaming.Event]
+      .parquet(root.getAbsolutePath))
   }
 
-  /** Run a streaming Dataset to completion into a temp PARQUET sink
-    * and read the files back — the same executor-side file sink a
-    * production deployment writes, so nothing in the verification
-    * path collects rows to the driver. Append-mode queries use the
-    * parquet file sink directly; `complete` mode (which the file sink
-    * cannot express) goes through foreachBatch overwriting the same
-    * path, the standard micro-batch-sink pattern for full-result
-    * refresh.
-    */
   /** Temp sink/checkpoint trees awaiting recursive cleanup at JVM exit
     * (deferred that long because the returned DataFrame lazily reads
     * the sink files; deleteOnExit only removes empty dirs). ONE shared
@@ -185,7 +174,7 @@ object Stream {
     * FileContext manager's atomic-rename contract + end-to-end
     * checksums) stay in force, and any earlier local-path override is
     * explicitly reverted so a mixed-volume session can't leak the
-    * weaker config across queries. Env vars still force either way.
+    * weaker config across queries. The two env vars still force either way.
     */
   private[queries] def tuneCheckpointIo(spark: SparkSession,
                                         chkPath: String): Unit = {
@@ -207,46 +196,95 @@ object Stream {
     }
   }
 
-  private def runToSink(ds: org.apache.spark.sql.Dataset[_], name: String,
-                        mode: String = "append"): DataFrame = {
-    val spark = ds.sparkSession
-    tuneCheckpointIo(spark)
-    // state-store provider is env-selectable so the SAME oracle gate
-    // runs under the production RocksDB store (VERDICT r8 #7):
-    // SPARK_GRAFT_STATE_STORE=rocksdb — at 100 TB the default
-    // HDFS-backed in-memory store is the streaming bottleneck; RocksDB
-    // keeps state off-heap and incremental-checkpointed.
-    sys.env.get("SPARK_GRAFT_STATE_STORE").foreach { p =>
-      val cls = p.toLowerCase match {
-        case "rocksdb" => "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider"
-        case "hdfs" | "memory" => "org.apache.spark.sql.execution.streaming." +
-          "state.HDFSBackedStateStoreProvider"
-        case other => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STATE_STORE: unknown provider '$other' (rocksdb|hdfs)")
-      }
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-    }
+  /** Scratch tree for one declared stream (sink, checkpoint and table
+    * dirs go under it): checkpoint I/O tuned for the JVM temp volume it
+    * lives on, then queued for the shared exit-time cleanup.
+    */
+  private def streamScratch(s: SparkSession, name: String): java.io.File = {
+    tuneCheckpointIo(s)
     val tmp = java.nio.file.Files.createTempDirectory(s"graft-$name-").toFile
     cleanupHookInstalled
     pendingTmp.add(tmp)
+    tmp
+  }
+
+  /** Shuffle partitions while a declared stream runs, sized by STATE
+    * VOLUME, not by the batch side's shuffle default: every stateful
+    * operator commits one store per partition per micro-batch (a
+    * symmetric join commits FOUR), so partitions × stores × batches
+    * delta-file fsyncs dominate wall time when per-partition state is
+    * small; the foreachBatch sinks likewise plan delta-sized frames
+    * (optimization round 22). The checkpoint pins the count for the
+    * query's lifetime — production picks it the same way, by state and
+    * batch volume.
+    */
+  private val StreamPartitions = 8
+
+  /** Run `body` — a stream's start → stop — with [[StreamPartitions]]
+    * shuffle partitions, restoring the session's count after, so fixture
+    * builds and the returned batch aggregate keep the session default.
+    */
+  private def withStreamPartitions[T](s: SparkSession)(body: => T): T = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions.toString)
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** The exactly-once harness's simulated crash: run phase 1 to
+    * completion, delete the newest `commits/<n>` marker from the
+    * checkpoint — exactly the state a JVM kill between sink write and
+    * checkpoint commit leaves behind — restart the SAME checkpoint as
+    * phase 2, and require that Spark replayed and re-committed batch n.
+    * `start(phase)` starts the query for phase 1 or 2; phase 1 must
+    * commit at least `minCommits` (>= 1) micro-batches.
+    */
+  private def crashReplay(chk: String, minCommits: Int = 1)
+                         (start: Int => StreamingQuery): Unit = {
+    def drain(phase: Int): Unit = {
+      val q = start(phase)
+      try q.processAllAvailable() finally q.stop()
+    }
+    drain(1)
+    val commitsDir = new java.io.File(chk, "commits")
+    val commits = Option(commitsDir.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.forall(_.isDigit))
+    val need = math.max(1, minCommits)
+    require(commits.length >= need, s"phase 1 committed ${commits.length} " +
+      s"micro-batches in $commitsDir, expected at least $need")
+    val crashedId = commits.maxBy(_.getName.toInt).getName
+    require(new java.io.File(commitsDir, crashedId).delete(),
+      s"could not delete commit marker $crashedId")
+    // the local ChecksumFs keeps a .<n>.crc sidecar; a leftover one
+    // makes the replayed commit's rename collide (reported as
+    // "multiple streaming queries using the checkpoint")
+    new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
+    drain(2)
+    require(new java.io.File(commitsDir, crashedId).exists(),
+      s"restart did not replay and re-commit crashed batch $crashedId")
+  }
+
+  /** Run a streaming Dataset to completion into a temp PARQUET sink
+    * and read the files back — the same executor-side file sink a
+    * production deployment writes, so nothing in the verification
+    * path collects rows to the driver. Append-mode queries use the
+    * parquet file sink directly; `complete` mode (which the file sink
+    * cannot express) goes through foreachBatch overwriting the same
+    * path, the standard micro-batch-sink pattern for full-result
+    * refresh. The state store is Spark's own
+    * `spark.sql.streaming.stateStore.providerClass`, so the SAME oracle
+    * gate runs under the production RocksDB store by setting that conf
+    * (VERDICT r8 #7) — at 100 TB the default HDFS-backed in-memory
+    * store is the streaming bottleneck; RocksDB keeps state off-heap
+    * and incremental-checkpointed.
+    */
+  private def runToSink(ds: org.apache.spark.sql.Dataset[_], name: String,
+                        mode: String = "append"): DataFrame = {
+    val spark = ds.sparkSession
+    val tmp = streamScratch(spark, name)
     val out = new java.io.File(tmp, "out").getAbsolutePath
-    val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    // State partitions are sized by STATE VOLUME, not by the batch
-    // side's shuffle default: every stateful operator commits one
-    // store per partition per micro-batch (a symmetric join commits
-    // FOUR), so partitions × stores × batches delta-file fsyncs
-    // dominate wall time when per-partition state is small. The
-    // checkpoint pins the count for the query's lifetime either way —
-    // production picks it the same way, by state-per-partition, and
-    // scales it with SPARK_GRAFT_STREAM_PARTITIONS. Batch queries keep
-    // the session default (restored below; the stateful partitioning
-    // is locked into checkpoint metadata at the first batch).
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    val writer = ds.toDF().writeStream.option("checkpointLocation", chk)
-    try {
+    val writer = ds.toDF().writeStream
+      .option("checkpointLocation", new java.io.File(tmp, "chk").getAbsolutePath)
+    withStreamPartitions(spark) {
       val q =
         if (mode == "append")
           writer.format("parquet").outputMode(mode).option("path", out).start()
@@ -256,7 +294,7 @@ object Stream {
               batch.write.mode("overwrite").parquet(out)
           }.start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     // explicit schema: a stream that emitted zero rows leaves no (or
     // schemaless) parquet behind, where the old memory sink still
     // returned an empty schema-bearing table
@@ -287,68 +325,34 @@ object Stream {
     * micro-batch lands in a BATCH-ID-KEYED directory with overwrite
     * mode, so a replayed batch overwrites its own previous (possibly
     * partial) output instead of appending duplicates. The harness
-    * exercises the real failure path: (1) stream the first six slices
-    * to completion; (2) crash simulation — delete the newest
-    * `commits/<n>` marker from the checkpoint, exactly the state a
-    * JVM kill between sink write and commit leaves behind; (3)
-    * restart the SAME checkpoint against all twelve slices. Spark
-    * replays batch n from its recorded offsets and the state-store
-    * version n−1 (flatMapGroupsWithState recovery), the overwrite
-    * makes the replay idempotent, and the six new slices stream on
-    * normally. The run asserts the replayed batch re-committed; the
-    * oracle (the batch sosfilt CTE, unchanged) then proves
-    * exactly-once delivery — a duplicated or dropped replay fails the
-    * row-count/hash gate. Green under RocksDB
-    * (SPARK_GRAFT_STATE_STORE=rocksdb).
+    * exercises the real failure path ([[crashReplay]]): stream the
+    * first six slices to completion, delete the newest commit marker,
+    * then restart the SAME checkpoint against all twelve slices.
+    * Spark replays batch n from its recorded offsets and the
+    * state-store version n−1 (flatMapGroupsWithState recovery), the
+    * overwrite makes the replay idempotent, and the six new slices
+    * stream on normally. The oracle (the batch sosfilt CTE,
+    * unchanged) then proves exactly-once delivery — a duplicated or
+    * dropped replay fails the row-count/hash gate. Green under
+    * RocksDB (`spark.sql.streaming.stateStore.providerClass` set to
+    * RocksDBStateStoreProvider).
     */
   def streamExactlyOnce(s: SparkSession, dir: String): DataFrame = {
-    sys.env.get("SPARK_GRAFT_STATE_STORE").foreach { p =>
-      val cls = p.toLowerCase match {
-        case "rocksdb" => "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider"
-        case "hdfs" | "memory" => "org.apache.spark.sql.execution.streaming." +
-          "state.HDFSBackedStateStoreProvider"
-        case other => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STATE_STORE: unknown provider '$other' (rocksdb|hdfs)")
-      }
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-    }
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-eo-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
+    val slices = Seq("ev_00[0-5].parquet", "ev_*.parquet")
+      .map(slicedEventStream(s, dir, 12, _))
+    val tmp = streamScratch(s, "stream-eo")
     val out = new java.io.File(tmp, "out").getAbsolutePath
     val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    def start(glob: String) =
-      Streaming.streamingSosfilt(slicedEventStream(s, dir, 12, glob),
-          Design.butterSos(4, 0.3))
-        .toDF().writeStream.option("checkpointLocation", chk)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/batch=$id")
-        }.start()
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
-      val q1 = start("ev_00[0-5].parquet")
-      try q1.processAllAvailable() finally q1.stop()
-      val commitsDir = new java.io.File(chk, "commits")
-      val commits = Option(commitsDir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.forall(_.isDigit))
-      require(commits.nonEmpty, "phase 1 committed no batches")
-      val latest = commits.maxBy(_.getName.toInt)
-      val crashedId = latest.getName
-      require(latest.delete(), s"could not delete commit marker $crashedId")
-      // the local ChecksumFs keeps a .<n>.crc sidecar; a leftover one
-      // makes the replayed commit's rename collide (reported as
-      // "multiple streaming queries using the checkpoint")
-      new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
-      val q2 = start("ev_*.parquet")
-      try q2.processAllAvailable() finally q2.stop()
-      require(new java.io.File(commitsDir, crashedId).exists(),
-        s"restart did not replay and re-commit crashed batch $crashedId")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    withStreamPartitions(s) {
+      crashReplay(chk) { phase =>
+        Streaming.streamingSosfilt(slices(phase - 1), Design.butterSos(4, 0.3))
+          .toDF().writeStream.option("checkpointLocation", chk)
+          .outputMode("append")
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            batch.write.mode("overwrite").parquet(s"$out/batch=$id")
+          }.start()
+      }
+    }
     s.read.parquet(out).drop("batch")
       .select(col("user_id"), col("pos").cast("int").as("pos"),
         fp6(col("value")).as("value_fp"))
@@ -567,11 +571,8 @@ object Stream {
     */
   private def ledgerTopic(s: SparkSession, dir: String): String = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = Tables.pathFingerprint(s"$dir/events.parquet")
-    val base = new java.io.File(s"/tmp/graft_ledger/$tag-$fpTag")
-    Tables.pruneStaleSiblings(base, tag)
-    val root = new java.io.File(base, "topic")
+    val root = new java.io.File(
+      Tables.fixtureDir("graft_ledger", dir, "events"), "topic")
     Tables.materializeOnce(root, "_READY") { scratch =>
       scratch.mkdirs()
       val nParts = 4
@@ -590,13 +591,8 @@ object Stream {
         // per-segment write jobs, tie rows could land in a different
         // _rn range. event_type completes the key → deterministic
         // recomputation regardless of cache state.
-        val sorted = ev.filter(col("_p") === p)
-          .sort(expr("ts div 1000"), col("user_id"), col("value"), col("event_type"))
-        val idxSchema = sorted.schema
-          .add("_rn", org.apache.spark.sql.types.LongType)
-        val idx = s.createDataFrame(
-            sorted.rdd.zipWithIndex.map { case (r, i) =>
-              org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, idxSchema)
+        val idx = withRowIndex(s, ev.filter(col("_p") === p)
+            .sort(expr("ts div 1000"), col("user_id"), col("value"), col("event_type")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val n = idx.count()
         val chunk = math.max(1L, math.ceil(n.toDouble / nSegs).toLong)
@@ -625,6 +621,44 @@ object Stream {
     new java.io.File(root, "t").getAbsolutePath
   }
 
+  /** The `to_json` payload inside each [[ledgerTopic]] envelope. */
+  private val ledgerPayload = StructType(Seq(StructField("user_id", LongType),
+    StructField("ts", LongType), StructField("event_type", StringType),
+    StructField("value", DoubleType)))
+
+  /** The event columns of [[ledgerEvents]], without the envelope's. */
+  private val ledgerEventCols =
+    Seq("user_id", "ts_ns", "event_type", "value").map(col)
+
+  /** The ledger topic as a stream paced at `trigger` records per
+    * micro-batch by the source's admission control
+    * (maxRecordsPerTrigger): the envelope's `partition` and `offset`,
+    * then the `from_json`-decoded payload as [[ledgerEventCols]].
+    */
+  private def ledgerEvents(s: SparkSession, topic: String,
+                           trigger: Long): DataFrame =
+    s.readStream.format("graft.sources.LedgerProvider")
+      .option("maxRecordsPerTrigger", trigger).load(topic)
+      .select(col("partition"), col("offset"),
+        from_json(col("value"), ledgerPayload).as("e"))
+      .select(col("partition"), col("offset"), col("e.user_id").as("user_id"),
+        col("e.ts").as("ts_ns"), col("e.event_type").as("event_type"),
+        col("e.value").as("value"))
+
+  /** Trigger size for the ledger replay harnesses: a capacity knob
+    * SCALED to the corpus (the r17 ×10 bench measured a fixed
+    * 2000-record trigger at 105 s for 1M records — 500 micro-batches
+    * per lifecycle; a fixed trigger is itself the scale bug). About
+    * `batches` paced batches per lifecycle at any SF keep the
+    * multi-batch replay semantics the harnesses exist to exercise while
+    * the per-commit budget grows with the data, exactly how production
+    * sizes admission control. The `floor` caps at n/4 so a tiny corpus
+    * (sf0.001: ~1k records) still paces >= 4 micro-batches.
+    */
+  private def pacedTrigger(nRecords: Long, floor: Long, batches: Int): Long =
+    math.max(math.min(floor, math.max(1L, nRecords / 4)),
+      math.ceil(nRecords.toDouble / batches).toLong)
+
   /** The windowed-counts operator driven from the Kafka-shaped DSv2
     * ledger source instead of the file source: envelope → `from_json`
     * payload decode → the SAME [[Streaming.windowedCounts]] state
@@ -637,29 +671,9 @@ object Stream {
     * LedgerSpec.
     */
   def streamLedgerCounts(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val topic = ledgerTopic(s, dir)
-    val payload = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
     // trigger size is a CAPACITY knob, not a corpus property —
-    // production sizes it to bound per-commit state pressure; the
-    // env override is how the ×100 gate runs with a proportionally
-    // larger budget instead of 500 tiny batches
-    val trigger = sys.env.getOrElse("SPARK_GRAFT_LEDGER_TRIGGER", "20000")
-    val ev = s.readStream.format("graft.sources.LedgerProvider")
-      .option("maxRecordsPerTrigger", trigger).load(topic)
-      .select(from_json(col("value"), payload).as("e"))
-      .select(col("e.user_id"),
-        timestamp_micros(expr("e.ts div 1000")).as("ts"),
-        col("e.event_type").as("event_type"), col("e.value").as("value"))
-      .as[Streaming.Event]
+    // production sizes it to bound per-commit state pressure
+    val ev = asEvents(ledgerEvents(s, ledgerTopic(s, dir), trigger = 20000L), "ts_ns")
     runToSink(
       Streaming.windowedCounts(ev.toDF(), "5 minutes", "10 minutes"),
       "stream_ledger_sink", mode = "complete")
@@ -684,59 +698,20 @@ object Stream {
     */
   def streamLedgerExactlyOnce(s: SparkSession, dir: String): DataFrame = {
     val topic = ledgerTopic(s, dir)
-    val payload = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
-    // capacity knob SCALED to the corpus (the r17 ×10 bench measured
-    // the old fixed 2000-record trigger at 105 s for 1M records — 500
-    // micro-batches per lifecycle; a fixed trigger is itself the scale
-    // bug). ~10 paced batches per lifecycle at any SF keeps the
-    // multi-batch replay semantics the harness exists to exercise
-    // while the per-commit budget grows with the data, exactly how
-    // production sizes admission control. Env still overrides.
-    val nRecords = s.read.parquet(s"$dir/events.parquet").count()
-    // the 2000-record floor caps at n/4 so a tiny corpus (sf0.001:
-    // ~1k records) still paces >= 4 micro-batches instead of tripping
-    // the multi-batch gate; unchanged for every n >= 8000
-    val trigger = sys.env.getOrElse("SPARK_GRAFT_LEDGER_EO_TRIGGER",
-      math.max(math.min(2000L, math.max(1L, nRecords / 4)),
-        math.ceil(nRecords / 10.0).toLong).toString)
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-leo-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
+    val trigger = pacedTrigger(s.read.parquet(s"$dir/events.parquet").count(),
+      floor = 2000L, batches = 10)
+    val tmp = streamScratch(s, "stream-leo")
     val out = new java.io.File(tmp, "out").getAbsolutePath
     val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    def start() = s.readStream.format("graft.sources.LedgerProvider")
-      .option("maxRecordsPerTrigger", trigger).load(topic)
-      .select(from_json(col("value"), payload).as("e"))
-      .select(col("e.user_id"), col("e.ts").as("ts_ns"),
-        col("e.event_type").as("event_type"), col("e.value").as("value"))
-      .writeStream.option("checkpointLocation", chk)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/batch=$id")
-      }.start()
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    val commitsDir = new java.io.File(chk, "commits")
-    val commits = Option(commitsDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.forall(_.isDigit))
-    require(commits.length >= 3,
-      s"expected several paced micro-batches, got ${commits.length}")
-    val latest = commits.maxBy(_.getName.toInt)
-    val crashedId = latest.getName
-    require(latest.delete(), s"could not delete commit marker $crashedId")
-    new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    require(new java.io.File(commitsDir, crashedId).exists(),
-      s"restart did not replay and re-commit crashed epoch $crashedId")
+    withStreamPartitions(s) {
+      crashReplay(chk, minCommits = 3) { _ =>
+        ledgerEvents(s, topic, trigger).select(ledgerEventCols: _*)
+          .writeStream.option("checkpointLocation", chk)
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            batch.write.mode("overwrite").parquet(s"$out/batch=$id")
+          }.start()
+      }
+    }
     s.read.parquet(out).drop("batch")
       .groupBy(expr("((ts_ns div 1000) div 300000000) * 300").as("w_start_s"),
         col("event_type"))
@@ -783,87 +758,36 @@ object Stream {
   def streamManifestSink(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.ManifestTable
     val topic = ledgerTopic(s, dir)
-    val payload = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
     val nEvents = s.read.parquet(s"$dir/events.parquet").count()
-    // floor capped at n/4 for tiny corpora (see the ledger-EO note);
-    // identical for every n >= 2000
-    val trigger = sys.env.getOrElse("SPARK_GRAFT_MSINK_TRIGGER",
-      math.max(math.min(500L, math.max(1L, nEvents / 4)),
-        math.ceil(nEvents / 6.0).toLong).toString)
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-msink-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
+    val trigger = pacedTrigger(nEvents, floor = 500L, batches = 6)
+    val tmp = streamScratch(s, "stream-msink")
     val table = new java.io.File(tmp, "table").getAbsolutePath
     val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("ev_key",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts_ns",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
+    val sinkSchema = StructType(Seq(StructField("ev_key", LongType, nullable = false),
+      StructField("user_id", LongType), StructField("ts_ns", LongType),
+      StructField("event_type", StringType), StructField("value", DoubleType)))
     // v0: empty table, schema logged, keyed on the offset-derived key
     ManifestTable.create(s,
       table, s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         sinkSchema), "ev_key", 1)
     val committed = new java.util.concurrent.atomic.AtomicLong(0)
     val skipped = new java.util.concurrent.atomic.AtomicLong(0)
-    def start() = s.readStream.format("graft.sources.LedgerProvider")
-      .option("maxRecordsPerTrigger", trigger).load(topic)
-      .select(from_json(col("value"), payload).as("e"),
-        col("partition"), col("offset"))
-      .select(
-        (col("partition").cast("long") * lit(1L << 40) + col("offset"))
-          .as("ev_key"),
-        col("e.user_id").as("user_id"), col("e.ts").as("ts_ns"),
-        col("e.event_type").as("event_type"), col("e.value").as("value"))
-      .writeStream.option("checkpointLocation", chk)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (ManifestTable.appendBatch(s, table, batch, "msink", id, buckets = 1))
-          committed.incrementAndGet()
-        else skipped.incrementAndGet()
-        ()
-      }.start()
-    // Batch-volume-sized shuffle partitions for the per-micro-batch
-    // work (optimization round 22 — the runToSink state-volume rule,
-    // which this entry never got because it doesn't go through
-    // runToSink): every appendBatch aggregation/write inside
-    // foreachBatch otherwise inherits the session's full-corpus
-    // shuffle count for a delta-sized frame. Same env knob, same
-    // production scaling story; restored before the returned (full-
-    // table) aggregate plans.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
-      val q1 = start()
-      try q1.processAllAvailable() finally q1.stop()
-      require(committed.get >= 3,
-        s"expected several paced micro-batch commits, got ${committed.get}")
-      val commitsDir = new java.io.File(chk, "commits")
-      val latestMarker = commitsDir.listFiles().filter(_.getName.forall(_.isDigit))
-        .maxBy(_.getName.toInt)
-      val crashedId = latestMarker.getName
-      require(latestMarker.delete(), s"could not delete commit marker $crashedId")
-      new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-      require(new java.io.File(commitsDir, crashedId).exists(),
-        s"restart did not replay and re-commit crashed batch $crashedId")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    withStreamPartitions(s) {
+      crashReplay(chk) { _ =>
+        ledgerEvents(s, topic, trigger)
+          .select((col("partition").cast("long") * lit(1L << 40) + col("offset"))
+            .as("ev_key") +: ledgerEventCols: _*)
+          .writeStream.option("checkpointLocation", chk)
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            if (ManifestTable.appendBatch(s, table, batch, "msink", id, buckets = 1))
+              committed.incrementAndGet()
+            else skipped.incrementAndGet()
+            ()
+          }.start()
+      }
+    }
+    require(committed.get >= 3,
+      s"expected several paced micro-batch commits, got ${committed.get}")
     require(skipped.get >= 1,
       "replayed batch was not deduped by the manifest txn log")
     // CDC gate: v0→v1 is exactly the first batch, as pure inserts
@@ -921,34 +845,14 @@ object Stream {
   def streamManifestMergeSink(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.ManifestTable
     val topic = ledgerTopic(s, dir)
-    val payload = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
-    val nEvents = s.read.parquet(s"$dir/events.parquet").count()
-    val trigger = sys.env.getOrElse("SPARK_GRAFT_MMSINK_TRIGGER",
-      math.max(math.min(500L, math.max(1L, nEvents / 4)),
-        math.ceil(nEvents / 6.0).toLong).toString)
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-mmsink-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
+    val trigger = pacedTrigger(s.read.parquet(s"$dir/events.parquet").count(),
+      floor = 500L, batches = 6)
+    val tmp = streamScratch(s, "stream-mmsink")
     val table = new java.io.File(tmp, "table").getAbsolutePath
     val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("ts_ns",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
+    val sinkSchema = StructType(Seq(StructField("user_id", LongType, nullable = false),
+      StructField("ts_ns", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType)))
     ManifestTable.create(s, table,
       s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         sinkSchema), "user_id", 1)
@@ -968,36 +872,14 @@ object Stream {
       else skipped.incrementAndGet()
       ()
     }
-    def start() = s.readStream.format("graft.sources.LedgerProvider")
-      .option("maxRecordsPerTrigger", trigger).load(topic)
-      .select(from_json(col("value"), payload).as("e"))
-      .select(col("e.user_id").as("user_id"), col("e.ts").as("ts_ns"),
-        col("e.event_type").as("event_type"), col("e.value").as("value"))
-      .writeStream.option("checkpointLocation", chk)
-      .foreachBatch(apply _).start()
-    // batch-volume-sized shuffle partitions for the per-micro-batch
-    // merges (round 22 — the runToSink state-volume rule; see the
-    // stream_manifest_sink note). Restored before the returned
-    // full-table aggregate plans.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
-      val q1 = start()
-      try q1.processAllAvailable() finally q1.stop()
+    withStreamPartitions(s) {
+      crashReplay(chk) { _ =>
+        ledgerEvents(s, topic, trigger).select(ledgerEventCols: _*)
+          .writeStream.option("checkpointLocation", chk)
+          .foreachBatch(apply _).start()
+      }
       require(committed.get >= 3,
         s"expected several paced micro-batch merges, got ${committed.get}")
-      // crash between sink commit and checkpoint commit -> replay skips
-      val commitsDir = new java.io.File(chk, "commits")
-      val latestMarker = commitsDir.listFiles().filter(_.getName.forall(_.isDigit))
-        .maxBy(_.getName.toInt)
-      val crashedId = latestMarker.getName
-      require(latestMarker.delete(), s"could not delete commit marker $crashedId")
-      new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-      require(new java.io.File(commitsDir, crashedId).exists(),
-        s"restart did not replay and re-commit crashed batch $crashedId")
       require(skipped.get >= 1,
         "replayed merge batch was not deduped by the manifest txn log")
       val latest = ManifestTable.readSnapshot(table,
@@ -1016,7 +898,7 @@ object Stream {
         matchedUpdate = Some(ManifestTable.srcCol("ts_ns") > col("ts_ns")),
         notMatchedInsert = Some(lit(true))),
         "stale guard batch must commit (as a no-row-change merge)")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     ManifestTable.snapshot(s, table)
       .select(col("user_id"), col("ts_ns"), col("event_type"),
         fp2(col("value")).as("value_fp"))
@@ -1065,10 +947,7 @@ object Stream {
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority")
     def slice(r: Int) = orders.filter(col("o_orderkey") % 6 === r)
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-msrc-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
+    val tmp = streamScratch(s, "stream-msrc")
     val table = new java.io.File(tmp, "table").getAbsolutePath
     val chk = new java.io.File(tmp, "chk").getAbsolutePath
     val out = new java.io.File(tmp, "out").getAbsolutePath
@@ -1079,19 +958,21 @@ object Stream {
       .option("maxVersionsPerTrigger", "1").load(table)
       .writeStream.option("checkpointLocation", chk)
       .format("parquet").option("path", out).start()
-    val q1 = start()
-    try {
-      q1.processAllAvailable() // v0..v2 drained
-      ManifestTable.appendBatch(s, table, slice(3), "seed", 3L, buckets = 2)
-      ManifestTable.compact(s, table, buckets = 4) // dataChange=false → skipped
-      ManifestTable.appendBatch(s, table, slice(4), "seed", 4L, buckets = 2)
-      q1.processAllAvailable() // v3..v5 drained (v4 compact emits nothing)
-    } finally q1.stop()
-    // restart from checkpoint: the tail resumes at the committed
-    // version; re-emitting any earlier slice breaks the oracle counts
-    ManifestTable.appendBatch(s, table, slice(5), "seed", 5L, buckets = 2)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
+    withStreamPartitions(s) {
+      val q1 = start()
+      try {
+        q1.processAllAvailable() // v0..v2 drained
+        ManifestTable.appendBatch(s, table, slice(3), "seed", 3L, buckets = 2)
+        ManifestTable.compact(s, table, buckets = 4) // dataChange=false → skipped
+        ManifestTable.appendBatch(s, table, slice(4), "seed", 4L, buckets = 2)
+        q1.processAllAvailable() // v3..v5 drained (v4 compact emits nothing)
+      } finally q1.stop()
+      // restart from checkpoint: the tail resumes at the committed
+      // version; re-emitting any earlier slice breaks the oracle counts
+      ManifestTable.appendBatch(s, table, slice(5), "seed", 5L, buckets = 2)
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+    }
     require(ManifestTable.latestVersion(table) == 6,
       s"expected 7 versions, got ${ManifestTable.latestVersion(table) + 1}")
     // Pacing leg (round 19 — Delta's maxFilesPerTrigger/maxBytesPerTrigger
@@ -1161,10 +1042,7 @@ object Stream {
     val orders = Tables.load(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority")
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-mcdc-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
+    val tmp = streamScratch(s, "stream-mcdc")
     val table = new java.io.File(tmp, "table").getAbsolutePath
     val chk = new java.io.File(tmp, "chk").getAbsolutePath
     val out = new java.io.File(tmp, "out").getAbsolutePath
@@ -1175,18 +1053,18 @@ object Stream {
     val inserts = orders.filter(col("o_orderkey") % 4 === 3)
     ManifestTable.upsert(s, table, updates.unionByName(inserts), buckets = 2)
     ManifestTable.deleteRange(s, table, 1000L, 2999L)
-    val q = s.readStream.format("graft.sources.ManifestStreamProvider")
-      .option("readChangeFeed", "true")
-      .option("maxVersionsPerTrigger", "1").load(table)
-      .writeStream.option("checkpointLocation", chk)
-      .format("parquet").option("path", out).start()
-    try q.processAllAvailable() finally q.stop()
-    val cdcSchema = org.apache.spark.sql.types.StructType(
+    withStreamPartitions(s) {
+      val q = s.readStream.format("graft.sources.ManifestStreamProvider")
+        .option("readChangeFeed", "true")
+        .option("maxVersionsPerTrigger", "1").load(table)
+        .writeStream.option("checkpointLocation", chk)
+        .format("parquet").option("path", out).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    val cdcSchema = StructType(
       ManifestTable.schemaOf(ManifestTable.readSnapshot(table, 2)).get.fields.toSeq :+
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType) :+
-        org.apache.spark.sql.types.StructField("_commit_version",
-          org.apache.spark.sql.types.IntegerType))
+        StructField("_change_type", StringType) :+
+        StructField("_commit_version", org.apache.spark.sql.types.IntegerType))
     s.read.schema(cdcSchema).parquet(out)
       .groupBy(col("_commit_version").as("commit_v"), col("_change_type").as("change"))
       .agg(count(lit(1)).as("n"),

@@ -2893,11 +2893,7 @@ object ManifestTable {
     val keyCol = cur.keyCol
     val ks = keys.select(col(keys.columns(0)).cast("long").as("_k"))
       .filter(col("_k").isNotNull).distinct()
-    val ranges = spark.createDataFrame(cur.files.map(f =>
-      (f.name, f.minKey, f.maxKey))).toDF("_file", "_mn", "_mx")
-    val touchedNames = ks
-      .join(broadcast(ranges), col("_k") >= col("_mn") && col("_k") <= col("_mx"))
-      .select("_file").distinct().collect().map(_.getString(0)).toSet
+    val touchedNames = touchedByKeys(spark, cur, ks, "_k")
     val (touched, untouched) = cur.files.partition(f => touchedNames(f.name))
     val newFiles =
       if (touched.isEmpty) Seq.empty

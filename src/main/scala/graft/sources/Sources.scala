@@ -83,10 +83,7 @@ object Sources {
   }
 
   private def materializePartitioned(spark: SparkSession, dir: String): java.io.File = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_part/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_part", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       spark.read.parquet(s"$dir/documents.parquet")
         .write.mode("overwrite")
@@ -118,10 +115,7 @@ object Sources {
   }
 
   private def materializeEvolved(spark: SparkSession, dir: String): java.io.File = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_evolve/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_evolve", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val d = spark.read.parquet(s"$dir/documents.parquet")
       val data = new java.io.File(scratch, "data")
@@ -190,10 +184,7 @@ object Sources {
     concat(lit("T,\""), (col("doc_id") % 97).cast("string"), lit("\",v"))
 
   private def materializeCsv(spark: SparkSession, dir: String): java.io.File = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_csv/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_csv", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       // hand-built RFC 4180 lines (quote the string fields, double any
       // inner quotes) — full control over the bytes so the corruption
@@ -228,10 +219,7 @@ object Sources {
   }
 
   private def materializeOrc(spark: SparkSession, dir: String): java.io.File = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_orc/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_orc", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       spark.read.parquet(s"$dir/documents.parquet")
         .repartition(4)
@@ -259,10 +247,8 @@ object Sources {
       Option(new java.io.File(d, "data").listFiles())
         .map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0)
     val before = parquetCount(frag)
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = new java.io.File(
-      s"/tmp/graft_compact/$tag-${graft.Tables.pathFingerprint(s"$dir/documents.parquet")}-$targetFiles")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_compact", dir, "documents",
+      s"-$targetFiles")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       spark.read.parquet(new java.io.File(frag, "data").getAbsolutePath)
         .repartition(targetFiles)
@@ -275,10 +261,7 @@ object Sources {
   }
 
   private def materializeFragmented(spark: SparkSession, dir: String): java.io.File = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_frag/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_frag", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       spark.read.parquet(s"$dir/documents.parquet")
         .repartition(64)
@@ -289,10 +272,7 @@ object Sources {
   }
 
   private def materializeJsonl(spark: SparkSession, dir: String): java.io.File = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fpTag = graft.Tables.pathFingerprint(s"$dir/documents.parquet")
-    val base = new java.io.File(s"/tmp/graft_jsonl/$tag-$fpTag")
-    graft.Tables.pruneStaleSiblings(base, tag)
+    val base = graft.Tables.fixtureDir("graft_jsonl", dir, "documents")
     graft.Tables.materializeOnce(base, "_READY") { scratch =>
       val line = to_json(struct(col("doc_id"), col("text"), col("lang"),
         col("source"), col("n_chars")))
