@@ -194,16 +194,15 @@ object Bench {
       val runs = (0 until nRuns).map(_ => once(name, fn))
       val oks = runs.filter(_ >= 0)
       val best = if (oks.nonEmpty) oks.min else runs.max // all failed: least-negative
-      // Per-query cache isolation (round 14): many queries persist
-      // bounded frames with session lifetime (the Pregel/kNN-model
-      // contract), and across 206 alphabetical queries the accumulated
-      // cache blocks squeezed the 8 GiB bench heap — BENCH_r13 showed
-      // sort/window-heavy queries late in the alphabet at 5-20x their
-      // solo wall (q5_interval 8.0 s vs 0.9 s solo) from GC/eviction
-      // pressure, both runs equally. Clearing AFTER a query's runs
-      // keeps its own warm-cache min-of-2 semantics while pricing
-      // every query against a clean store, like the solo BenchOne
-      // runs BASELINE.md anchors.
+      // Per-query cache isolation (round 14): when queries' caches
+      // lived for the session, across 206 alphabetical queries the
+      // accumulated cache blocks squeezed the 8 GiB bench heap —
+      // BENCH_r13 showed sort/window-heavy queries late in the
+      // alphabet at 5-20x their solo wall (q5_interval 8.0 s vs 0.9 s
+      // solo) from GC/eviction pressure. Every cache is now freed by
+      // its graft.CacheUtil scope; clearing AFTER a query's runs still
+      // prices every query against a clean store, like the solo
+      // BenchOne runs BASELINE.md anchors.
       spark.catalog.clearCache()
       sampleCpu() // trailing own-CPU record for the external-load math
       (name, best, runs)

@@ -274,11 +274,11 @@ object Ann {
     var cents: Array[Array[Double]] =
       initRows.map(r => normQuant(r.getSeq[Double](1).toArray))
     // the fit scans the corpus once per iteration — cache it for the
-    // fit's duration (released in the finally even when an iteration
-    // throws, so a failed fit cannot pin the corpus in the cache)
-    val vecs = vectors(corpus, idCol, vecCol, "_cid", "_cv")
-    if (iters > 0) vecs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // fit's duration (freed even when an iteration throws, so a failed
+    // fit cannot pin the corpus in the cache)
+    graft.CacheUtil.eager { scope =>
+      val vecs = vectors(corpus, idCol, vecCol, "_cid", "_cv")
+      if (iters > 0) scope.cache(vecs)
       for (_ <- 0 until iters) {
         val (centsL, idsL) = centroidLits(
           cents.zipWithIndex.map { case (cv, cid) => (cid, cv) }.toSeq)
@@ -298,7 +298,7 @@ object Ann {
         }
         cents = next
       }
-    } finally if (iters > 0) vecs.unpersist(false)
+    }
     val spark = corpus.sparkSession
     import spark.implicits._
     cents.zipWithIndex.map { case (cv, cid) => (cid, cv) }.toSeq
@@ -411,9 +411,9 @@ object Ann {
         .map(quant).toArray
     }
     val fv = isFloatVec(corpus, vecCol)
-    val vecs = vectors(corpus, idCol, vecCol, "_cid", "_cv")
-    if (iters > 0) vecs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.CacheUtil.eager { scope =>
+      val vecs = vectors(corpus, idCol, vecCol, "_cid", "_cv")
+      if (iters > 0) scope.cache(vecs)
       for (_ <- 0 until iters) {
         // (m, cell_m, subvector_m) per input row — assignment is ONE
         // pqAssign kernel call against the literal codebook (round 12:
@@ -443,7 +443,7 @@ object Ann {
         }
         cb = next
       }
-    } finally if (iters > 0) vecs.unpersist(false)
+    }
     val spark = corpus.sparkSession
     import spark.implicits._
     (for { m <- 0 until nSub; cell <- 0 until kSub }
@@ -853,19 +853,18 @@ object Ann {
     * shortlist can only OVERestimate (the 4th-of-shortlist is at least
     * as far as the true 4th neighbor), so genuinely isolated nodes
     * stay flagged — the miss mode is false positives near the cut, not
-    * lost isolates. NOTE: the bounded kdist frame is persisted here
-    * (caller-visible) and stays cached for the session — the
-    * [[knnGraphFrom]] contract.
+    * lost isolates. The bounded kdist frame is cached until the
+    * result's first execution (the [[graft.CacheUtil.result]] rule).
     */
   def knnOutliersFrom(knn: DataFrame, k: Int, fracNum: Int = 1,
-                      fracDen: Int = 10): DataFrame = {
+                      fracDen: Int = 10): DataFrame = graft.CacheUtil.result { scope =>
     require(fracNum >= 1 && fracDen >= fracNum, "frac must be in (0,1]")
     val kd = knn.filter(col("rank") === k)
       .select(col("query_id").as("node"),
         (lit(1000000L) - col("score_fp")).as("kdist_fp"))
     // kd is referenced three times (count, heap cut, final join);
     // cache the bounded n-row frame so the kNN stage runs once
-    kd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    scope.cache(kd)
     val n = kd.count()
     val kTop = ((n * fracNum + fracDen - 1) / fracDen).toInt.max(1)
     val top = kd
@@ -888,18 +887,17 @@ object Ann {
     * replayable graph or [[topkIvfPq]] for the 100 TB path
     * (emb_knn_graph_ivfpq gates the recall of that swap). The
     * symmetrization is an ordinary hash equi-join of the k·n edge list
-    * against its own reversal on (src, dst). NOTE: the caller-supplied
-    * knn frame is persisted here (caller-visible; bounded to k rows
-    * per node) and stays cached for the session — unpersisting before
-    * the lazy result materializes would defeat the point, so repeated
-    * invocations rely on LRU eviction like any InMemoryRelation.
+    * against its own reversal on (src, dst). The knn frame (bounded to
+    * k rows per node) is cached until the result's first execution —
+    * unless the caller already cached it, in which case the caller's
+    * cache is used and left alone.
     */
-  def knnGraphFrom(knn: DataFrame): DataFrame = {
+  def knnGraphFrom(knn: DataFrame): DataFrame = graft.CacheUtil.result { scope =>
     // the k·n neighbor frame is referenced TWICE (edge list + its
     // reversal) — without a materialization boundary the kNN stage
     // (brute force: an n² scan) evaluates once per reference. Bounded
     // (k rows per node), so cache it for the join.
-    knn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    scope.cache(knn)
     val e = knn.select(col("query_id").as("src"),
       col("neighbor_id").as("dst"), col("score_fp"))
     val rev = e.select(col("dst").as("_rsrc"), col("src").as("_rdst"))

@@ -159,28 +159,25 @@ object Dedup {
     * (identical values — only candidate ids are ever looked up).
     */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
-                   minJac: Double = 0.8, k: Int = 12, r: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+                   minJac: Double = 0.8, k: Int = 12, r: Int = 3): DataFrame =
+      graft.CacheUtil.result { scope =>
     // `cand` (the whole minhash pipeline) is consumed three times below
     // (candIds twice via the union, then the aSh join) and `shd` three
-    // times (sizes, aSh, inter): persist both so the corpus-scale work
+    // times (sizes, aSh, inter): cache both so the corpus-scale work
     // runs once — both are proportional to the near-duplicate
     // population, not the corpus, so the cache is small. The FULL
     // shingle frame is deliberately NOT cached: it is corpus-sized
     // (several × the text column), and its two remaining computations
     // are column-pruned parquet scans — cheaper at 100 TB than
     // materializing a corpus-sized cache to executor disks. Blocks are
-    // reused even within a single job, and spill/LRU eviction bounds
-    // the footprint; callers running many ops in one session can
-    // `spark.catalog.clearCache()` between pipelines.
-    val cand = minhashCandidates(df, idCol, textCol, k, r)
-      .persist(MEMORY_AND_DISK)
+    // reused even within a single job; both caches are freed after the
+    // result's first execution.
+    val cand = scope.cache(minhashCandidates(df, idCol, textCol, k, r))
     val candIds = cand.select(col("a").as("_cand_id"))
       .union(cand.select(col("b").as("_cand_id")))
       .distinct()
-    val shd = shingleFrame(df, idCol, textCol).distinct()
-      .join(candIds, col(idCol) === col("_cand_id"), "left_semi")
-      .persist(MEMORY_AND_DISK)
+    val shd = scope.cache(shingleFrame(df, idCol, textCol).distinct()
+      .join(candIds, col(idCol) === col("_cand_id"), "left_semi"))
     val sizes = shd.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
     val aSh = shd.select(col(idCol).as("a"), col("s"))
       .join(cand, "a")
@@ -260,8 +257,11 @@ object Dedup {
     * Scale shape, per round:
     *  - ONE action — the exact symmetric-difference convergence count.
     *    That same job materializes the new edge set into its
-    *    MEMORY_AND_DISK persist (caching happens whenever partitions
-    *    are computed), so no separate materialization job runs.
+    *    MEMORY_AND_DISK cache (caching happens whenever partitions
+    *    are computed), so no separate materialization job runs; the
+    *    previous round's cache is released once the new one is built,
+    *    and the last round's is freed after the result's first
+    *    execution.
     *  - a reliable `checkpoint()` every `checkpointEvery` rounds
     *    truncates lineage to durable storage (HDFS/object store on a
     *    cluster — set `spark.sparkContext.setCheckpointDir`; a
@@ -269,31 +269,29 @@ object Dedup {
     *    `localCheckpoint`, executor loss is recoverable: an
     *    hours-long 1000-executor run resumes from the last
     *    checkpoint instead of aborting.
+    *
+    * Non-convergence fails loudly: if `maxIters` rounds end before the
+    * star fixpoint, an IllegalStateException names the rounds run and
+    * the unconverged node count — never over-split clusters.
     */
   def dupClusters(pairs: DataFrame, maxIters: Int = 50,
-                  checkpointEvery: Int = 3): DataFrame = {
-    val spark = pairs.sparkSession
-    val sc = spark.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(
-        s"${System.getProperty("java.io.tmpdir")}/graft-checkpoints")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // materialize the input edge list ONCE: persist first so the eager
+                  checkpointEvery: Int = 3): DataFrame = graft.CacheUtil.result { scope =>
+    graft.CacheUtil.ensureCheckpointDir(pairs.sparkSession)
+    // materialize the input edge list ONCE: cache first so the eager
     // reliable checkpoint (whose write pass re-computes the RDD) reads
     // the cache instead of running the candidate-generation pipeline
     // upstream of `pairs` a second time
-    val base = pairs.select(greatest(col("a"), col("b")).as("a"),
+    val base = scope.cache(pairs.select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(MEMORY_AND_DISK)
+      .distinct())
     val init = base.checkpoint(eager = true)
-    base.unpersist(blocking = false)
+    scope.release(base)
     var e = init
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIters) {
-      var next = smallStar(largeStar(e)).persist(MEMORY_AND_DISK)
+      var next = scope.cache(smallStar(largeStar(e)))
       // exact termination test, one aggregation: the edge set is a
       // union of single-root stars iff (1) no node is both an edge
       // source and an edge target AND (2) no source points at two
@@ -320,27 +318,24 @@ object Dedup {
       iter += 1
       if (changed > 0 && iter % checkpointEvery == 0) {
         val chk = next.checkpoint(eager = true) // reads the cache just populated
-        next.unpersist(blocking = false)
+        scope.release(next)
         next = chk
       }
-      e.unpersist(blocking = false)
+      scope.release(e)
       e = next
     }
+    if (changed > 0)
+      throw new IllegalStateException(s"dupClusters: star fixpoint not reached " +
+        s"after $iter rounds ($changed unconverged nodes); raise maxIters")
     // star fixpoint: each non-root node has exactly one edge (node →
     // component min); roots label themselves. Nodes come from the
     // checkpointed initial edge set (same node set as `pairs`), not
     // from `pairs` itself, so the upstream pipeline is not re-run.
-    if (changed > 0)
-      System.err.println(s"[graft] dupClusters: star fixpoint NOT reached " +
-        s"after $maxIters rounds ($changed unconverged nodes); emitting " +
-        "min-label-per-node — clusters may be over-split")
     val nodes = init.select(col("a").as("id"))
       .union(init.select(col("b").as("id")))
       .distinct()
     // groupBy(id) reuses the join's hash partitioning (no extra
-    // exchange); at the fixpoint it is an identity fold, and on
-    // maxIters exhaustion it collapses conflicting labels to one row
-    // per node instead of emitting duplicate doc_ids.
+    // exchange); at the fixpoint it is an identity fold.
     nodes.join(e.select(col("a").as("id"), col("b").as("_lbl")), Seq("id"), "left")
       .groupBy(col("id"))
       .agg(min(coalesce(col("_lbl"), col("id"))).as("cluster_id"))
@@ -464,7 +459,7 @@ object Dedup {
     */
   def incrementalDedup(df: DataFrame, idCol: String, textCol: String,
                        isNew: Column, k: Int = 12, r: Int = 3,
-                       minJac: Double = 0.5): DataFrame = {
+                       minJac: Double = 0.5): DataFrame = graft.CacheUtil.result { scope =>
     val flagged = df.withColumn("_new", isNew)
     val nx = flagged.select(col(idCol), col("_new"),
       md5(encode(graft.operators.TextOps.normalize(col(textCol)), "UTF-8")).as("_h"))
@@ -473,7 +468,7 @@ object Dedup {
     val ex = nx.filter(col("_new")).select(col(idCol), col("_h"))
       .join(ih, Seq("_h"), "left")
     val sh = shingleFrame(flagged, idCol, textCol)
-    // Both re-used subtrees are persisted (optimization round 21, the
+    // Both re-used subtrees are cached (optimization round 21, the
     // Pregel/dupClusters bounded-frame discipline): `bd` feeds BOTH
     // sides of the candidate join and `shd` three consumers (probe
     // shingles, index shingles, sizes) — without the cache the
@@ -481,17 +476,15 @@ object Dedup {
     // (stage profiles showed the explode stages recomputed with
     // 30–40% GC time). Both frames are bounded: bd is docs × bands
     // rows, shd is the distinct (id, shingle) set the verify stage
-    // needs anyway.
-    val bd = bands(minhash(sh, idCol, k), idCol, k, r)
-      .join(flagged.select(col(idCol), col("_new")), Seq(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // needs anyway. Both are freed after the result's first execution.
+    val bd = scope.cache(bands(minhash(sh, idCol, k), idCol, k, r)
+      .join(flagged.select(col(idCol), col("_new")), Seq(idCol)))
     val candidates = bd.filter(col("_new"))
       .select(col("band"), col("sig"), col(idCol).as("nid"))
       .join(bd.filter(!col("_new"))
         .select(col("band"), col("sig"), col(idCol).as("iid")), Seq("band", "sig"))
       .select(col("nid"), col("iid")).distinct()
-    val shd = sh.select(col(idCol), col("s")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shd = scope.cache(sh.select(col(idCol), col("s")).distinct())
     val shN = shd.join(candidates.select(col("nid").as(idCol)).distinct(),
         Seq(idCol), "left_semi")
       .select(col(idCol).as("nid"), col("s"))
@@ -514,34 +507,13 @@ object Dedup {
       .filter(col("_rk") === 1)
       .select(col("nid").as(idCol), col("iid").as("best_match_id"),
         col("_jfp").as("best_jac_fp"))
-    val result = ex.select(col(idCol), col("canonical_id").isNotNull.as("exact_dup"),
+    ex.select(col(idCol), col("canonical_id").isNotNull.as("exact_dup"),
         col("canonical_id"))
       .join(best, Seq(idCol), "left")
       .select(col(idCol), col("exact_dup"), col("canonical_id"),
         col("best_match_id").isNotNull.as("near_dup"),
         col("best_match_id"), col("best_jac_fp"))
-    // Unpersist AFTER the caller's consuming action (optimization
-    // round 22, VERDICT r21 #4 / ADVICE r21): the returned frame is
-    // lazy, so an in-function unpersist would run before the caches
-    // are ever used; instead a QueryExecutionListener waits for the
-    // first completed execution whose analyzed plan CONTAINS the bd
-    // subtree (plan-matched via sameResult, so unrelated concurrent
-    // queries never trigger it), unpersists both frames, and
-    // unregisters itself. A repeated call of the returned frame after
-    // that simply recomputes — correctness is cache-independent.
-    unpersistAfterUse(result, Seq(bd, shd))
-    result
   }
-
-  /** Register a self-unregistering QueryExecutionListener that
-    * unpersists `cached` once an execution containing `result`'s bd
-    * subtree completes (success or failure). Listener-bus delivery is
-    * asynchronous but ordered; unpersist(blocking=false) from the bus
-    * thread is safe.
-    */
-  private def unpersistAfterUse(result: DataFrame,
-                                cached: Seq[DataFrame]): Unit =
-    CacheUtil.unpersistAfterUse(result, cached)
 
   /** Exact edit-distance verification of candidate near-dup pairs —
     * the VERIFY stage of a production fuzzy-dedup pipeline: banding

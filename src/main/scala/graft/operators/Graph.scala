@@ -42,9 +42,9 @@ object Graph {
     * edge-list/degree subtrees are cached (see below) — PlanShapeSpec
     * pins the InMemoryTableScan reads from the Pregel cache in the
     * executed plan so a Spark upgrade or plan edit can't silently
-    * recompute the edge scan once per superstep. NOTE: the persist is
-    * caller-visible — the two bounded frames stay cached for the
-    * session (LRU-evicted under pressure), the GraphX-Pregel contract.
+    * recompute the edge scan once per superstep. The two bounded
+    * frames are cached until the result's first execution (the
+    * [[graft.CacheUtil.result]] rule).
     *
     * Nodes are the edge endpoints (an isolated document simply keeps
     * no rank row — rank flows along edges by definition). In an
@@ -53,7 +53,8 @@ object Graph {
     * edge list with sinks would not silently drop nodes.
     */
   def pageRank(edges: DataFrame, aCol: String, bCol: String,
-               iters: Int = 5, localThreshold: Long = 2000000L): DataFrame = {
+               iters: Int = 5, localThreshold: Long = 2000000L): DataFrame =
+      graft.CacheUtil.result { scope =>
     require(iters >= 0 && iters <= 50, "iters must be in [0, 50]")
     val undRaw = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -75,28 +76,35 @@ object Graph {
     // anything else — other key types, null endpoints — takes the
     // distributed path unchanged. At scale the threshold never fires:
     // a 100 TB corpus's edge list exceeds it by orders of magnitude.
-    var knownCount = -1L // probe's count, reused by the distributed sizing
-    if (localThreshold > 0 &&
-        undRaw.schema.fields.forall(_.dataType ==
-          org.apache.spark.sql.types.LongType)) {
-      undRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      knownCount = undRaw.count()
-      if (knownCount <= localThreshold) {
-        val rows =
-          try undRaw.collect()
-          finally { undRaw.unpersist(blocking = false); () }
+    val longKeyed = localThreshold > 0 &&
+      undRaw.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
+    if (!longKeyed) pregel(scope, undRaw, -1L, iters)
+    else {
+      scope.cache(undRaw)
+      val knownCount = undRaw.count()
+      // over threshold: undRaw stays cached — the distributed branch
+      // reuses it and knownCount, so scale pays ONE pass for the probe
+      // + sizing
+      if (knownCount > localThreshold) pregel(scope, undRaw, knownCount, iters)
+      else {
+        val rows = undRaw.collect()
+        scope.release(undRaw)
         if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-          return pageRankLocal(edges.sparkSession, rows, iters,
+          pageRankLocal(edges.sparkSession, rows, iters,
             nodeNullable = undRaw.schema.fields.exists(_.nullable))
-        // null endpoints: fall through to the distributed path, whose
-        // join/groupBy null semantics are the contract; cache and
-        // count are gone with the discarded probe
-        knownCount = -1L
-      } else if (iters == 0) undRaw.unpersist(blocking = false)
-      // over threshold with iters >= 1: leave undRaw persisted — the
-      // distributed branch re-persists (same level, a no-op) and
-      // reuses knownCount, so scale pays ONE pass for the probe + sizing
+        // null endpoints: the distributed path, whose join/groupBy
+        // null semantics are the contract; cache and count are gone
+        // with the discarded probe
+        else pregel(scope, undRaw, -1L, iters)
+      }
     }
+  }
+
+  /** The distributed Pregel loop over the directed edge list `undRaw`
+    * (`knownCount` = its row count when already probed, else -1).
+    */
+  private def pregel(scope: graft.CacheUtil.Scope, undRaw: DataFrame,
+                     knownCount: Long, iters: Int): DataFrame = {
     // Pregel truncates then caches the graph. Truncation first: the
     // edge list is itself the output of an expensive kNN/similarity
     // stage whose logical plan every superstep would otherwise embed
@@ -104,8 +112,8 @@ object Graph {
     // lineage made driver-side analysis/canonicalization the dominant
     // cost (round-14 probe: 4-5 s planning per downstream action on a
     // 200-node graph). A reliable checkpoint (the dupClusters pattern
-    // — persist so the checkpoint's write pass reads the cache, then
-    // eager checkpoint, then unpersist the pre-image) cuts the
+    // — cache so the checkpoint's write pass reads the cache, then
+    // eager checkpoint, then release the pre-image) cuts the
     // superstep plan to a scan of the materialized edge RDD, and on a
     // cluster survives executor loss (set
     // `spark.sparkContext.setCheckpointDir` to durable storage; a
@@ -115,15 +123,11 @@ object Graph {
     // across AQE replans — the ×100 probe measured the brute edge
     // stage recomputed ~10× without this (531 s → see SURVEY §4).
     // Both frames are bounded (2·|E| and n rows); GraphX's Pregel
-    // holds the same two cached. The cache entries live for the
-    // session like any InMemoryRelation — LRU eviction reclaims them
-    // under pressure.
+    // holds the same two cached, freed after the result's first
+    // execution.
     val und = if (iters >= 1) {
-      val sc = edges.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(
-          s"${System.getProperty("java.io.tmpdir")}/graft-checkpoints")
-      undRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      graft.CacheUtil.ensureCheckpointDir(undRaw.sparkSession)
+      scope.cache(undRaw)
       // Size the Pregel frame's partitioning by the EDGE COUNT, not by
       // whatever partitioning the upstream similarity stage left
       // behind (optimization round 21, guide §2 "derive partitioning
@@ -131,7 +135,7 @@ object Graph {
       // partitions, so five supersteps over a 2k-edge graph scheduled
       // ~30 stages of 64 near-empty tasks each (measured: 0.45 s
       // stage walls with ~30 ms of work). ~2M directed-edge rows
-      // (~100 MB) per partition; the count reads the just-persisted
+      // (~100 MB) per partition; the count reads the just-built
       // cache, and every downstream result is exact-integer and
       // partitioning-independent.
       val p = math.max(1L,
@@ -140,13 +144,11 @@ object Graph {
       val sized = undRaw.coalesce(math.min(p,
         math.max(1, undRaw.rdd.getNumPartitions)))
       val cp = sized.checkpoint(eager = true)
-      undRaw.unpersist(blocking = false)
-      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      scope.release(undRaw)
+      scope.cache(cp)
     } else undRaw
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    if (iters >= 1) {
-      deg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): Unit
-    }
+    if (iters >= 1) scope.cache(deg)
     val nF = broadcast(deg.agg(count(lit(1)).as("n")))
     var ranks = deg.crossJoin(nF)
       .select(col("src").as("node"), expr("1000000L div n").as("r_fp"))

@@ -129,12 +129,11 @@ object Stats {
       "bad exactRankValues parameters")
     val spark = df.sparkSession
     import spark.implicits._
-    val vals = df
-      .select(col(keyCol).cast("string").as("k"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull)
-    vals.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.CacheUtil.eager { scope =>
+      val vals = scope.cache(df
+        .select(col(keyCol).cast("string").as("k"),
+          col(valueCol).cast("double").as("v"))
+        .filter(col("v").isNotNull))
       val base = vals.groupBy("k")
         .agg(count(lit(1)).as("n"), min("v").as("mn"), max("v").as("mx"))
         .collect()
@@ -221,7 +220,7 @@ object Stats {
       base.toSeq.sortBy(_._1).map { case (k, (n, _, _)) =>
         (k, n, byKey(k).map(s => s.target -> s.result.get).toMap)
       }
-    } finally vals.unpersist(false)
+    }
   }
 
   /** Welch's unequal-variance t-test between two groups — the A/B

@@ -246,47 +246,40 @@ object TextOps {
     // kernel ([[graft.dsp.Bpe.applyMerge]]), same argmax tie-break
     // (max count, then UTF-8 byte order on l then r — Spark's string
     // ordering and DuckDB's text compare).
-    val first = init.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nTypes = first.count()
-    if (nTypes <= localThreshold) {
-      val words =
-        try first.select(col("syms"), col("cnt")).collect().map(r =>
-          (r.getSeq[String](0).toArray, r.getLong(1)))
-        finally { first.unpersist(false); () }
-      return bpeTrainLocal(words, nMerges)
-    }
-    var state = first
-    var prev: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    try {
-      var t = 0
-      while (t < nMerges) {
-        val top = state.filter(size(col("syms")) >= 2)
-          .select(col("cnt"), explode(expr(
-            "transform(sequence(1, size(syms) - 1), " +
-              "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))")).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum("cnt").as("c"))
-          .orderBy(col("c").desc, col("l"), col("r"))
-          .limit(1).collect()
-        require(top.nonEmpty,
-          s"BPE training ran out of pairs after ${merges.length} merges " +
-            s"(every word is a single symbol); asked for $nMerges")
-        val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((l, r, c))
-        // the argmax job materialized `state`'s cache; the previous
-        // frame fed it and can go now
-        if (prev != null) prev.unpersist(false)
-        prev = state
-        state = state.withColumn("syms", bpeMergeC(col("syms"), lit(l), lit(r)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        t += 1
+    graft.CacheUtil.eager { scope =>
+      val first = scope.cache(init)
+      if (first.count() <= localThreshold)
+        bpeTrainLocal(first.select(col("syms"), col("cnt")).collect().map(r =>
+          (r.getSeq[String](0).toArray, r.getLong(1))), nMerges)
+      else {
+        var state = first
+        var prev: DataFrame = null
+        val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+        var t = 0
+        while (t < nMerges) {
+          val top = state.filter(size(col("syms")) >= 2)
+            .select(col("cnt"), explode(expr(
+              "transform(sequence(1, size(syms) - 1), " +
+                "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))")).as("p"))
+            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+            .agg(sum("cnt").as("c"))
+            .orderBy(col("c").desc, col("l"), col("r"))
+            .limit(1).collect()
+          require(top.nonEmpty,
+            s"BPE training ran out of pairs after ${merges.length} merges " +
+              s"(every word is a single symbol); asked for $nMerges")
+          val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          merges += ((l, r, c))
+          // the argmax job materialized `state`'s cache; the previous
+          // frame fed it and can go now
+          if (prev != null) scope.release(prev)
+          prev = state
+          state = scope.cache(state.withColumn("syms", bpeMergeC(col("syms"), lit(l), lit(r))))
+          t += 1
+        }
+        merges.toArray
       }
-    } finally {
-      if (prev != null) prev.unpersist(false)
-      state.unpersist(false)
     }
-    merges.toArray
   }
 
   /** In-memory char-BPE merge loop over the collected word-type
@@ -460,49 +453,46 @@ object TextOps {
     // (collect or first merge round) both consume the full corpus
     // scan + word-type aggregation — unpersisted, it would run twice
     // before training even starts (ADVICE r19)
-    val first = init.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nTypes = first.count()
-    if (nTypes <= localThreshold) {
-      val words =
-        try first.select(col("syms"), col("cnt")).collect().map(r =>
-          (r.getSeq[Array[Byte]](0).toArray, r.getLong(1)))
-        finally { first.unpersist(false); () }
-      return bpeTrainBytesLocal(words, nMerges)
-    }
-    var state = first
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte], Long)]
-    try {
-      var t = 0
-      while (t < nMerges) {
-        val top = state.filter(size(col("syms")) >= 2)
-          .select(col("cnt"), explode(expr(
-            "transform(sequence(1, size(syms) - 1), " +
-              "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))")).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum("cnt").as("c"))
-          .orderBy(col("c").desc, col("l"), col("r"))
-          .limit(1).collect()
-        require(top.nonEmpty,
-          s"byte BPE training ran out of pairs after ${merges.length} merges " +
-            s"(every word is a single symbol); asked for $nMerges")
-        val (l, r, c) = (top(0).getAs[Array[Byte]](0),
-          top(0).getAs[Array[Byte]](1), top(0).getLong(2))
-        merges += ((l, r, c))
-        // localCheckpoint, NOT persist (round 19): an iterative
-        // withColumn chain grows the logical plan by one node per
-        // merge, and Catalyst's cost on the ever-deeper (cached but
-        // still fully re-analyzed) plan blows up super-linearly —
-        // measured 6 s at 8 merges but >9 min at 30. Truncating the
-        // lineage each iteration keeps every per-merge plan
-        // constant-depth, so the loop scales linearly in nMerges.
-        // (Superseded checkpoint RDDs are reclaimed by the
-        // ContextCleaner once unreferenced.)
-        state = state.withColumn("syms", bpeMergeBC(col("syms"), lit(l), lit(r)))
-          .localCheckpoint(true)
-        t += 1
+    graft.CacheUtil.eager { scope =>
+      val first = scope.cache(init)
+      if (first.count() <= localThreshold)
+        bpeTrainBytesLocal(first.select(col("syms"), col("cnt")).collect().map(r =>
+          (r.getSeq[Array[Byte]](0).toArray, r.getLong(1))), nMerges)
+      else {
+        var state = first
+        val merges = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte], Long)]
+        var t = 0
+        while (t < nMerges) {
+          val top = state.filter(size(col("syms")) >= 2)
+            .select(col("cnt"), explode(expr(
+              "transform(sequence(1, size(syms) - 1), " +
+                "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))")).as("p"))
+            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+            .agg(sum("cnt").as("c"))
+            .orderBy(col("c").desc, col("l"), col("r"))
+            .limit(1).collect()
+          require(top.nonEmpty,
+            s"byte BPE training ran out of pairs after ${merges.length} merges " +
+              s"(every word is a single symbol); asked for $nMerges")
+          val (l, r, c) = (top(0).getAs[Array[Byte]](0),
+            top(0).getAs[Array[Byte]](1), top(0).getLong(2))
+          merges += ((l, r, c))
+          // localCheckpoint, NOT persist (round 19): an iterative
+          // withColumn chain grows the logical plan by one node per
+          // merge, and Catalyst's cost on the ever-deeper (cached but
+          // still fully re-analyzed) plan blows up super-linearly —
+          // measured 6 s at 8 merges but >9 min at 30. Truncating the
+          // lineage each iteration keeps every per-merge plan
+          // constant-depth, so the loop scales linearly in nMerges.
+          // (Superseded checkpoint RDDs are reclaimed by the
+          // ContextCleaner once unreferenced.)
+          state = state.withColumn("syms", bpeMergeBC(col("syms"), lit(l), lit(r)))
+            .localCheckpoint(true)
+          t += 1
+        }
+        merges.toArray
       }
-    } finally first.unpersist(false)
-    merges.toArray
+    }
   }
 
   /** Unsigned lexicographic byte compare (memcmp): Spark's BinaryType
@@ -680,12 +670,11 @@ object TextOps {
       s"shrinkKeep must be in (0,1), got $shrinkKeep")
     require(finalRounds >= 1, s"finalRounds must be >= 1, got $finalRounds")
     graft.functions.Functions.install(df.sparkSession)
-    val hist = df
-      .select(explode(filter(split(col(textCol), "\\s+"),
-        w => length(w) > 0)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.CacheUtil.eager { scope =>
+      val hist = scope.cache(df
+        .select(explode(filter(split(col(textCol), "\\s+"),
+          w => length(w) > 0)).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("cnt")))
       // the driver Viterbi kernel indexes UTF-16 code units while
       // Spark's substring counts code points — identical only on BMP
       // text; and U+001F is the kernel's reserved path separator.
@@ -695,21 +684,17 @@ object TextOps {
       require(bad == 0, s"$bad word type(s) contain the reserved " +
         "separator U+001F or non-BMP characters (surrogate pairs)")
       // distributed seed: one partial-aggregated substring histogram
-      val subs = hist.select(col("cnt"), explode(expr(
+      val subs = scope.cache(hist.select(col("cnt"), explode(expr(
           s"flatten(transform(sequence(1, length(word)), i -> " +
           s"transform(sequence(i, least(length(word), i + ${maxLen - 1})), " +
           s"j -> substring(word, i, j - i + 1))))")).as("piece"))
-        .groupBy("piece").agg(sum("cnt").as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (chars, seedMulti) =
-        try {
-          val cs = subs.filter(length(col("piece")) === 1)
-            .collect().map(r => (r.getString(0), r.getLong(1)))
-          val sm = subs.filter(length(col("piece")) > 1)
-            .orderBy(col("c").desc, col("piece").asc).limit(seedSize)
-            .collect().map(r => (r.getString(0), r.getLong(1)))
-          (cs, sm)
-        } finally { subs.unpersist(false); () }
+        .groupBy("piece").agg(sum("cnt").as("c")))
+      val chars = subs.filter(length(col("piece")) === 1)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val seedMulti = subs.filter(length(col("piece")) > 1)
+        .orderBy(col("c").desc, col("piece").asc).limit(seedSize)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      scope.release(subs)
       require(chars.nonEmpty, "unigram fit needs a non-empty corpus")
       require(seedMulti.length >= targetMulti,
         s"corpus yields only ${seedMulti.length} multi-char seed " +
@@ -725,7 +710,6 @@ object TextOps {
       // carry ~15 ms of genuine work). Left at the inherited
       // partitioning; the treeReduce gate below handles the
       // many-partition scale end.
-      val emHist = hist
       val charNames = chars.map(_._1)
       val totSeed = (chars.iterator ++ seedMulti.iterator).map(_._2.toDouble).sum
       var vocab: Array[String] = (charNames ++ seedMulti.map(_._1))
@@ -777,7 +761,7 @@ object TextOps {
         // (hash-oracle-verified).
         val merged: Array[(String, Array[Byte])] = {
           import spark0.implicits._
-          emHist.select(col("word"), col("cnt")).as[(String, Long)]
+          hist.select(col("word"), col("cnt")).as[(String, Long)]
             .mapPartitions { it =>
               val (psA, lqA) = bcVocab.value
               val m = Unigram.UniModel.build(psA, lqA, mlCap)
@@ -864,7 +848,7 @@ object TextOps {
         (p, if (e > Long.MaxValue) Long.MaxValue else e.toLong, scores(p))
       }
       Unigram.LargeFit(pieces, stats.toArray, totalWords)
-    } finally { hist.unpersist(false); () }
+    }
   }
 
   /** Map-side unigram encode under a fitted model: `unigram_tokens` =
@@ -1200,77 +1184,15 @@ object TextOps {
     * it isn't; total and common occurrences then come out of ONE
     * per-doc aggregate, not two branches. The per-(doc, shingle)
     * occurrence frame is consumed twice (doc-frequency and the flag
-    * join) and persisted — it is bounded by the corpus token count,
-    * spills to disk, and is far cheaper than recomputing the regex
-    * split + explode.
+    * join) and cached for the result's first execution — it is
+    * bounded by the corpus token count, spills to disk, and is far
+    * cheaper than recomputing the regex split + explode.
     */
-  /** The cached per-(doc, shingle) occurrence frame, one per session:
-    * the returned DataFrame reads `occ` lazily, so it cannot be
-    * unpersisted inside the call — instead the next invocation over a
-    * DIFFERENT corpus evicts it, bounding the session to one cached
-    * occ frame instead of one per call (ADVICE r7). An invocation over
-    * the SAME corpus (plan-level `sameResult` — e.g. the bench's
-    * repeated runs) must REUSE the entry, not evict-and-re-persist:
-    * Spark's cache is keyed by canonicalized plan, so unpersisting the
-    * "previous" frame would blow away the very cache the new frame
-    * resolves to and turn every warm run cold. A caller that
-    * re-collects an old result after the cache moved to a new corpus
-    * recomputes the shingles (correct, just uncached).
-    */
-  /** WeakReference VALUES, not just weak keys: the cached DataFrame
-    * strongly references its SparkSession, so a plain WeakHashMap
-    * entry would pin its own key forever and never collect. The entry
-    * carries TWO weak refs: the DataFrame (for cheap reuse) and its
-    * analyzed plan. The plan ref is the unpersist handle that survives
-    * the DataFrame's collection — Spark's CacheManager holds the
-    * cached plan STRONGLY for as long as the entry is cached, so the
-    * plan weak-ref clears exactly when there is nothing left to
-    * uncache, and a GC'd DataFrame can no longer orphan a live cache
-    * entry until session stop (ADVICE r8).
-    */
-  private final case class OccEntry(
-    df: java.lang.ref.WeakReference[DataFrame],
-    plan: java.lang.ref.WeakReference[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
-  private val lastOcc = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession, OccEntry]
-
   def commonNgramCoverage(df: DataFrame, idCol: String, textCol: String,
-                          minDocs: Int = 2): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+                          minDocs: Int = 2): DataFrame = graft.CacheUtil.result { scope =>
     require(minDocs >= 1, "minDocs must be >= 1")
-    val fresh = Dedup.shingleFrame(df, idCol, textCol)
-      .groupBy(col(idCol), col("s")).agg(count(lit(1)).as("cnt"))
-    // weak keys drop stopped sessions' entries; the synchronized block
-    // closes the check-then-act race (two concurrent calls could both
-    // persist and orphan one entry)
-    val occ = lastOcc.synchronized {
-      val entry = Option(lastOcc.get(df.sparkSession))
-      val prevPlan = entry.flatMap(e => Option(e.plan.get))
-      prevPlan match {
-        case Some(p) if p.sameResult(fresh.queryExecution.analyzed) =>
-          // same corpus: reuse the live DataFrame, or just return
-          // `fresh` — the CacheManager resolves it to the cached
-          // InMemoryRelation by plan equality either way
-          entry.flatMap(e => Option(e.df.get)).getOrElse(fresh)
-        case _ =>
-          fresh.persist(MEMORY_AND_DISK)
-          lastOcc.put(df.sparkSession, OccEntry(
-            new java.lang.ref.WeakReference(fresh),
-            new java.lang.ref.WeakReference(fresh.queryExecution.analyzed)))
-          // uncache the previous corpus via the plan handle, which is
-          // alive iff the cache entry is — a GC'd DataFrame no longer
-          // leaks its cached data
-          prevPlan.foreach { p =>
-            df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-              .sharedState.cacheManager
-              .uncacheQuery(df.sparkSession
-                .asInstanceOf[org.apache.spark.sql.classic.SparkSession], p,
-                cascade = false, blocking = false)
-          }
-          fresh
-      }
-    }
+    val occ = scope.cache(Dedup.shingleFrame(df, idCol, textCol)
+      .groupBy(col(idCol), col("s")).agg(count(lit(1)).as("cnt")))
     // one row per (doc, shingle) above → count(*) = document frequency
     val common = occ.groupBy(col("s")).agg(count(lit(1)).as("_df"))
       .filter(col("_df") >= minDocs)
@@ -1686,11 +1608,16 @@ object TextOps {
     * per-label constants (|labels| is small by construction), then
     * left-joins the model on (label, word) — left UNHINTED so AQE
     * broadcasts a small vocabulary and shuffles a huge one. The
-    * per-document argmax is a window over |labels| rows per doc —
-    * bounded groups, hash-distributed. No collects anywhere.
+    * per-document argmax is a min-of-struct hash aggregate over the
+    * |labels| rows per doc — bounded groups, partial-aggregated. No
+    * collects anywhere.
+    *
+    * Test ids must be unique: a duplicated id fails the execution
+    * with the id in the message (the same aggregate counts each id's
+    * rows), never merges two documents' tokens into one score.
     */
   def nbClassify(df: DataFrame, idCol: String, labelCol: String,
-                 textCol: String, trainPred: Column): DataFrame = {
+                 textCol: String, trainPred: Column): DataFrame = graft.CacheUtil.result { scope =>
     val train = df.filter(trainPred)
     val test = df.filter(!trainPred)
     val trainToks = train.select(col(labelCol).as("_l"),
@@ -1701,18 +1628,17 @@ object TextOps {
     // explode lineage as separate aggregations — per-label token
     // totals are the sum of the (label, word) counts and the vocab is
     // their distinct word set, both derivable from the tiny c2 frame
-    // (labels × vocab rows, the model itself). c2 is persisted for
-    // its four consumers and freed after the first consuming action.
-    val c2 = trainToks.groupBy(col("_l"), col("_w"))
-      .agg(count(lit(1)).as("_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (labels × vocab rows, the model itself). c2 is cached for its
+    // four consumers and freed after the first consuming action.
+    val c2 = scope.cache(trainToks.groupBy(col("_l"), col("_w"))
+      .agg(count(lit(1)).as("_c")))
     val tot = c2.groupBy(col("_l")).agg(sum(col("_c")).as("_tot"))
     val vocab = c2.agg(count_distinct(col("_w")).as("_v"))
     val nTrain = train.agg(count(lit(1)).as("_n_train"))
     // one row per label, but THREE broadcast consumers (model,
     // tokScores, scores) — uncached, each broadcast job re-ran the
     // whole train-side aggregation lineage (round 22, guide §5)
-    val labelStats = train.groupBy(col(labelCol).as("_l"))
+    val labelStats = scope.cache(train.groupBy(col(labelCol).as("_l"))
       .agg(count(lit(1)).as("_n_l"))
       .join(tot, Seq("_l"))
       .crossJoin(broadcast(vocab))
@@ -1721,8 +1647,7 @@ object TextOps {
         graft.Tables.fp6(log(col("_n_l").cast("double") / col("_n_train")))
           .as("_prior_fp"),
         graft.Tables.fp6(log(lit(1.0) / (col("_tot") + col("_v"))))
-          .as("_default_fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .as("_default_fp")))
     val model = c2.join(labelStats.select(col("_l"), col("_tot"), col("_v")),
         Seq("_l"))
       .select(col("_l"), col("_w"),
@@ -1743,13 +1668,18 @@ object TextOps {
     // winner) instead of a row_number window — one hash agg with
     // map-side partials replaces the window's exchange + sort
     // (round 22, guide §2.3/§2.4); same winner row by construction.
-    val result = scores
-      .groupBy(col(idCol), col(labelCol))
-      .agg(min(struct((-col("score_fp")).as("_neg"), col("_l"))).as("_m"))
+    // A unique id has one row per label; a duplicated one repeats a
+    // label, which the same aggregate sees as rows > distinct labels.
+    scores
+      .groupBy(col(idCol))
+      .agg(min(struct((-col("score_fp")).as("_neg"), col("_l"))).as("_m"),
+        min(col(labelCol)).as(labelCol), count(lit(1)).as("_rows"),
+        collect_set(col("_l")).as("_labels"))
+      .filter(when(col("_rows") =!= size(col("_labels")), raise_error(concat(
+        lit(s"nbClassify: duplicate test id in $idCol: "),
+        coalesce(col(idCol).cast("string"), lit("NULL"))))).otherwise(lit(true)))
       .select(col(idCol), col("_m._l").as("pred_label"), col(labelCol),
         (col("_m._l") === col(labelCol)).as("correct"),
         (-col("_m._neg")).as("score_fp"))
-    CacheUtil.unpersistAfterUse(result, Seq(c2, labelStats))
-    result
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.CacheUtil
 import graft.Tables.{load, fp2, fp4, fp6, fpSql}
 import graft.operators.{Ann, Dedup, Multimodal, TextOps}
 
@@ -700,12 +701,10 @@ object Pipeline {
     * pair set with a corpus-sized broadcast (×100 probe: 94-169 s
     * ANN-family vs 534 s brute).
     */
-  def embOutliersIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val nodes = embs(s, dir).filter(col("vec_id") % 10 === 0)
-    nodes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def embOutliersIvfPq(s: SparkSession, dir: String): DataFrame = CacheUtil.result { scope =>
+    val nodes = scope.cache(embs(s, dir).filter(col("vec_id") % 10 === 0))
     val nNodes = nodes.count()
-    val exact = Ann.knnOutliers(nodes, "vec_id", "embedding", k = 4)
-    exact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val exact = scope.cache(Ann.knnOutliers(nodes, "vec_id", "embedding", k = 4))
     val cents = Ann.kmeansFit(nodes, "vec_id", "embedding",
       k = Ann.sizedCells(nNodes), iters = 2)
     val short = Ann.topkIvfPq(nodes,
@@ -797,41 +796,35 @@ object Pipeline {
     * the ANN edge stage at 94 s vs 677 s brute with a corpus-growing
     * broadcast.
     */
-  def graphPagerankIvfPq(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  def graphPagerankIvfPq(s: SparkSession, dir: String): DataFrame = CacheUtil.result { scope =>
     // nodes feeds FIVE consumers (exact graph, kmeans fit, IVF-PQ
-    // corpus, query set, rerank) plus the sizing count — persist once
+    // corpus, query set, rerank) plus the sizing count — cache once
     // so the count materializes the cache instead of an extra parquet
     // scan per consumer (ADVICE r13).
-    val nodes = embs(s, dir).filter(col("vec_id") % 10 === 0)
-    nodes.persist(MEMORY_AND_DISK)
+    val nodes = scope.cache(embs(s, dir).filter(col("vec_id") % 10 === 0))
     val nNodes = nodes.count()
-    val exact = Ann.knnGraph(nodes, "vec_id", "embedding", k = 4)
-    exact.persist(MEMORY_AND_DISK)
+    val exact = scope.cache(Ann.knnGraph(nodes, "vec_id", "embedding", k = 4))
     val cents = Ann.kmeansFit(nodes, "vec_id", "embedding",
       k = Ann.sizedCells(nNodes), iters = 2)
     val short = Ann.topkIvfPq(nodes,
       nodes.select(col("vec_id"), col("embedding")), "vec_id", "embedding",
       k = 96, nProbe = 24, nSub = 8, kSub = 16, iters = 2,
       centroids = Some(cents))
-    val ann = Ann.knnGraphFrom(
-      Ann.rerankExact(short, nodes, "vec_id", "embedding", k = 4))
-    ann.persist(MEMORY_AND_DISK)
+    val ann = scope.cache(Ann.knnGraphFrom(
+      Ann.rerankExact(short, nodes, "vec_id", "embedding", k = 4)))
     val eHits = ann.select("a", "b")
       .join(exact.select("a", "b"), Seq("a", "b"), "left_semi")
       .agg(count(lit(1)).as("_hits"))
     val eDenom = exact.agg(count(lit(1)).as("_n"))
     val edgeGate = eHits.crossJoin(eDenom)
       .select((col("_hits") >= col("_n") * lit(0.40)).as("edge_recall_ok"))
-    val exactRanks = graft.operators.Graph.pageRank(exact, "a", "b", iters = 5)
-    exactRanks.persist(MEMORY_AND_DISK)
+    val exactRanks = scope.cache(graft.operators.Graph.pageRank(exact, "a", "b", iters = 5))
     val annRanks = graft.operators.Graph.pageRank(ann, "a", "b", iters = 5)
     // the exact decile feeds BOTH the hit join and the denominator —
-    // build it once and persist (round-14: the duplicated topDecile
+    // build it once and cache (round-14: the duplicated topDecile
     // calls each re-ran the TopKAgg and its sizing count)
-    val exactTop = topDecile(exactRanks)
-    exactTop.persist(MEMORY_AND_DISK)
-    val rHits = topDecile(annRanks)
+    val exactTop = scope.cache(topDecile(scope, exactRanks))
+    val rHits = topDecile(scope, annRanks)
       .join(exactTop, Seq("node"), "left_semi")
       .agg(count(lit(1)).as("_rhits"))
     val rDenom = exactTop.agg(count(lit(1)).as("_rn"))
@@ -844,9 +837,8 @@ object Pipeline {
   /** Top-⌈n/10⌉ nodes by (r_fp DESC, node ASC) via the bounded-heap
     * TopKAgg — no global sort, no window; n is the one-number
     * control-plane collect (the kmeansFit shape). */
-  private def topDecile(ranks: DataFrame): DataFrame = {
-    ranks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = ranks.count()
+  private def topDecile(scope: CacheUtil.Scope, ranks: DataFrame): DataFrame = {
+    val n = scope.cache(ranks).count()
     val kTop = ((n + 9) / 10).toInt.max(1)
     ranks
       .agg(graft.functions.TopKAgg.topK(col("r_fp"), col("node"), kTop).as("_tk"))
@@ -903,12 +895,11 @@ object Pipeline {
     * cell assignment, the fp6 centroid-cosine, the within-cluster
     * priority pairs, and the NOT EXISTS keep rule.
     */
-  def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
-    // persist before the sizing count so the quantizer-sizing action
+  def dedupSemantic(s: SparkSession, dir: String): DataFrame = CacheUtil.result { scope =>
+    // cache before the sizing count so the quantizer-sizing action
     // materializes the cache the Lloyd iterations then scan, instead
     // of an extra bare parquet pass (ADVICE r13)
-    val ee = embs(s, dir)
-    ee.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ee = scope.cache(embs(s, dir))
     Dedup.semDedup(ee, "vec_id", "embedding",
       minCos = 0.35, k = Ann.sizedCells(ee.count()), iters = 2)
       .orderBy("vec_id")
@@ -1054,9 +1045,8 @@ object Pipeline {
     * see Ann.kmeansFit) feeding topkIvf's centroids parameter. The
     * oracle replays the sizing rule as GREATEST(16, CEIL(SQRT(n))).
     */
-  def annTopkIvfTrained(s: SparkSession, dir: String): DataFrame = {
-    val corpus = embs(s, dir)
-    corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def annTopkIvfTrained(s: SparkSession, dir: String): DataFrame = CacheUtil.result { scope =>
+    val corpus = scope.cache(embs(s, dir))
     val cents = Ann.kmeansFit(corpus, "vec_id", "embedding",
       k = Ann.sizedCells(corpus.count()), iters = 2)
     Ann.topkIvf(corpus, annQueries(s, dir), "vec_id", "embedding",
@@ -1095,9 +1085,8 @@ object Pipeline {
     * against the frozen centroids, probe, exact rerank — and pins the
     * gate at literal TRUE.
     */
-  def annIncremental(s: SparkSession, dir: String): DataFrame = {
-    val all = embs(s, dir)
-    all.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def annIncremental(s: SparkSession, dir: String): DataFrame = CacheUtil.result { scope =>
+    val all = scope.cache(embs(s, dir))
     val base = all.filter(col("vec_id") % 10 =!= 9)
     val cents = Ann.kmeansFit(base, "vec_id", "embedding",
       k = Ann.sizedCells(base.count()), iters = 2)
@@ -1106,11 +1095,11 @@ object Pipeline {
     val exact = Ann.topkBruteForce(all, annQueries(s, dir),
       "vec_id", "embedding", k = 3)
     // ann feeds the gate hits AND the deliverable rows; exact feeds
-    // the hits join AND the denominator — persist both so the IVF
+    // the hits join AND the denominator — cache both so the IVF
     // probe and the brute-force pass run once (ADVICE r13, the
     // embOutliersIvfPq/graphPagerankIvfPq convention)
-    ann.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    exact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    scope.cache(ann)
+    scope.cache(exact)
     val hits = ann.select("query_id", "neighbor_id")
       .join(exact.select("query_id", "neighbor_id"),
         Seq("query_id", "neighbor_id"), "left_semi")
@@ -2428,12 +2417,11 @@ object Pipeline {
       .select(col("doc_id"), col("_cw"))
   }
 
-  def textUnigramLarge(s: SparkSession, dir: String): DataFrame = {
-    // persisted: the fit's histogram build AND the map-side encode both
-    // consume the compound corpus — the session-lifetime bounded-frame
-    // contract (bench clears the cache per query)
-    val ud = compDocs(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def textUnigramLarge(s: SparkSession, dir: String): DataFrame = CacheUtil.result { scope =>
+    // cached: the fit's histogram build AND the map-side encode both
+    // consume the compound corpus; freed after the result's first
+    // execution
+    val ud = scope.cache(compDocs(s, dir))
     val fit = TextOps.unigramTrainLarge(ud, "_cw", maxLen = 8,
       seedSize = 4096, targetMulti = LargeTargetMulti,
       shrinkKeep = 0.75, finalRounds = 2)
@@ -5355,8 +5343,7 @@ object Pipeline {
     *     made a measured invariant (floor 1.0: any blocking defect
     *     fails it).
     */
-  def mmJpegPairs(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  def mmJpegPairs(s: SparkSession, dir: String): DataFrame = CacheUtil.result { scope =>
     val en = docs(s, dir).filter(col("lang") === "en")
     def hashes(fmt: String): DataFrame =
       Multimodal.imageDHash(
@@ -5364,17 +5351,14 @@ object Pipeline {
           format = fmt))
         .select(col("media_id").as("doc_id"),
           col("phash_hi").as("sim_hi"), col("phash_lo").as("sim_lo"))
-    val bmp = hashes("bmp")
-    bmp.persist(MEMORY_AND_DISK)
-    val jpg = hashes("jpeg")
-    jpg.persist(MEMORY_AND_DISK)
+    val bmp = scope.cache(hashes("bmp"))
+    val jpg = scope.cache(hashes("jpeg"))
     val ham = bitCountCol(col("sim_hi").bitwiseXOR(col("j_hi"))) +
       bitCountCol(col("sim_lo").bitwiseXOR(col("j_lo")))
-    val joined = bmp.join(
+    val joined = scope.cache(bmp.join(
         jpg.select(col("doc_id"), col("sim_hi").as("j_hi"),
           col("sim_lo").as("j_lo")), "doc_id")
-      .select(col("doc_id"), ham.as("_ham"))
-    joined.persist(MEMORY_AND_DISK)
+      .select(col("doc_id"), ham.as("_ham")))
     val closeGate = joined
       .agg((sum(when(col("_ham") <= 8, 1L).otherwise(0L)) >=
         count(lit(1)) * lit(0.90)).as("jpeg_close_ok"))

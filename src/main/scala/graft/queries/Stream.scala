@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
-import graft.Tables
+import graft.{CacheUtil, Tables}
 import graft.Tables.{fp2, fp6, fpSql}
 import graft.dsp.Design
 import graft.streaming.Streaming
@@ -84,24 +84,24 @@ object Stream {
       // µs-tied rows differently than the oracle's replayed boundary),
       // with the value tie-break making any residual ambiguity
       // observationally equivalent
-      val idx = withRowIndex(s,
-          ev.sort(expr("ts div 1000"), col("user_id"), col("value")))
-        .withColumn("_c", expr(s"_rn div $chunk"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      scratch.mkdirs()
-      for (c <- 0 until nFiles) {
-        val tmpDir = new java.io.File(scratch, s"_tmp$c")
-        idx.filter(col("_c") === c).drop("_rn", "_c")
-          .coalesce(1).write.mode("overwrite").parquet(tmpDir.getAbsolutePath)
-        val part = tmpDir.listFiles().find(_.getName.endsWith(".parquet")).get
-        val tgt = new java.io.File(scratch, f"ev_$c%03d.parquet")
-        java.nio.file.Files.move(part.toPath, tgt.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // distinct ascending mtimes pin the FileStreamSource batch order
-        tgt.setLastModified(1700000000000L + c * 60000L)
-        tmpDir.listFiles().foreach(_.delete()); tmpDir.delete(): Unit
+      CacheUtil.eager { scope =>
+        val idx = scope.cache(withRowIndex(s,
+            ev.sort(expr("ts div 1000"), col("user_id"), col("value")))
+          .withColumn("_c", expr(s"_rn div $chunk")))
+        scratch.mkdirs()
+        for (c <- 0 until nFiles) {
+          val tmpDir = new java.io.File(scratch, s"_tmp$c")
+          idx.filter(col("_c") === c).drop("_rn", "_c")
+            .coalesce(1).write.mode("overwrite").parquet(tmpDir.getAbsolutePath)
+          val part = tmpDir.listFiles().find(_.getName.endsWith(".parquet")).get
+          val tgt = new java.io.File(scratch, f"ev_$c%03d.parquet")
+          java.nio.file.Files.move(part.toPath, tgt.toPath,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          // distinct ascending mtimes pin the FileStreamSource batch order
+          tgt.setLastModified(1700000000000L + c * 60000L)
+          tmpDir.listFiles().foreach(_.delete()); tmpDir.delete(): Unit
+        }
       }
-      idx.unpersist(false)
     }
     // schema must come from the SLICES (ts already nanos-long there),
     // not the source file (whose ts may be TimestampType)
@@ -577,46 +577,46 @@ object Stream {
       scratch.mkdirs()
       val nParts = 4
       val nSegs = 5
-      val ev = Tables.tsToNanos(s.read.parquet(s"$dir/events.parquet"))
-        .withColumn("_p", pmod(col("user_id"), lit(nParts)).cast("int"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try for (p <- 0 until nParts) {
-        // rank materialized ONCE (zipWithIndex over the persisted
-        // sort), so tie rows can't migrate across segment boundaries
-        // between the count and write jobs — the slicedEventStream
-        // determinism rule
-        // ALL columns in the sort key (ADVICE r14): (ts div 1000,
-        // user_id, value) alone is not a total order, so if the
-        // persisted idx frame were evicted and recomputed between
-        // per-segment write jobs, tie rows could land in a different
-        // _rn range. event_type completes the key → deterministic
-        // recomputation regardless of cache state.
-        val idx = withRowIndex(s, ev.filter(col("_p") === p)
-            .sort(expr("ts div 1000"), col("user_id"), col("value"), col("event_type")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = idx.count()
-        val chunk = math.max(1L, math.ceil(n.toDouble / nSegs).toLong)
-        for (c <- 0 until nSegs) {
-          val lo = c * chunk
-          val hi = math.min((c + 1) * chunk, n)
-          if (hi > lo) {
-            val tmpDir = new java.io.File(scratch, s"_tmp$p-$c")
-            idx.filter(col("_rn") >= lo && col("_rn") < hi)
-              .coalesce(1).sortWithinPartitions("_rn")
-              .select(to_json(struct(
-                col("ts"),
-                col("user_id").cast("string").as("key"),
-                to_json(struct(col("user_id"), col("ts"), col("event_type"),
-                  col("value"))).as("value"))).as("line"))
-              .write.mode("overwrite").text(tmpDir.getAbsolutePath)
-            val f = tmpDir.listFiles().find(_.getName.endsWith(".txt")).get
-            graft.sources.Ledger.registerSegment(
-              new java.io.File(scratch, "t").getAbsolutePath, p, f, hi - lo)
-            tmpDir.listFiles().foreach(_.delete()); tmpDir.delete(): Unit
+      CacheUtil.eager { scope =>
+        val ev = scope.cache(Tables.tsToNanos(s.read.parquet(s"$dir/events.parquet"))
+          .withColumn("_p", pmod(col("user_id"), lit(nParts)).cast("int")))
+        for (p <- 0 until nParts) {
+          // rank materialized ONCE (zipWithIndex over the persisted
+          // sort), so tie rows can't migrate across segment boundaries
+          // between the count and write jobs — the slicedEventStream
+          // determinism rule
+          // ALL columns in the sort key (ADVICE r14): (ts div 1000,
+          // user_id, value) alone is not a total order, so if the
+          // persisted idx frame were evicted and recomputed between
+          // per-segment write jobs, tie rows could land in a different
+          // _rn range. event_type completes the key → deterministic
+          // recomputation regardless of cache state.
+          val idx = scope.cache(withRowIndex(s, ev.filter(col("_p") === p)
+              .sort(expr("ts div 1000"), col("user_id"), col("value"), col("event_type"))))
+          val n = idx.count()
+          val chunk = math.max(1L, math.ceil(n.toDouble / nSegs).toLong)
+          for (c <- 0 until nSegs) {
+            val lo = c * chunk
+            val hi = math.min((c + 1) * chunk, n)
+            if (hi > lo) {
+              val tmpDir = new java.io.File(scratch, s"_tmp$p-$c")
+              idx.filter(col("_rn") >= lo && col("_rn") < hi)
+                .coalesce(1).sortWithinPartitions("_rn")
+                .select(to_json(struct(
+                  col("ts"),
+                  col("user_id").cast("string").as("key"),
+                  to_json(struct(col("user_id"), col("ts"), col("event_type"),
+                    col("value"))).as("value"))).as("line"))
+                .write.mode("overwrite").text(tmpDir.getAbsolutePath)
+              val f = tmpDir.listFiles().find(_.getName.endsWith(".txt")).get
+              graft.sources.Ledger.registerSegment(
+                new java.io.File(scratch, "t").getAbsolutePath, p, f, hi - lo)
+              tmpDir.listFiles().foreach(_.delete()); tmpDir.delete(): Unit
+            }
           }
+          scope.release(idx)
         }
-        idx.unpersist(false)
-      } finally ev.unpersist(false): Unit
+      }
     }
     new java.io.File(root, "t").getAbsolutePath
   }

@@ -1386,9 +1386,6 @@ object ManifestTable {
     */
   private def leafName(n: String): String = n.substring(n.lastIndexOf('/') + 1)
 
-  private def filePaths(table: String, s: Snapshot): Seq[String] =
-    s.files.map(f => dataFile(table, f.name).getAbsolutePath)
-
   def schemaOf(s: Snapshot): Option[org.apache.spark.sql.types.StructType] =
     s.schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
       .asInstanceOf[org.apache.spark.sql.types.StructType])
@@ -2077,14 +2074,13 @@ object ManifestTable {
     // Keys in untouched files cannot collide with delta keys (no range
     // overlap), so the matched set lives entirely in touched files.
     // The touched frame feeds THREE plans (existing-key set, survivor
-    // anti-join, and transitively the insert anti-join) — persist it
+    // anti-join, and transitively the insert anti-join) — cache it
     // so the rewritten files are scanned once, not three times
     // (VERDICT r14 #4).
-    val touchedDf =
-      if (touched.isEmpty) None
-      else Some(readFiles(spark, table, cur, touched)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
+    graft.CacheUtil.eager { scope =>
+      val touchedDf =
+        if (touched.isEmpty) None
+        else Some(scope.cache(readFiles(spark, table, cur, touched)))
       val existingKeys = touchedDf.map(_.select(col(keyCol)).distinct())
       val survivors = touchedDf.map(_.join(delta, Seq(keyCol), "left_anti"))
       val replaced = existingKeys.map(k =>
@@ -2103,7 +2099,7 @@ object ManifestTable {
       // unionByName above throws on a mismatch)
       cur.copy(version = v + 1, op = "upsert",
         files = untouched ++ newFiles) // commit() canonical-orders
-    } finally touchedDf.foreach(_.unpersist(false))
+    }
   }
 
   /** Prefix under which [[merge]] clause conditions see SOURCE
@@ -2322,11 +2318,10 @@ object ManifestTable {
           when(takeSrc, col(SrcPrefix + c))
             .otherwise(lit(null).cast(f.dataType)).as(c)
       }
-      val merged = tDf.join(sDf, tKey === sKey, "full_outer")
-        .filter(keep)
-        .select(outCols :+ takeSrc.as("_from_src"): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      graft.CacheUtil.eager { scope =>
+        val merged = scope.cache(tDf.join(sDf, tKey === sKey, "full_outer")
+          .filter(keep)
+          .select(outCols :+ takeSrc.as("_from_src"): _*))
         enforceConstraints(merged.filter(col("_from_src")).drop("_from_src"),
           cur.constraints, s"merge source into $table")
         val newFiles = writeFiles(spark, table, merged.drop("_from_src"),
@@ -2337,7 +2332,7 @@ object ManifestTable {
           schemaJson = if (extraSrc.isEmpty) cur.schemaJson else Some(st.json),
           colMap = colMapNew,
           txns = cur.txns ++ txn)
-      } finally { merged.unpersist(false); () }
+      }
     }, true) catch { case SkipExit(s) => (s, false) }
   }
 
@@ -2438,9 +2433,8 @@ object ManifestTable {
     commitWithRetry(table) { v =>
       require(v >= 0, s"no manifest in $table/_log")
       val cur = readSnapshot(table, v)
-      val all = readFiles(spark, table, cur, cur.files)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      graft.CacheUtil.eager { scope =>
+        val all = scope.cache(readFiles(spark, table, cur, cur.files))
         val nB = 1 << bitsPerCol
         // ONE multi-column approxQuantile pass (VERDICT r17 #7): the
         // sketch builds for every z column in a single scan of the
@@ -2469,7 +2463,7 @@ object ManifestTable {
         val newFiles = writeFilesPartitioned(spark, table, staged,
           physName(cur)(cur.keyCol), cur.bloomCols, cur.bloomBits)
         cur.copy(version = v + 1, op = "compact", files = newFiles)
-      } finally { all.unpersist(false); () }
+      }
     }
   }
 
@@ -2792,10 +2786,9 @@ object ManifestTable {
       if (priorDvs.isEmpty) Nil
       else Seq(readDvSidecars(spark, table, priorDvs)
         .select(col("f").as("_f"), col("k").as("_k")))
-    val all = (victims.select(col("_f"), col("_k").cast("long").as("_k")) +: prior)
-      .reduce(_ unionByName _).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.CacheUtil.eager { scope =>
+      val all = scope.cache((victims.select(col("_f"), col("_k").cast("long").as("_k")) +: prior)
+        .reduce(_ unionByName _).distinct())
       val totals = all.groupBy("_f").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       dataDir(table).mkdirs() // a shallow clone has no data/ until now
@@ -2825,7 +2818,7 @@ object ManifestTable {
       }
       rmRec(scratch)
       out
-    } finally { all.unpersist(false); () }
+    }
   }
 
   /** Shared merge-on-read tail for the two DV delete paths: stamp the

@@ -275,6 +275,17 @@ class PipelineSpec extends SparkTestBase {
     }
   }
 
+  test("dupClusters fails loudly when maxIters ends before the star fixpoint") {
+    // a 12-node path needs several star rounds; one round cannot reach
+    // the fixpoint, and the result must not be over-split clusters
+    val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](Dedup.dupClusters(pairs, maxIters = 1))
+    assert(e.getMessage.contains("after 1 rounds") && e.getMessage.contains("unconverged"),
+      e.getMessage)
+    val got = Dedup.dupClusters(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (1L to 12L).map(_ -> 1L).toMap)
+  }
+
   test("batched media decode equals the per-row expression path") {
     val media = Multimodal.asImageMedia(
       Seq((1L, "hello world"), (2L, "abc"), (3L, "xyz" * 40)).toDF("doc_id", "text"),
@@ -1344,6 +1355,22 @@ class PipelineSpec extends SparkTestBase {
     // both classes equally sized and all words unseen → scores tie at
     // every token; alphabetical rule picks "ham"
     assert(o2(999L) == "ham")
+  }
+
+  test("nbClassify rejects duplicate test ids at execution, naming the id") {
+    val rows = Seq((1L, "spam", "buy pills"), (2L, "ham", "meeting notes"),
+      (3L, "spam", "cheap pills"), (4L, "ham", "agenda notes"))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    // same label twice (tokens would merge into one score) and two
+    // labels (one row per label) — both fail, neither reshapes
+    Seq((7L, "spam", 7L, "spam"), (7L, "spam", 7L, "ham")).foreach { case (i1, l1, i2, l2) =>
+      val df = (rows ++ Seq((i1, l1, "buy cheap"), (i2, l2, "notes agenda")))
+        .toDF("id", "cls", "text")
+      val out = TextOps.nbClassify(df, "id", "cls", "text", col("id") < 5)
+      val e = intercept[Exception](out.collect())
+      assert(messages(e).contains("duplicate test id in id: 7"), messages(e))
+    }
   }
 
   test("chunk: boundary counts, 16-token overlap, ragged tail, full coverage") {
