@@ -1,7 +1,8 @@
 package graft
 
 import java.lang.ref.{Cleaner, WeakReference}
-import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -10,8 +11,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 /** The one owner of every cache graft creates, with one lifetime
-  * rule: a persisted frame belongs to the [[Scope]] that cached it,
-  * and the scope frees it.
+  * rule: a persisted frame belongs to the [[Scope]]s that cached it,
+  * and the last of them to finish frees it.
   *
   *  - [[eager]]: freed when the body returns or throws — for fits,
   *    probes and commits that finish inside the call.
@@ -26,10 +27,13 @@ import org.apache.spark.storage.StorageLevel
   *    plan, which every derived frame holds strongly. Re-running the
   *    result after its caches are gone recomputes it.
   *
-  * Spark keys its cache by plan, so a scope owns only the entries it
-  * created: caching a plan that is already cached is a no-op, and
-  * freeing skips an entry another scope has since re-created. A
-  * nested scope therefore never frees its caller's cache.
+  * Spark keys its cache by plan, so an entry is reference-counted by
+  * the scopes holding it: caching a plan another scope already cached
+  * joins that entry, and the last holder to free it uncaches it. An
+  * entry cached outside any scope is never joined or freed, and a
+  * scope that fires late skips an entry a later scope re-created. A
+  * nested scope therefore never frees its caller's cache, and a
+  * pending release never frees a rebuilt result's caches.
   */
 object CacheUtil {
 
@@ -39,41 +43,41 @@ object CacheUtil {
     private[CacheUtil] var frames = Vector.empty[(DataFrame, LogicalPlan)]
     // set when a result scope is armed
     private[CacheUtil] var plan: WeakReference[LogicalPlan] = _
+    private[CacheUtil] var planId = 0L // the result's QueryExecution id
     private[CacheUtil] var tracker: Tracker = _
-    private[CacheUtil] val done = new AtomicBoolean(false)
 
     /** Persist `df` MEMORY_AND_DISK under this scope. */
     def cache(df: DataFrame): DataFrame = {
       val m = manager(df)
-      if (m.lookupCachedData(classic(df)).isEmpty) {
-        m.cacheQuery(classic(df), None, StorageLevel.MEMORY_AND_DISK)
-        val key = classic(df).queryExecution.normalized.canonicalized
-        owners.synchronized(owners(key) = this)
-        frames :+= (df -> key)
+      val key = classic(df).queryExecution.normalized.canonicalized
+      val held = owners.synchronized {
+        if (m.lookupCachedData(classic(df)).isEmpty) {
+          m.cacheQuery(classic(df), None, StorageLevel.MEMORY_AND_DISK)
+          owners(key) = mutable.Set.empty
+        }
+        // no holder set: the entry was cached outside any scope
+        owners.get(key).exists(_.add(this))
       }
+      if (held) frames :+= (df -> key)
       df
     }
 
     /** Free one of this scope's caches early: a rolling loop releases
       * round k once round k+1 is cached.
       */
-    def release(df: DataFrame): Unit = {
-      val (mine, rest) = frames.partition(_._1 eq df)
-      frames = rest
-      mine.foreach(uncache)
-    }
+    def release(df: DataFrame): Unit = drop(_ eq df)
 
-    private[CacheUtil] def free(): Unit = {
-      val fs = frames
-      frames = Vector.empty
-      fs.reverseIterator.foreach(uncache) // dependents before their inputs
-    }
+    private[CacheUtil] def free(): Unit = drop(_ => true)
 
-    private def uncache(f: (DataFrame, LogicalPlan)): Unit = {
-      val mine = owners.synchronized {
-        owners.get(f._2).exists(_ eq this) && owners.remove(f._2).isDefined
+    private def drop(which: DataFrame => Boolean): Unit = {
+      val (gone, kept) = frames.partition(f => which(f._1))
+      frames = kept
+      gone.reverseIterator.foreach { case (df, key) => // dependents before their inputs
+        val last = owners.synchronized {
+          owners.get(key).exists(h => h.remove(this) && h.isEmpty && owners.remove(key).isDefined)
+        }
+        if (last) manager(df).uncacheQuery(classic(df), cascade = false, blocking = false)
       }
-      if (mine) manager(f._1).uncacheQuery(classic(f._1), cascade = false, blocking = false)
     }
   }
 
@@ -89,7 +93,17 @@ object CacheUtil {
   def result(body: Scope => DataFrame): DataFrame = {
     val scope = new Scope
     val out = try body(scope) catch { case e: Throwable => scope.free(); throw e }
-    if (scope.frames.nonEmpty) arm(out, scope)
+    if (scope.frames.nonEmpty) {
+      // arm: track the plan derived frames embed (Dataset.logicalPlan)
+      val plan = classic(out).queryExecution.commandExecuted
+      scope.plan = new WeakReference(plan)
+      scope.planId = classic(out).queryExecution.id
+      trackers.synchronized {
+        scope.tracker = trackers.getOrElseUpdate(out.sparkSession, new Tracker(out.sparkSession))
+        scope.tracker.scopes.add(scope)
+      }
+      cleaner.register(plan, () => finish(scope)) // captures the scope, not the plan
+    }
     out
   }
 
@@ -106,53 +120,40 @@ object CacheUtil {
   private def classic(df: DataFrame) = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
   private def manager(df: DataFrame) = classic(df).sparkSession.sharedState.cacheManager
 
-  /** Which scope created the live cache entry for a plan: a scope
-    * frees an entry only while it is the owner, so a scope that fires
-    * late never frees an entry a later scope re-created.
-    */
-  private val owners = scala.collection.mutable.HashMap.empty[LogicalPlan, Scope]
-  private val trackers = scala.collection.mutable.Map.empty[SparkSession, Tracker]
+  /** The scopes holding each live cache entry, by plan key. */
+  private val owners = mutable.HashMap.empty[LogicalPlan, mutable.Set[Scope]]
+  private val trackers = mutable.Map.empty[SparkSession, Tracker]
   private lazy val cleaner = Cleaner.create()
 
-  /** The one listener per session: finishes every armed scope whose
-    * result plan the completed execution contains, and unregisters
-    * itself once none is left.
+  /** The one listener per session, registered on creation: finishes
+    * every armed scope whose result plan the completed execution
+    * contains, and is unregistered once none is left.
     */
   private final class Tracker(val session: SparkSession) extends QueryExecutionListener {
     val scopes = java.util.concurrent.ConcurrentHashMap.newKeySet[Scope]()
+    session.listenerManager.register(this)
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
       fired(qe)
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
       fired(qe)
     // derived frames embed the result plan itself, or — after the
-    // analyzer re-instances a self-joined side — a same-result copy
+    // analyzer re-instances a self-joined side — a same-result copy.
+    // Only an execution planned after the result can be one of its
+    // own: a rebuilt result's plan is the same result as the earlier
+    // build's, whose execution may be reported after the rebuild.
     private def fired(qe: QueryExecution): Unit = scopes.forEach { s =>
       val p = s.plan.get
       if (p != null && (qe.logical.find(_ eq p).isDefined ||
-          qe.analyzed.find(_.sameResult(p)).isDefined)) finish(s)
+          qe.id >= s.planId && qe.analyzed.find(_.sameResult(p)).isDefined)) finish(s)
     }
   }
 
-  private def arm(out: DataFrame, scope: Scope): Unit = {
-    // the plan derived frames embed (Dataset.logicalPlan)
-    val plan = classic(out).queryExecution.commandExecuted
-    scope.plan = new WeakReference(plan)
-    trackers.synchronized {
-      scope.tracker = trackers.getOrElseUpdate(out.sparkSession, {
-        val t = new Tracker(out.sparkSession)
-        out.sparkSession.listenerManager.register(t)
-        t
-      })
-      scope.tracker.scopes.add(scope)
-    }
-    cleaner.register(plan, () => finish(scope)) // captures the scope, not the plan
-  }
-
-  private def finish(s: Scope): Unit = if (s.done.compareAndSet(false, true)) {
+  // the listener and the Cleaner may both fire: the first to remove the
+  // scope from its tracker frees it
+  private def finish(s: Scope): Unit = if (s.tracker.scopes.remove(s)) {
     try s.free()
     finally trackers.synchronized {
       val t = s.tracker
-      t.scopes.remove(s)
       if (t.scopes.isEmpty) {
         t.session.listenerManager.unregister(t)
         trackers.remove(t.session)

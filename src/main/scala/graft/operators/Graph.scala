@@ -78,26 +78,19 @@ object Graph {
     // a 100 TB corpus's edge list exceeds it by orders of magnitude.
     val longKeyed = localThreshold > 0 &&
       undRaw.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (!longKeyed) pregel(scope, undRaw, -1L, iters)
-    else {
-      scope.cache(undRaw)
-      val knownCount = undRaw.count()
-      // over threshold: undRaw stays cached — the distributed branch
-      // reuses it and knownCount, so scale pays ONE pass for the probe
-      // + sizing
-      if (knownCount > localThreshold) pregel(scope, undRaw, knownCount, iters)
-      else {
-        val rows = undRaw.collect()
-        scope.release(undRaw)
-        if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-          pageRankLocal(edges.sparkSession, rows, iters,
-            nodeNullable = undRaw.schema.fields.exists(_.nullable))
-        // null endpoints: the distributed path, whose join/groupBy
-        // null semantics are the contract; cache and count are gone
-        // with the discarded probe
-        else pregel(scope, undRaw, -1L, iters)
-      }
-    }
+    // over threshold, undRaw stays cached: the distributed branch
+    // reuses it and the count, so scale pays ONE pass for the probe +
+    // sizing
+    val knownCount = if (longKeyed) scope.cache(undRaw).count() else -1L
+    val rows = if (longKeyed && knownCount <= localThreshold) undRaw.collect() else null
+    if (rows != null) scope.release(undRaw)
+    if (rows != null && rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+      pageRankLocal(edges.sparkSession, rows, iters,
+        nodeNullable = undRaw.schema.fields.exists(_.nullable))
+    // null endpoints take the distributed path too, whose join/groupBy
+    // null semantics are the contract; cache and count are gone with
+    // the discarded probe
+    else pregel(scope, undRaw, if (rows == null) knownCount else -1L, iters)
   }
 
   /** The distributed Pregel loop over the directed edge list `undRaw`

@@ -1608,13 +1608,14 @@ object TextOps {
     * per-label constants (|labels| is small by construction), then
     * left-joins the model on (label, word) — left UNHINTED so AQE
     * broadcasts a small vocabulary and shuffles a huge one. The
-    * per-document argmax is a min-of-struct hash aggregate over the
+    * per-document argmax is a min-of-struct aggregate over the
     * |labels| rows per doc — bounded groups, partial-aggregated. No
     * collects anywhere.
     *
     * Test ids must be unique: a duplicated id fails the execution
     * with the id in the message (the same aggregate counts each id's
-    * rows), never merges two documents' tokens into one score.
+    * rows against the label count), never merges two documents'
+    * tokens into one score.
     */
   def nbClassify(df: DataFrame, idCol: String, labelCol: String,
                  textCol: String, trainPred: Column): DataFrame = graft.CacheUtil.result { scope =>
@@ -1668,14 +1669,15 @@ object TextOps {
     // winner) instead of a row_number window — one hash agg with
     // map-side partials replaces the window's exchange + sort
     // (round 22, guide §2.3/§2.4); same winner row by construction.
-    // A unique id has one row per label; a duplicated one repeats a
-    // label, which the same aggregate sees as rows > distinct labels.
+    // Each test row is crossed with every label, so a unique id has
+    // exactly one row per label and a duplicated one a multiple of it.
+    val nLabels = labelStats.agg(count(lit(1)).as("_nlab"))
     scores
       .groupBy(col(idCol))
       .agg(min(struct((-col("score_fp")).as("_neg"), col("_l"))).as("_m"),
-        min(col(labelCol)).as(labelCol), count(lit(1)).as("_rows"),
-        collect_set(col("_l")).as("_labels"))
-      .filter(when(col("_rows") =!= size(col("_labels")), raise_error(concat(
+        min(col(labelCol)).as(labelCol), count(lit(1)).as("_rows"))
+      .crossJoin(broadcast(nLabels))
+      .filter(when(col("_rows") =!= col("_nlab"), raise_error(concat(
         lit(s"nbClassify: duplicate test id in $idCol: "),
         coalesce(col(idCol).cast("string"), lit("NULL"))))).otherwise(lit(true)))
       .select(col(idCol), col("_m._l").as("pred_label"), col(labelCol),

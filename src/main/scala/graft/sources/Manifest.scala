@@ -1386,6 +1386,9 @@ object ManifestTable {
     */
   private def leafName(n: String): String = n.substring(n.lastIndexOf('/') + 1)
 
+  private def filePaths(table: String, s: Snapshot): Seq[String] =
+    s.files.map(f => dataFile(table, f.name).getAbsolutePath)
+
   def schemaOf(s: Snapshot): Option[org.apache.spark.sql.types.StructType] =
     s.schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
       .asInstanceOf[org.apache.spark.sql.types.StructType])

@@ -1,8 +1,12 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{Ann, Dedup, TextOps}
 
@@ -10,7 +14,7 @@ import graft.operators.{Ann, Dedup, TextOps}
   * operator creates is freed by the scope that owns it — when an eager
   * body ends, after a lazy result's first execution, or once the
   * result is unreachable — and a nested scope never frees a cache its
-  * caller made.
+  * caller made, nor a pending release a rebuilt result's cache.
   */
 class CacheUtilSpec extends SparkTestBase {
   import spark.implicits._
@@ -88,6 +92,34 @@ class CacheUtilSpec extends SparkTestBase {
     assert(cacheManager.isEmpty && nb.columns.nonEmpty)
   }
 
+  test("a result rebuilt before the first build's release keeps its caches") {
+    spark.catalog.clearCache()
+    val base = docs.filter(col("id") > 1)
+    def build(): DataFrame = CacheUtil.result(_.cache(base).groupBy("cls").count())
+    val first = build()
+    val second = build() // before the first runs: joins its cache entry
+    // registered after the cache-lifetime listener, so it sees the first
+    // execution only once that listener has released the first build
+    val released = new CountDownLatch(1)
+    val probe = new QueryExecutionListener {
+      private def seen(qe: QueryExecution): Unit =
+        if (qe.analyzed.sameResult(first.queryExecution.analyzed)) released.countDown()
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
+    }
+    spark.listenerManager.register(probe)
+    try {
+      assert(first.collect().length == 2)
+      assert(released.await(10, TimeUnit.SECONDS), "the first execution was never reported")
+    } finally spark.listenerManager.unregister(probe)
+    assert(cached(base), "the first build's release freed the second build's cache")
+    assert(second.queryExecution.withCachedData.collect { case m: InMemoryRelation => m }.nonEmpty)
+    assert(second.collect().length == 2)
+    eventually("the second build's cache outlived its execution") {
+      cacheManager.isEmpty && !listening
+    }
+  }
+
   test("an eager scope frees its caches when its body throws") {
     spark.catalog.clearCache()
     val df = docs.filter(col("id") > 1)
@@ -117,6 +149,7 @@ class CacheUtilSpec extends SparkTestBase {
       Ann.knnGraphFrom(knn).collect()
       assert(cached(knn) && cached(df), "the result scope freed the caller's cache")
     }
-    assert(cacheManager.isEmpty)
+    // the result joined the caller's knn entry: whichever finishes last frees it
+    eventually("caches outlived both scopes")(cacheManager.isEmpty)
   }
 }
