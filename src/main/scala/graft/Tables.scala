@@ -166,4 +166,17 @@ object Tables {
       }
     } finally if (scratch.exists()) rmTree(scratch)
   }
+
+  /** Write `df` as the ONE parquet file `target`, the testdata layout
+    * DuckDB's oracle views and a plain (non-recursive) read expect:
+    * write a temp dir beside it, move the part file in.
+    */
+  def writeSingleFile(df: DataFrame, target: java.io.File): Unit = {
+    val tmp = new java.io.File(target.getParentFile, s"_tmp_${target.getName}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+    val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, target.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    rmTree(tmp)
+  }
 }

@@ -565,9 +565,6 @@ object Bridge {
   // (ascending-index dot products; argmax ties -> smallest id; argmin
   // ties -> smallest cell), so scores, fits, and oracles are unchanged.
 
-  private def mat(a: ArrayData): Array[Array[Double]] =
-    Array.tabulate(a.numElements())(i => a.getArray(i).toDoubleArray())
-
   /** argmax_i ⟨v, cents[i]⟩ -> ids[i]; ties -> the earliest (ids must
     * ascend, matching the old max(d, −cid) struct rule). */
   def ivfCell(v: ArrayData, cents: ArrayData, ids: ArrayData): Int = {

@@ -47,30 +47,17 @@ object Dedup {
     * split is materialized behind a hash exchange on the id: this (a)
     * computes the regex split exactly once per doc (the exchange stops
     * Catalyst's project-collapsing from inlining it into the shingle
-    * lambda), (b) spreads small single-file scans across the cluster,
-    * and (c) pre-partitions by id so the downstream minhash groupBy
-    * reuses the exchange instead of shuffling again.
+    * lambda), (b) spreads the shingle/minhash kernels over
+    * [[graft.Width.of]] partitions, and (c) pre-partitions by id so the
+    * downstream minhash groupBy reuses the exchange instead of
+    * shuffling again.
     */
   def shingleFrame(df: DataFrame, idCol: String, textCol: String,
-                   tok: Column => Column = TextOps.unicodeTokens): DataFrame = {
-    // EXPLICIT partition count (optimization round 22, guide §2.5):
-    // the count-less `repartition(col(idCol))` let AQE size the
-    // exchange by BYTES, and token arrays are tiny — the post-exchange
-    // stage (shingle explode + k×md5 minhash partials) coalesced to
-    // 2 tasks while 30 cores idled (measured: a 2-task 2.2–2.8 s
-    // stage carrying ~5 s of kernel CPU; dedup_minhash_unicode
-    // 3.5 → ~1.4 s solo with the explicit count). These rows are
-    // compute-heavy, not byte-heavy — the spreadByKey rule. The count
-    // keeps the INPUT's parallelism when it is already wider (a
-    // 100 TB corpus arriving in thousands of splits), and floors at
-    // defaultParallelism for single-file local scans.
-    val p = math.max(df.sparkSession.sparkContext.defaultParallelism,
-      df.rdd.getNumPartitions)
+                   tok: Column => Column = TextOps.unicodeTokens): DataFrame =
     df.select(col(idCol), tok(col(textCol)).as("_ws"))
-      .repartition(p, col(idCol))
+      .repartition(graft.Width.of(df), col(idCol))
       .filter(size(col("_ws")) >= 3)
       .select(col(idCol), explode(shingles(col("_ws"))).as("s"))
-  }
 
   /** MinHash signatures: k independent permutations approximated by
     * min over the leading 60 bits of md5(seed || shingle) as BIGINT
@@ -540,14 +527,9 @@ object Dedup {
     require(maxEdits >= 1, "maxEdits must be >= 1")
     val norm = df.select(col(idCol), graft.operators.TextOps.normalize(col(textCol)).as("_nt"))
     pairs
-      // EXPLICIT-count repartition before the CPU-bound DP (the media
-      // decoder's fix, round 10): AQE sizes partitions by BYTES, so a
-      // few MB of narrow pair rows coalesce onto 1-2 tasks and the
-      // verify runs on 2 of 32 cores. A user-specified partition count
-      // is exempt from AQE coalescing; the pair rows are 24 bytes, so
-      // the spreading shuffle is ~free.
-      .repartition(df.sparkSession.sparkContext.defaultParallelism,
-        col("a"), col("b"))
+      // spread the CPU-bound DP; the pair rows are 24 bytes, so the
+      // shuffle is ~free
+      .repartition(graft.Width.of(pairs), col("a"), col("b"))
       .join(norm.select(col(idCol).as("a"), col("_nt").as("_ta")), Seq("a"))
       .join(norm.select(col(idCol).as("b"), col("_nt").as("_tb")), Seq("b"))
       .withColumn("lev", levenshtein(col("_ta"), col("_tb"), maxEdits).cast("long"))

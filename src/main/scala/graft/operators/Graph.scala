@@ -32,19 +32,14 @@ object Graph {
     * production float PageRank would quantize per superstep the same
     * way to stay replayable.
     *
-    * Scale shape: the classic Pregel-lite loop — per iteration, one
-    * equi-join of the directed edge list against the rank table on the
-    * source node (edge-partitioned; AQE broadcasts small rank tables)
-    * and one partial-aggregatable hash agg summing contributions per
-    * destination. Iterations are FIXED (default 5), so the plan is a
-    * static chain — no driver-side convergence loop, no collect; the
-    * node count arrives as a broadcast one-row frame. The repeated
-    * edge-list/degree subtrees are cached (see below) — PlanShapeSpec
-    * pins the InMemoryTableScan reads from the Pregel cache in the
-    * executed plan so a Spark upgrade or plan edit can't silently
-    * recompute the edge scan once per superstep. The two bounded
-    * frames are cached until the result's first execution (the
-    * [[graft.CacheUtil.result]] rule).
+    * Scale shape: the Pregel-lite loop — per iteration, one equi-join
+    * of the directed edge list against the rank table on the source
+    * (AQE broadcasts small rank tables) and one partial-aggregatable
+    * sum per destination. Iterations are FIXED (default 5): a static
+    * plan chain, no convergence loop; the node count arrives as a
+    * broadcast one-row frame. The edge-list/degree subtrees are cached
+    * until the result's first execution ([[graft.CacheUtil.result]]);
+    * PlanShapeSpec pins their InMemoryTableScan reads.
     *
     * Nodes are the edge endpoints (an isolated document simply keeps
     * no rank row — rank flows along edges by definition). In an
@@ -58,39 +53,44 @@ object Graph {
     require(iters >= 0 && iters <= 50, "iters must be in [0, 50]")
     val undRaw = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-    // Driver fast path (optimization round 22; the bpeTrain /
-    // bpeBytesTrain precedent): the five supersteps are a chain of
-    // ~4 tiny stages each — broadcast job per rank table, a 32-task
-    // shuffle per contribution agg — and on a small graph the whole
-    // query is per-stage scheduling overhead (measured: ~60 stages of
-    // 150-250 ms wall with < 10 ms of work each; graph_pagerank 3.7 s
-    // warm for a 2k-edge graph). Below the threshold (directed edge
-    // count; ~50 MB collected at the default) the edge list collects
-    // ONCE and the Pregel loop runs in-memory — one Spark job instead
-    // of ~4 per superstep. Bit-identical by construction: every step
-    // is the same long add / multiply / floor-div over the same
-    // multiset (integer sums commute, so accumulation order cannot
-    // matter — the property the fp6 design bought), and
-    // PipelineSpec's fast-vs-distributed equality test pins it.
-    // Long-keyed graphs only (the declared queries' vec_id edges);
-    // anything else — other key types, null endpoints — takes the
-    // distributed path unchanged. At scale the threshold never fires:
-    // a 100 TB corpus's edge list exceeds it by orders of magnitude.
+    // Driver fast path (round 22; the bpeTrain precedent): on a small
+    // graph the five supersteps are ~60 stages of 150-250 ms wall with
+    // < 10 ms of work each (graph_pagerank 3.7 s warm on 2k edges). At
+    // or below `localThreshold` directed Long edges the edge list
+    // collects ONCE, as primitive long[] per partition (~75 MB of
+    // driver heap at the 2M default, the edge cache included; a boxed
+    // Row collect held ~350 MB), and the loop runs in memory: one
+    // Spark job. Bit-identical: the same long add / multiply /
+    // floor-div over the same multiset (integer sums commute), pinned
+    // by PipelineSpec's fast-vs-distributed test. Other key types and
+    // null endpoints take the distributed path; a 100 TB corpus's edge
+    // list exceeds the threshold by orders of magnitude.
     val longKeyed = localThreshold > 0 &&
       undRaw.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
-    // over threshold, undRaw stays cached: the distributed branch
-    // reuses it and the count, so scale pays ONE pass for the probe +
-    // sizing
+    // over threshold the distributed branch reuses the cache and the
+    // count: scale pays ONE pass for the probe + sizing
     val knownCount = if (longKeyed) scope.cache(undRaw).count() else -1L
-    val rows = if (longKeyed && knownCount <= localThreshold) undRaw.collect() else null
-    if (rows != null) scope.release(undRaw)
-    if (rows != null && rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-      pageRankLocal(edges.sparkSession, rows, iters,
+    val parts = if (longKeyed && knownCount <= localThreshold) collectEdges(undRaw) else null
+    if (parts != null) scope.release(undRaw)
+    if (parts != null && parts.forall(_._3))
+      pageRankLocal(edges.sparkSession, parts, iters,
         nodeNullable = undRaw.schema.fields.exists(_.nullable))
-    // null endpoints take the distributed path too, whose join/groupBy
-    // null semantics are the contract; cache and count are gone with
-    // the discarded probe
-    else pregel(scope, undRaw, if (rows == null) knownCount else -1L, iters)
+    // null endpoints take the distributed path too (its join/groupBy
+    // null semantics are the contract), without the released cache
+    else pregel(scope, undRaw, if (parts == null) knownCount else -1L, iters)
+  }
+
+  /** Per partition: (src, dst) as primitive arrays, and "no null endpoint". */
+  private def collectEdges(und: DataFrame): Array[(Array[Long], Array[Long], Boolean)] = {
+    val spark = und.sparkSession
+    import spark.implicits._
+    und.mapPartitions { it =>
+      val (src, dst) = (Array.newBuilder[Long], Array.newBuilder[Long])
+      var ok = true
+      it.foreach(r => if (r.isNullAt(0) || r.isNullAt(1)) ok = false
+        else { src += r.getLong(0); dst += r.getLong(1) })
+      Iterator((src.result(), dst.result(), ok))
+    }.collect()
   }
 
   /** The distributed Pregel loop over the directed edge list `undRaw`
@@ -98,44 +98,24 @@ object Graph {
     */
   private def pregel(scope: graft.CacheUtil.Scope, undRaw: DataFrame,
                      knownCount: Long, iters: Int): DataFrame = {
-    // Pregel truncates then caches the graph. Truncation first: the
-    // edge list is itself the output of an expensive kNN/similarity
-    // stage whose logical plan every superstep would otherwise embed
-    // TWICE (und + deg) — five supersteps over an IVF-PQ-shortlist
-    // lineage made driver-side analysis/canonicalization the dominant
-    // cost (round-14 probe: 4-5 s planning per downstream action on a
-    // 200-node graph). A reliable checkpoint (the dupClusters pattern
-    // — cache so the checkpoint's write pass reads the cache, then
-    // eager checkpoint, then release the pre-image) cuts the
-    // superstep plan to a scan of the materialized edge RDD, and on a
-    // cluster survives executor loss (set
-    // `spark.sparkContext.setCheckpointDir` to durable storage; a
-    // temp-dir default is installed for local runs).
-    // Caching second: und/deg are referenced by EVERY superstep, and
-    // exchange reuse deduplicates within one stage graph but not
-    // across AQE replans — the ×100 probe measured the brute edge
-    // stage recomputed ~10× without this (531 s → see SURVEY §4).
-    // Both frames are bounded (2·|E| and n rows); GraphX's Pregel
-    // holds the same two cached, freed after the result's first
-    // execution.
+    // Truncate, then cache. The edge list is the output of an
+    // expensive kNN/similarity stage whose plan every superstep would
+    // embed twice (und + deg): round 14 measured 4-5 s of planning per
+    // action on a 200-node graph. A reliable checkpoint (cache, eager
+    // checkpoint, release the pre-image: the dupClusters pattern) cuts
+    // the superstep plan to a scan and survives executor loss (point
+    // `setCheckpointDir` at durable storage; local runs get a temp
+    // dir). und/deg are read by EVERY superstep, and exchange reuse
+    // does not cross AQE replans: without the caches the ×100 probe
+    // recomputed the edge stage ~10× (531 s, SURVEY §4). Both are
+    // bounded (2·|E| and n rows), as in GraphX's Pregel.
     val und = if (iters >= 1) {
       graft.CacheUtil.ensureCheckpointDir(undRaw.sparkSession)
       scope.cache(undRaw)
-      // Size the Pregel frame's partitioning by the EDGE COUNT, not by
-      // whatever partitioning the upstream similarity stage left
-      // behind (optimization round 21, guide §2 "derive partitioning
-      // from input size"): the union inherited 2× the input's
-      // partitions, so five supersteps over a 2k-edge graph scheduled
-      // ~30 stages of 64 near-empty tasks each (measured: 0.45 s
-      // stage walls with ~30 ms of work). ~2M directed-edge rows
-      // (~100 MB) per partition; the count reads the just-built
-      // cache, and every downstream result is exact-integer and
-      // partitioning-independent.
-      val p = math.max(1L,
-        ((if (knownCount >= 0) knownCount else undRaw.count()) + 1999999L)
-          / 2000000L).toInt
-      val sized = undRaw.coalesce(math.min(p,
-        math.max(1, undRaw.rdd.getNumPartitions)))
+      // size by the edge count, not by the upstream stage's
+      // partitioning; the count reads the just-built cache
+      val sized = undRaw.coalesce(graft.Width.state(undRaw,
+        if (knownCount >= 0) knownCount else undRaw.count()))
       val cp = sized.checkpoint(eager = true)
       scope.release(undRaw)
       scope.cache(cp)
@@ -165,39 +145,39 @@ object Graph {
     * exactly the distributed recurrence (r⁰ = 10⁶ div n; contrib =
     * r div deg; rᵗ⁺¹ = 150000 div n + 17·Σ div 20), all long
     * arithmetic, so the ranks are bit-identical to any distributed
-    * merge order. `und` carries BOTH orientations (the caller's
-    * union), so the node set (= distinct sources) and the degree
-    * multiset match the distributed groupBy exactly, self-loops and
-    * duplicate edges included.
+    * merge order. The edges carry BOTH orientations (the caller's
+    * union), so the node set is the distinct sources, every
+    * destination among them, and the degree multiset matches the
+    * distributed groupBy exactly, self-loops and duplicate edges
+    * included.
     */
   private def pageRankLocal(spark: org.apache.spark.sql.SparkSession,
-                            und: Array[org.apache.spark.sql.Row],
+                            parts: Array[(Array[Long], Array[Long], Boolean)],
                             iters: Int, nodeNullable: Boolean): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val nE = und.length
-    val idx = new java.util.HashMap[Long, Integer](math.max(16, nE))
-    val nodes = new scala.collection.mutable.ArrayBuffer[Long]()
-    def id(v: Long): Int = {
-      val e = idx.get(v)
-      if (e != null) e.intValue
-      else { val i = nodes.length; idx.put(v, i); nodes += v; i }
-    }
-    val srcI = new Array[Int](nE)
-    val dstI = new Array[Int](nE)
+    val nE = parts.map(_._1.length).sum
+    // node index: position in the sorted distinct sources
+    val nodes = new Array[Long](nE)
     var i = 0
+    parts.foreach { case (s, _, _) => System.arraycopy(s, 0, nodes, i, s.length); i += s.length }
+    java.util.Arrays.sort(nodes)
+    var n = 0
+    i = 0
     while (i < nE) {
-      srcI(i) = id(und(i).getLong(0))
-      dstI(i) = id(und(i).getLong(1))
+      if (n == 0 || nodes(i) != nodes(n - 1)) { nodes(n) = nodes(i); n += 1 }
       i += 1
     }
-    val n = nodes.length
-    val out = new java.util.ArrayList[Row](n)
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullable = nodeNullable),
-      StructField("deg", LongType, nullable = false),
-      StructField("r_fp", LongType, nullable = true)))
-    if (n == 0) return spark.createDataFrame(out, schema)
+    val (srcI, dstI) = (new Array[Int](nE), new Array[Int](nE))
+    i = 0
+    parts.foreach { case (s, d, _) =>
+      var j = 0
+      while (j < s.length) {
+        srcI(i) = java.util.Arrays.binarySearch(nodes, 0, n, s(j))
+        dstI(i) = java.util.Arrays.binarySearch(nodes, 0, n, d(j))
+        i += 1; j += 1
+      }
+    }
     val deg = new Array[Long](n)
     i = 0; while (i < nE) { deg(srcI(i)) += 1L; i += 1 }
     val ranks = Array.fill(n)(1000000L / n)
@@ -212,8 +192,11 @@ object Graph {
       while (v < n) { ranks(v) = 150000L / n + 17L * sums(v) / 20L; v += 1 }
       t += 1
     }
-    var v = 0
-    while (v < n) { out.add(Row(nodes(v), deg(v), ranks(v))); v += 1 }
-    spark.createDataFrame(out, schema)
+    val schema = StructType(Seq(
+      StructField("node", LongType, nullable = nodeNullable),
+      StructField("deg", LongType, nullable = false),
+      StructField("r_fp", LongType, nullable = true)))
+    spark.createDataFrame(java.util.Arrays.asList(
+      Array.tabulate[Row](n)(v => Row(nodes(v), deg(v), ranks(v))): _*), schema)
   }
 }

@@ -50,11 +50,8 @@ object Multimodal {
         s"asImageMedia: unsupported format '$other' (bmp|png|jpeg)")
     }
     // spread the CPU-bound render (and the decode kernels consuming it
-    // in the same stage) across the cluster: the input rows are tiny
-    // text, so this repartition is cheap, while a single-file source
-    // would otherwise pin every ImageIO call to one scan task
-    df.filter(length(col(textCol)) > 0)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    // in the same stage)
+    graft.Width.spread(df.filter(length(col(textCol)) > 0))
       .select(
         col(idCol).as("media_id"),
         synth.as("content"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.CacheUtil
+import graft.{CacheUtil, Width}
 import graft.Tables.{load, fp2, fp4, fp6, fpSql}
 import graft.operators.{Ann, Dedup, Multimodal, TextOps}
 
@@ -14,45 +14,13 @@ import graft.operators.{Ann, Dedup, Multimodal, TextOps}
   */
 object Pipeline {
 
-  /** CPU-parallelism fix (optimization round 21, guide §2.5 "input
-    * skew"): each testdata table is ONE parquet file with one row
-    * group, so every map-side expression downstream of a bare scan —
-    * shingling, minhash, simhash, BPE, winnowing, image/audio codecs —
-    * ran in a SINGLE task (stage profiles showed 1-task stages of
-    * 0.4–3.4 s dominating the dedup/text/bpe queries while 31 cores
-    * idled). A deterministic hash repartition on the id spreads the
-    * kernel CPU across the session's parallelism; the explicit count
-    * keeps AQE from coalescing the tiny-by-bytes frame back to one
-    * partition (these rows are compute-heavy, not byte-heavy). Every
-    * downstream result is partitioning-independent (per-row exprs,
-    * exact aggregations, explicit ORDER BY), and filters/pruning push
-    * through a RepartitionByExpression. At 100 TB inputs arrive in
-    * thousands of splits and this exchange is a no-op cost; a
-    * single-file local table is exactly the "one huge unsplittable
-    * input" case the guide calls out.
+  /** The documents table, spread on doc_id by [[graft.Width.spread]]
+    * for the compute-heavy text, dedup and image kernels downstream
+    * (filters and pruning push through the RepartitionByExpression).
     */
   private def docs(s: SparkSession, dir: String): DataFrame = {
     graft.functions.Functions.install(s)
-    spreadByKey(load(s, dir, "documents"), "doc_id")
-  }
-
-  /** Gate the parallelism repartition on the MEASURED scan parallelism
-    * (optimization round 22, VERDICT r21 #1): the round-21 version
-    * repartitioned unconditionally, which at 100 TB would add a full
-    * corpus exchange in front of map-only kernels whose input already
-    * arrives in thousands of splits. `df.rdd.getNumPartitions` is
-    * driver-side physical planning (no job); when the scan already
-    * yields at least half the session's parallelism the frame passes
-    * through UNTOUCHED — zero Exchange in the plan. The single-file
-    * local testdata still triggers the spread (1 partition < 16), so
-    * the sf0.1 bench and every oracle result are unchanged
-    * (downstream results are partitioning-independent: per-row exprs,
-    * exact aggs, explicit sorts).
-    */
-  private[graft] def spreadByKey(df: DataFrame, key: String): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= math.max(1, target / 2)) df
-    else df.repartition(target, col(key))
+    Width.spread(load(s, dir, "documents"), "doc_id")
   }
 
   /** embeddings stays UNREPARTITIONED: unlike the text kernels, every
@@ -2394,25 +2362,10 @@ object Pipeline {
     val m = greatest(size(ws) - (n - 1), lit(0)) // 0 for short docs
     val parts = (0 until n).map(k => slice(ws, lit(k + 1), m))
     val comp = parts.reduceLeft((a, b) => zip_with(a, b, (x, y) => concat(x, y)))
-    // Hash-repartition by doc_id BEFORE the compound expression
-    // (optimization round 21, guide §2.5 "input skew"): the documents
-    // table is one parquet file, so the scan — and everything persisted
-    // downstream of it — was ONE partition, making the fit's histogram
-    // build and the whole map-side encode single-threaded (measured
-    // 2.8 s + 2.4 s single-task stages at sf0.1). Partition count
-    // follows spark.sql.shuffle.partitions (scale-adaptive), the split
-    // is deterministic (hash of doc_id), and every downstream result
-    // is partitioning-independent (exact-integer aggregation).
-    // Explicit partition count: AQE coalesces a size-based repartition
-    // of this ~600 KB frame back to ONE partition, but the downstream
-    // cost is CPU per row (lattice/Viterbi kernels), not bytes —
-    // defaultParallelism is the scale-adaptive choice for a
-    // compute-bound frame. Round 22: gated via spreadByKey (VERDICT
-    // r21 #1) — uDocs already rides docs()'s gated spread, so when
-    // that one fired (single-file local scan) this is a no-op
-    // pass-through instead of a second exchange, and when the input
-    // arrives pre-split at scale neither fires.
-    spreadByKey(uDocs(s, dir), "doc_id")
+    // spread BEFORE the compound expression: the fit's histogram build
+    // and the map-side encode both run on this frame (a pass-through
+    // when uDocs already rides docs()'s spread)
+    Width.spread(uDocs(s, dir), "doc_id")
       .withColumn("_cw", array_join(comp, " "))
       .select(col("doc_id"), col("_cw"))
   }
@@ -5457,11 +5410,9 @@ object Pipeline {
     */
   def mmFrames(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Functions.dsl._
-    val en = docs(s, dir)
-      .filter(col("lang") === "en" && length(col("text")) > 0)
-      // same CPU-spread as asImageMedia: render+demux parallelize
-      // regardless of source file layout
-      .repartition(s.sparkContext.defaultParallelism)
+    // render + demux are CPU-bound: spread like asImageMedia
+    val en = Width.spread(docs(s, dir)
+      .filter(col("lang") === "en" && length(col("text")) > 0))
     Multimodal.sampleFrames(
       en.select(col("doc_id").as("media_id"),
         concat(synthBmpC(col("text"), 8, 8, 0),

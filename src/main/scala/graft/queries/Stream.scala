@@ -90,16 +90,10 @@ object Stream {
           .withColumn("_c", expr(s"_rn div $chunk")))
         scratch.mkdirs()
         for (c <- 0 until nFiles) {
-          val tmpDir = new java.io.File(scratch, s"_tmp$c")
-          idx.filter(col("_c") === c).drop("_rn", "_c")
-            .coalesce(1).write.mode("overwrite").parquet(tmpDir.getAbsolutePath)
-          val part = tmpDir.listFiles().find(_.getName.endsWith(".parquet")).get
           val tgt = new java.io.File(scratch, f"ev_$c%03d.parquet")
-          java.nio.file.Files.move(part.toPath, tgt.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          graft.Tables.writeSingleFile(idx.filter(col("_c") === c).drop("_rn", "_c"), tgt)
           // distinct ascending mtimes pin the FileStreamSource batch order
-          tgt.setLastModified(1700000000000L + c * 60000L)
-          tmpDir.listFiles().foreach(_.delete()); tmpDir.delete(): Unit
+          tgt.setLastModified(1700000000000L + c * 60000L): Unit
         }
       }
     }

@@ -121,16 +121,9 @@ object Sources {
       val data = new java.io.File(scratch, "data")
       data.mkdirs()
       // one FILE per generation in the same directory (a plain read
-      // does not recurse into non-partition subdirs): write to a tmp
-      // dir, move the part file in — the ScaleUp writeSingle pattern
-      def writeSingle(df: DataFrame, name: String): Unit = {
-        val tmp = new java.io.File(scratch, s"_tmp_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          new java.io.File(data, s"$name.parquet").toPath)
-        tmp.listFiles().foreach(_.delete()); tmp.delete(): Unit
-      }
+      // does not recurse into non-partition subdirs)
+      def writeSingle(df: DataFrame, name: String): Unit =
+        graft.Tables.writeSingleFile(df, new java.io.File(data, s"$name.parquet"))
       writeSingle(d.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("text"), col("lang"), lit(1).as("gen")), "g1")
       writeSingle(d.filter(col("doc_id") % 2 =!= 0)

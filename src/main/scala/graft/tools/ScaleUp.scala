@@ -46,17 +46,8 @@ object ScaleUp {
           java.nio.file.Files.createSymbolicLink(
             new java.io.File(scratch, s"$t.parquet").toPath,
             new java.io.File(s"$base/$t.parquet").toPath)
-        // single-FILE tables (coalesce + move the part file), matching
-        // the base testdata layout — DuckDB's oracle views read the
-        // path as one parquet file, not a Spark directory
-        def writeSingle(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-          val tmp = new java.io.File(scratch, s"_tmp_$name")
-          df.coalesce(1).write.parquet(tmp.getAbsolutePath)
-          val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(scratch, s"$name.parquet").toPath)
-          tmp.listFiles().foreach(_.delete()); tmp.delete(): Unit
-        }
+        def writeSingle(df: org.apache.spark.sql.DataFrame, name: String): Unit =
+          graft.Tables.writeSingleFile(df, new java.io.File(scratch, s"$name.parquet"))
         val docs = spark.read.parquet(s"$base/documents.parquet")
         writeSingle((0 until factor).map { k =>
           docs.withColumn("doc_id", col("doc_id") + lit(k * 10000000L))

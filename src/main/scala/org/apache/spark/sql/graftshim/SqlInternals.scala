@@ -74,3 +74,8 @@ object ThreadInternals {
     org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(body)
 }
+
+object BusInternals {
+  /** Block until the `private[spark]` listener bus has delivered every queued event. */
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty(30000L)
+}

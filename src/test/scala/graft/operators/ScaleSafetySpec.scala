@@ -3,8 +3,9 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
 
-/** Round-22 scale-safety internals: the gated corpus spread
-  * (Pipeline.spreadByKey) and the EM partial-count merge kernel
+/** Scale-safety internals: the partition-width rule (graft.Width) at
+  * its call sites — a wide input is never narrowed and a builder runs
+  * no job to size it — and the EM partial-count merge kernel
   * (Unigram.mergePartials) that backs the executor-side treeReduce.
   */
 class ScaleSafetySpec extends SparkTestBase {
@@ -13,26 +14,79 @@ class ScaleSafetySpec extends SparkTestBase {
   private def exchanges(df: DataFrame): Int =
     "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).length
 
-  test("spreadByKey: pre-split input passes through with ZERO added exchange") {
+  private def dp: Int = spark.sparkContext.defaultParallelism
+
+  private def docsOf(numPartitions: Int): DataFrame =
+    spark.range(0, 400, 1, numPartitions)
+      .selectExpr("id AS doc_id", "concat('w', id % 7, ' x y z ', id) AS text")
+
+  test("Width.spread: pre-split input passes through, zero added exchange") {
     val preSplit = spark.range(0, 1000, 1,
         numPartitions = spark.sparkContext.defaultParallelism)
       .selectExpr("id AS doc_id", "CAST(id AS STRING) AS text")
-    val out = graft.queries.Pipeline.spreadByKey(preSplit, "doc_id")
+    val out = graft.Width.spread(preSplit, "doc_id")
     assert(exchanges(out) == exchanges(preSplit),
       "a scan already at session parallelism must not pay a repartition")
     assert(out.rdd.getNumPartitions == preSplit.rdd.getNumPartitions)
   }
 
-  test("spreadByKey: single-split input spreads to defaultParallelism on the key") {
+  test("Width.spread: single-split input spreads to parallelism on the key") {
     val narrow = spark.range(0, 1000, 1, numPartitions = 1)
       .selectExpr("id AS doc_id", "CAST(id AS STRING) AS text")
-    val out = graft.queries.Pipeline.spreadByKey(narrow, "doc_id")
+    val out = graft.Width.spread(narrow, "doc_id")
     assert(out.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
     assert(out.queryExecution.executedPlan.toString.contains("hashpartitioning(doc_id"),
       "the spread must be a deterministic hash repartition on the key")
     // partitioning must not change row content
     assert(out.as[(Long, String)].collect().sortBy(_._1).toSeq ==
       narrow.as[(Long, String)].collect().sortBy(_._1).toSeq)
+  }
+
+  test("asImageMedia: a 2x-parallelism input adds no exchange, keeps width") {
+    val wide = docsOf(2 * dp)
+    val media = Multimodal.asImageMedia(wide, "doc_id", "text", w = 8, h = 8)
+    assert(exchanges(media) == exchanges(wide),
+      "an input wider than the session must not be re-exchanged")
+    assert(media.rdd.getNumPartitions == 2 * dp)
+  }
+
+  test("editVerify: a pair frame wider than parallelism keeps its width") {
+    val pairs = spark.range(0, 200, 1, 2 * dp)
+      .selectExpr("id AS a", "(id + 1) % 200 AS b", "0 AS hamming")
+    val out = Dedup.editVerify(docsOf(1), "doc_id", "text", pairs)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(s"hashpartitioning\\(a#\\d+L?, b#\\d+L?, ${2 * dp}\\)".r.findFirstIn(plan).nonEmpty,
+      s"the DP's spread must keep the pairs' ${2 * dp} partitions:\n$plan")
+  }
+
+  test("shingleFrame: building over a shuffled frame launches no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftshim.BusInternals
+    // count only jobs this thread starts while building (the tag is a
+    // local property, inherited by nothing else the suite runs)
+    val (tag, jobs) = ("graft.test.build", new java.util.concurrent.atomic.AtomicInteger)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val shuffled = docsOf(1).repartition(dp, $"doc_id") // docs()'s spread
+      spark.sparkContext.setLocalProperty(tag, "shingleFrame")
+      val sh = try Dedup.shingleFrame(shuffled, "doc_id", "text")
+        finally spark.sparkContext.setLocalProperty(tag, null)
+      BusInternals.drain(spark.sparkContext)
+      assert(jobs.get == 0, "sizing the shingle exchange must not run the upstream shuffle")
+      assert(sh.count() > 0)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("shingleFrame: an input wider than parallelism keeps its width") {
+    val wide = docsOf(3 * dp)
+    val sh = Dedup.shingleFrame(wide, "doc_id", "text")
+    assert(sh.queryExecution.executedPlan.toString.contains("hashpartitioning(doc_id#"),
+      "the shingle exchange is a hash split on the id")
+    assert(sh.rdd.getNumPartitions == 3 * dp)
   }
 
   test("mergePartials: exact BigInteger sums, merge-tree invariant") {
