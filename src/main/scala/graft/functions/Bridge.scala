@@ -10,10 +10,12 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.dsp.{Conv, Fft, Filt, Hilbert, Peaks, Resample, Spectral, Wavelet}
 
 /** Static kernel entry points on Catalyst runtime types (ArrayData
-  * in/out, UTF8String params). Every method here is called directly
-  * from generated code (see [[DspExpr.doGenCode]]) as
+  * in/out, UTF8String params). A kernel is declared once: its method
+  * here plus its [[signatures]] entry. Generated code calls the method
+  * directly (see [[DspExpr.doGenCode]]) as
   * `graft.functions.Bridge.<name>(...)` — no boxing, no closure
-  * serialization, one static call per group-row.
+  * serialization, one static call per group-row — and the interpreted
+  * [[DspExpr.eval]] invokes the same method.
   */
 object Bridge {
 
@@ -1068,7 +1070,8 @@ object Bridge {
   // ---- signatures for DspExpr --------------------------------------
 
   /** Catalyst argument/return types per bridge function; the generic
-    * [[DspExpr]] uses this to type-check and to pick codegen casts.
+    * [[DspExpr]] uses this to type-check and to resolve the static
+    * method both of its evaluation paths call.
     */
   val signatures: Map[String, (Seq[DataType], DataType)] = Map(
     "fft" -> (Seq(arrD, arrD, IntegerType, StringType) -> complexT),
@@ -1212,95 +1215,4 @@ object Bridge {
       -> ArrayType(StructType(Seq(
         StructField("p", StringType, nullable = false),
         StructField("e", LongType, nullable = false))), containsNull = false)))
-
-  /** Interpreted-path dispatch (mirrors the static calls codegen makes). */
-  def dispatch(fn: String, a: Array[Any]): Any = fn match {
-    case "fft" => fft(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Int], a(3).asInstanceOf[UTF8String])
-    case "ifft" => ifft(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Int], a(3).asInstanceOf[UTF8String])
-    case "rfft" => rfft(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[UTF8String])
-    case "irfft" => irfft(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Int], a(3).asInstanceOf[UTF8String])
-    case "hfft" => hfft(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Int], a(3).asInstanceOf[UTF8String])
-    case "ihfft" => ihfft(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[UTF8String])
-    case "fftfreq" => fftfreq(a(0).asInstanceOf[Int], a(1).asInstanceOf[Double])
-    case "rfftfreq" => rfftfreq(a(0).asInstanceOf[Int], a(1).asInstanceOf[Double])
-    case "fftshift" => fftshift(a(0).asInstanceOf[ArrayData])
-    case "ifftshift" => ifftshift(a(0).asInstanceOf[ArrayData])
-    case "fftshiftNd" => fftshiftNd(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Boolean])
-    case "convolve" => convolve(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[UTF8String], a(3).asInstanceOf[UTF8String])
-    case "correlate" => correlate(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[UTF8String], a(3).asInstanceOf[UTF8String])
-    case "convolveCx" => convolveCx(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData], a(3).asInstanceOf[ArrayData], a(4).asInstanceOf[UTF8String], a(5).asInstanceOf[UTF8String])
-    case "correlateCx" => correlateCx(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData], a(3).asInstanceOf[ArrayData], a(4).asInstanceOf[UTF8String], a(5).asInstanceOf[UTF8String])
-    case "fftconvolve2d" => fftconvolve2d(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[ArrayData], a(3).asInstanceOf[Int], a(4).asInstanceOf[UTF8String])
-    case "fftconvolveNd" => fftconvolveNd(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData], a(3).asInstanceOf[ArrayData], a(4).asInstanceOf[UTF8String])
-    case "sosfilt" => sosfilt(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "sosfiltz" => sosfiltz(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case "sosfiltfilt" => sosfiltfilt(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[UTF8String], a(3).asInstanceOf[Int])
-    case "lfilter" => lfilter(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case "filtfilt" => filtfilt(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case "hilbert" => hilbert(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int])
-    case "detrend" => detrend(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[UTF8String])
-    case "medfilt" => medfilt(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int])
-    case "findPeaksF" => findPeaksF(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Double], a(2).asInstanceOf[Int], a(3).asInstanceOf[Double], a(4).asInstanceOf[Int], a(5).asInstanceOf[Double], a(6).asInstanceOf[Double], a(7).asInstanceOf[Double], a(8).asInstanceOf[Double], a(9).asInstanceOf[Double], a(10).asInstanceOf[Int], a(11).asInstanceOf[Int])
-    case "savgol" => savgol(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int], a(3).asInstanceOf[UTF8String], a(4).asInstanceOf[Int], a(5).asInstanceOf[Double])
-    case "orderFilter" => orderFilter(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int])
-    case "wiener" => wiener(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[Double])
-    case "welch" => welch(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int], a(3).asInstanceOf[ArrayData], a(4).asInstanceOf[Double], a(5).asInstanceOf[Boolean], a(6).asInstanceOf[UTF8String])
-    case "csd" => csd(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Int], a(3).asInstanceOf[Int], a(4).asInstanceOf[ArrayData], a(5).asInstanceOf[Double], a(6).asInstanceOf[Boolean])
-    case "welchPartial" => welchPartial(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Long], a(2).asInstanceOf[Int], a(3).asInstanceOf[Int], a(4).asInstanceOf[Int], a(5).asInstanceOf[ArrayData], a(6).asInstanceOf[Boolean])
-    case "zoomDft" => zoomDft(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Double], a(2).asInstanceOf[Double], a(3).asInstanceOf[Int], a(4).asInstanceOf[Double], a(5).asInstanceOf[Boolean])
-    case "czt" => czt(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[Double], a(3).asInstanceOf[Double], a(4).asInstanceOf[Double], a(5).asInstanceOf[Double])
-    case "coherence" => coherence(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Int], a(3).asInstanceOf[Int], a(4).asInstanceOf[ArrayData], a(5).asInstanceOf[Double], a(6).asInstanceOf[Boolean])
-    case "istft" => istft(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Int], a(3).asInstanceOf[Int], a(4).asInstanceOf[Int], a(5).asInstanceOf[ArrayData])
-    case "cwtFlat" => cwtFlat(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case "lombscargle" => lombscargle(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData], a(3).asInstanceOf[Boolean], a(4).asInstanceOf[Boolean])
-    case "periodogram" => periodogram(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[UTF8String], a(2).asInstanceOf[Double], a(3).asInstanceOf[Boolean])
-    case "envelope" => envelope(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int])
-    case "resample" => resample(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[UTF8String], a(3).asInstanceOf[UTF8String])
-    case "upfirdn" => upfirdn(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Int], a(3).asInstanceOf[Int])
-    case "interpGrid" => interpGrid(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Double], a(3).asInstanceOf[Double], a(4).asInstanceOf[Int])
-    case "resamplePoly" => resamplePoly(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int], a(3).asInstanceOf[Double])
-    case "resampleW" => resampleW(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[ArrayData], a(3).asInstanceOf[UTF8String])
-    case "decimate" => decimate(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int], a(3).asInstanceOf[UTF8String], a(4).asInstanceOf[Boolean])
-    case "peakWidths" => peakWidths(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Double], a(3).asInstanceOf[Int])
-    case "peakWidthsP" => peakWidthsP(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[Double], a(3).asInstanceOf[ArrayData], a(4).asInstanceOf[ArrayData], a(5).asInstanceOf[ArrayData])
-    case "localMaxima" => localMaxima(a(0).asInstanceOf[ArrayData])
-    case "nfc" => nfc(a(0).asInstanceOf[UTF8String])
-    case "uniTokens" => uniTokens(a(0).asInstanceOf[UTF8String])
-    case "winnow" => winnow(a(0).asInstanceOf[UTF8String], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int], a(3).asInstanceOf[Long], a(4).asInstanceOf[Long])
-    case "simhash" => simhash(a(0).asInstanceOf[ArrayData])
-    case "dotp" => dotp(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "adc" => adc(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "ivfCell" => ivfCell(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case "ivfCellF" => ivfCellF(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case "ivfProbes" => ivfProbes(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData], a(3).asInstanceOf[Int])
-    case "pqLut" => pqLut(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "matVec" => matVec(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "matVecF" => matVecF(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "pqAssign" => pqAssign(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "pqAssignF" => pqAssignF(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "cosine" => cosine(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "pairs" => pairs(a(0).asInstanceOf[ArrayData])
-    case "dotpF" => dotpF(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "cosineF" => cosineF(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "cosineFF" => cosineFF(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
-    case "byteHistogram" => byteHistogram(a(0).asInstanceOf[Array[Byte]])
-    case "pcmFrames" => pcmFrames(a(0).asInstanceOf[Array[Byte]], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int])
-    case "mfccFrames" => mfccFrames(a(0).asInstanceOf[Array[Byte]], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int], a(3).asInstanceOf[Int], a(4).asInstanceOf[Int], a(5).asInstanceOf[Double])
-    case "synthBmp" => synthBmp(a(0).asInstanceOf[UTF8String], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int], a(3).asInstanceOf[Int])
-    case "synthPng" => synthPng(a(0).asInstanceOf[UTF8String], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int], a(3).asInstanceOf[Int])
-    case "synthJpeg" => synthJpeg(a(0).asInstanceOf[UTF8String], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int], a(3).asInstanceOf[Int], a(4).asInstanceOf[Int])
-    case "imageBlockSums" => imageBlockSums(a(0).asInstanceOf[Array[Byte]], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int])
-    case "imageResizeNN" => imageResizeNN(a(0).asInstanceOf[Array[Byte]], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int])
-    case "imageDHash" => imageDHash(a(0).asInstanceOf[Array[Byte]], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int])
-    case "imageResizeBilinear" => imageResizeBilinear(a(0).asInstanceOf[Array[Byte]], a(1).asInstanceOf[Int], a(2).asInstanceOf[Int])
-    case "imageFrames" => imageFrames(a(0).asInstanceOf[Array[Byte]])
-    case "bpeMerge" => bpeMerge(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[UTF8String], a(2).asInstanceOf[UTF8String])
-    case "bpeEncode" => bpeEncode(a(0).asInstanceOf[UTF8String], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case "byteSyms" => byteSyms(a(0).asInstanceOf[Array[Byte]])
-    case "bpeMergeB" => bpeMergeB(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Array[Byte]], a(2).asInstanceOf[Array[Byte]])
-    case "bpeEncodeB" => bpeEncodeB(a(0).asInstanceOf[Array[Byte]], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case "unigramEnc" => unigramEnc(a(0).asInstanceOf[UTF8String], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case "unigramExp" => unigramExp(a(0).asInstanceOf[UTF8String], a(1).asInstanceOf[ArrayData], a(2).asInstanceOf[ArrayData])
-    case other => throw new IllegalArgumentException(s"unknown bridge fn: $other")
-  }
 }

@@ -8,16 +8,25 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.DataType
 
-/** One Catalyst expression for every [[Bridge]] kernel. eval uses the
-  * interpreted dispatch; doGenCode emits a direct static call to the
-  * bridge method, so the enclosing plan stays inside whole-stage
-  * codegen (no UDF closure, no Row boxing — arrays move as
-  * UnsafeArrayData).
+/** One Catalyst expression for every [[Bridge]] kernel. Both
+  * evaluation paths call the same public static `Bridge.<fn>` method:
+  * doGenCode emits a direct static call, so the enclosing plan stays
+  * inside whole-stage codegen (no UDF closure, no Row boxing — arrays
+  * move as UnsafeArrayData), and eval (Spark's fallback when codegen
+  * is off or fails to compile) invokes that method reflectively.
   */
 case class DspExpr(fn: String, children: Seq[Expression]) extends Expression {
 
   private val sig = Bridge.signatures.getOrElse(
     fn, throw new IllegalArgumentException(s"unknown dsp function: $fn"))
+
+  /** The static `Bridge.<fn>` method doGenCode calls, resolved from the
+    * declared argument types (transient: re-resolved after the
+    * expression is deserialized on an executor).
+    */
+  @transient private lazy val method: java.lang.reflect.Method =
+    Class.forName("graft.functions.Bridge")
+      .getMethod(fn, sig._1.map(CodeGenerator.javaClass): _*)
 
   override def dataType: DataType = sig._2
   override def nullable: Boolean = children.exists(_.nullable)
@@ -53,15 +62,16 @@ case class DspExpr(fn: String, children: Seq[Expression]) extends Expression {
   }
 
   override def eval(input: InternalRow): Any = {
-    val args = new Array[Any](children.length)
+    val args = new Array[AnyRef](children.length)
     var i = 0
     while (i < children.length) {
       val v = children(i).eval(input)
       if (v == null) return null
-      args(i) = v
+      args(i) = v.asInstanceOf[AnyRef]
       i += 1
     }
-    Bridge.dispatch(fn, args)
+    try method.invoke(null, args: _*)
+    catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

@@ -24,12 +24,6 @@ import graft.functions.Functions.dsl._
   */
 object Signal {
 
-  /** keys+coord+values long frame → one row per series:
-    * keys..., n (int), delta (double), cmin, cmax, coords
-    * (array<double>), <value> (array<double>) per value column —
-    * deterministically ordered by coordinate regardless of shuffle
-    * nondeterminism (array_sort on struct(coord, ...)).
-    */
   /** Columns that mark a frame as already seriesified. */
   private val seriesCols = Seq("n", "delta", "cmin", "cmax", "coords")
 
@@ -88,6 +82,12 @@ object Signal {
       .withColumn("coords", expr(s"transform($coordsCol, c -> CAST(c AS DOUBLE))"))
       .withMetadata("n", seriesMeta)
 
+  /** keys+coord+values long frame → one row per series:
+    * keys..., n (int), delta (double), cmin, cmax, coords
+    * (array<double>), <value> (array<double>) per value column —
+    * deterministically ordered by coordinate regardless of shuffle
+    * nondeterminism (array_sort on struct(coord, ...)).
+    */
   def seriesify(df: DataFrame, keys: Seq[String], dim: String,
                 values: Seq[String]): DataFrame = {
     if (isSeriesified(df) && values.forall(df.columns.contains))
@@ -319,21 +319,9 @@ object Signal {
     val g = gridify(df, keys, dims, value, "fftshift", keepCoords = true)
     val shapeArr = array((1 to nd).map(i => col(s"_n$i")): _*)
     val shift1: Column => Column = if (inverse) ifftshiftC else fftshiftC
-    val shifted = (1 to nd).foldLeft(
-      g.withColumn("_sv", fftshiftNdC(col("_vals"), shapeArr, inverse))) {
-      (d, i) => d.withColumn(s"_sc$i", shift1(col(s"_c$i")))
-    }
-    val exploded = shifted.select(
-      (keys.map(col) ++ (1 to nd).flatMap(i => Seq(col(s"_n$i"), col(s"_sc$i"))) :+
-        posexplode(col("_sv")).as(Seq("_p", "value"))): _*)
-    val withPos = (1 to nd).foldLeft(exploded) { (d, i) =>
-      val later = ((i + 1 to nd).map(j => s"_n$j") :+ "1").mkString(" * ")
-      d.withColumn(s"pos$i", expr(s"int((_p div ($later)) % _n$i)"))
-        .withColumn(dims(i - 1), expr(s"element_at(_sc$i, pos$i + 1)"))
-    }
-    withPos.select(
-      (keys.map(col) ++ (1 to nd).map(i => col(s"pos$i")) ++
-        dims.map(col) :+ col("value")): _*)
+    explodeGrid(g, keys, (1 to nd).map(i => col(s"_n$i")),
+      Seq("value" -> fftshiftNdC(col("_vals"), shapeArr, inverse)),
+      coords = dims.zipWithIndex.map { case (d, i) => d -> shift1(col(s"_c${i + 1}")) })
   }
 
   /** 2-D sliding median (scipy.signal.medfilt2d: odd kernel,
@@ -344,15 +332,8 @@ object Signal {
   def medfilt2d(df: DataFrame, keys: Seq[String], dim1: String, dim2: String,
                 value: String, kernelSize: (Int, Int) = (3, 3)): DataFrame = {
     val g = gridify(df, keys, Seq(dim1, dim2), value, "medfilt2d")
-    val withOut = g.withColumn("_out",
-      medfilt2dC(col("_vals"), col("_n1").cast("int"), col("_n2").cast("int"),
-        kernelSize._1, kernelSize._2))
-    val exploded = withOut.select(
-      (keys.map(col) :+ col("_n2") :+
-        posexplode(col("_out")).as(Seq("_p", "value"))): _*)
-    exploded.select(
-      (keys.map(col) :+ expr("int(_p div _n2)").as("pos1") :+
-        expr("int(_p % _n2)").as("pos2") :+ col("value")): _*)
+    explodeGrid(g, keys, Seq(col("_n1"), col("_n2")), Seq("value" ->
+      medfilt2dC(col("_vals"), col("_n1"), col("_n2"), kernelSize._1, kernelSize._2)))
   }
 
   /** N-D FFT over a complete hyper-rectangular grid — numpy's
@@ -378,17 +359,8 @@ object Signal {
       else col("_vals_1")
     val withOut = g.withColumn("_out",
       fftNdC(col("_vals"), imCol, shapeArr, inverse, norm))
-    val exploded = withOut.select(
-      (keys.map(col) ++ (1 to nd).map(i => col(s"_n$i")) :+
-        posexplode(arrays_zip(col("_out.re").as("re"), col("_out.im").as("im")))
-          .as(Seq("_p", "_z"))): _*)
-    val withPos = (1 to nd).foldLeft(exploded) { (d, i) =>
-      val later = ((i + 1 to nd).map(j => s"_n$j") :+ "1").mkString(" * ")
-      d.withColumn(s"pos$i", expr(s"int((_p div ($later)) % _n$i)"))
-    }
-    withPos.select(
-      (keys.map(col) ++ (1 to nd).map(i => col(s"pos$i")) :+
-        col("_z.re").as("re") :+ col("_z.im").as("im")): _*)
+    explodeGrid(withOut, keys, (1 to nd).map(i => col(s"_n$i")),
+      Seq("re" -> col("_out.re"), "im" -> col("_out.im")))
   }
 
   def ifftNd(df: DataFrame, keys: Seq[String], dims: Seq[String],
@@ -566,15 +538,38 @@ object Signal {
     else g1.crossJoin(broadcast(g2.select(bCols: _*)))
   }
 
-  /** posexplode a 2-D `_out` struct(cols, vals) back to long format. */
-  private def explodeGrid2d(withOut: DataFrame, keys: Seq[String]): DataFrame = {
-    val exploded = withOut.select(
-      (keys.map(col) ++ Seq(col("_out.cols").as("_oc"),
-        posexplode(col("_out.vals")).as(Seq("_p", "value")))): _*)
-    exploded
-      .withColumn("pos1", expr("_p div _oc").cast("int"))
-      .withColumn("pos2", (col("_p") % col("_oc")).cast("int"))
-      .select((keys.map(col) ++ Seq(col("pos1"), col("pos2"), col("value"))): _*)
+  /** posexplode a flat row-major kernel output back to long format —
+    * the way back for every grid op. `shape` holds one int column per
+    * dim; pos_i = (flat div prod(shape[i+1..])) % shape[i]. `values`
+    * are parallel flat arrays, one output column each. `coords`, when
+    * given, names each dim's output coordinate and its axis array; the
+    * row carries the axis element at pos_i. Output: keys, pos1..posN
+    * (or `posNames`), the coordinates, the values.
+    */
+  private def explodeGrid(df: DataFrame, keys: Seq[String], shape: Seq[Column],
+                          values: Seq[(String, Column)],
+                          coords: Seq[(String, Column)] = Nil,
+                          posNames: Seq[String] = Nil): DataFrame = {
+    val nd = shape.length
+    val flat =
+      if (values.length == 1) values.head._2
+      else arrays_zip(values.zipWithIndex.map { case ((_, c), i) => c.as(s"_z$i") }: _*)
+    val exploded = df.select((keys.map(col) ++
+      shape.zipWithIndex.map { case (n, i) => n.cast("long").as(s"_g$i") } ++
+      coords.zipWithIndex.map { case ((_, a), i) => a.as(s"_a$i") } :+
+      posexplode(flat).as(Seq("_p", "_v"))): _*)
+    val pos = (0 until nd).map { i =>
+      val tail = ("1" +: (i + 1 until nd).map(j => s"_g$j")).mkString(" * ")
+      expr(s"CAST((_p div ($tail)) % _g$i AS INT)")
+    }
+    val names = if (posNames.nonEmpty) posNames else (1 to nd).map(i => s"pos$i")
+    val valueCols =
+      if (values.length == 1) Seq(col("_v").as(values.head._1))
+      else values.zipWithIndex.map { case ((name, _), i) => col(s"_v._z$i").as(name) }
+    exploded.select((keys.map(col) ++ pos.zip(names).map { case (p, n) => p.as(n) } ++
+      coords.zipWithIndex.map { case ((name, _), i) =>
+        element_at(col(s"_a$i"), pos(i) + 1).as(name)
+      } ++ valueCols): _*)
   }
 
   /** 2-D FFT convolution over two core dims — the reference's
@@ -589,7 +584,8 @@ object Signal {
     val withOut = gridify(df, keys, Seq(dim1, dim2), value, "fftconvolve2d")
       .withColumn("_out", fftconvolve2dC(col("_vals"), col("_n1"),
         typedLit(kernel), lit(kernelRows), mode))
-    explodeGrid2d(withOut, keys)
+    explodeGrid(withOut, keys, Seq(col("_out.rows"), col("_out.cols")),
+      Seq("value" -> col("_out.vals")))
   }
 
   /** scipy.signal.correlate2d (literal kernel): cross-correlation is
@@ -617,7 +613,8 @@ object Signal {
     val joined = joinSecondGrid(g1, in2, keys, Seq(dim1, dim2), value, "fftconvolve2d")
     val withOut = joined.withColumn("_out", fftconvolve2dC(col("_vals"), col("_n1"),
       col("_vals_b"), col("_n1_b"), mode))
-    explodeGrid2d(withOut, keys)
+    explodeGrid(withOut, keys, Seq(col("_out.rows"), col("_out.cols")),
+      Seq("value" -> col("_out.vals")))
   }
 
   /** N-D FFT convolution over three or more core dims — the
@@ -642,7 +639,8 @@ object Signal {
     val shapeArr = array((1 to nd).map(i => col(s"_n$i")): _*)
     val withOut = grouped.withColumn("_out", fftconvolveNdC(col("_vals"), shapeArr,
       typedLit(kernel), typedLit(kernelShape), mode))
-    explodeGridNd(withOut, keys, nd)
+    explodeGrid(withOut, keys, (1 to nd).map(i => element_at(col("_out.shape"), i)),
+      Seq("value" -> col("_out.vals")))
   }
 
   /** Two-frame N-D FFT convolution — the reference's full
@@ -659,24 +657,8 @@ object Signal {
     val shape2 = array((1 to nd).map(i => col(s"_n${i}_b")): _*)
     val withOut = joined.withColumn("_out", fftconvolveNdC(col("_vals"), shape1,
       col("_vals_b"), shape2, mode))
-    explodeGridNd(withOut, keys, nd)
-  }
-
-  /** posexplode an N-D `_out` struct(shape, vals) back to long format:
-    * pos_i = (flat div prod(shape[i+1..])) % shape[i], row-major.
-    */
-  private def explodeGridNd(withOut: DataFrame, keys: Seq[String], nd: Int): DataFrame = {
-    val exploded = withOut.select(
-      (keys.map(col) ++ Seq(col("_out.shape").as("_osh"),
-        posexplode(col("_out.vals")).as(Seq("_p", "value")))): _*)
-    def shEl(i: Int) = s"CAST(element_at(_osh, ${i + 1}) AS BIGINT)"
-    val posCols = (0 until nd).map { i =>
-      val tailProd = if (i == nd - 1) "CAST(1 AS BIGINT)"
-        else ((i + 1) until nd).map(shEl).mkString("(", " * ", ")")
-      expr(s"CAST((CAST(_p AS BIGINT) div $tailProd) % ${shEl(i)} AS INT)")
-        .as(s"pos${i + 1}")
-    }
-    exploded.select((keys.map(col) ++ posCols :+ col("value")): _*)
+    explodeGrid(withOut, keys, (1 to nd).map(i => element_at(col("_out.shape"), i)),
+      Seq("value" -> col("_out.vals")))
   }
 
   /** Cross-correlation (scipy.signal.correlate): convolve with the
@@ -753,47 +735,11 @@ object Signal {
     require(m >= 1, "kernel must be non-empty")
     require(chunkSize > m - 1, s"chunkSize $chunkSize must exceed kernel halo ${m - 1}")
     val h = m - 1
-    // Sample index from a per-key RANK (row_number over the coordinate
-    // order), not coordinate arithmetic: real-world coordinates are
-    // jittered/non-equispaced (event timestamps), so
-    // round((t-cmin)/delta) silently collapses distinct samples onto
-    // one index and corrupts chunk contents. row_number is a
-    // running-frame window — WindowExec streams it after the
-    // per-partition sort, no whole-partition buffer — and the series
-    // length _n comes from a small groupBy aggregate joined back (NOT a
-    // whole-partition count(*) window, which would buffer every
-    // series). Net: one hash exchange on the keys reused by both the
-    // join and the window, plus the chunk groupBy.
-    // mirror seriesify's null contract (bit-identical parity with the
-    // direct path): null coordinates cannot be placed on the axis and
-    // are dropped; null samples become NaN and flow through the kernel
-    val clean = df
-      .filter(col(dim).isNotNull)
-      .withColumn(value, coalesce(col(value).cast("double"), lit(Double.NaN)))
-    val stats = clean.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
-    val withStats =
-      if (keys.isEmpty) clean.crossJoin(broadcast(stats))
-      else clean.join(stats, keys)
-    // (coord, value) order, not coord alone: seriesify sorts
-    // struct(c, v) lexicographically, so on duplicate coordinates the
-    // chunked path must rank identically or its chunk contents diverge
-    // from the direct convolve (and the oracle's ORDER BY t, value)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(dim).cast("double"), col(value))
-    val c0 = expr(s"_j div $chunkSize")
-    val cmax = expr(s"(_n - 1) div $chunkSize")
-    val idx = withStats
-      .withColumn("_j", (row_number().over(w) - lit(1)).cast("long"))
-      .withColumn("_c", explode(
-        when(col("_j") % chunkSize >= chunkSize - h && c0 + 1 <= cmax,
-          array(c0, c0 + 1)).otherwise(array(c0))))
-    val grouped = idx
-      .groupBy((keys.map(col) :+ col("_c")): _*)
-      .agg(
-        expr(s"transform(array_sort(collect_list(named_struct('j', _j, 'v', $value))), s -> s.v)").as("_vals"),
-        min(col("_j")).as("_start"),
-        max(col("_n")).as("_gn"))
+    // backward halo: a row in the last h samples of its chunk also
+    // lands in the next chunk, whose first outputs need it
+    val grouped = chunkSeries(df, keys, dim, value, chunkSize,
+      (j, c0, last) => when(j % chunkSize >= chunkSize - h && c0 + 1 <= last,
+        array(c0, c0 + 1)).otherwise(array(c0)))
       .withColumn("_out", convolveC(col("_vals"), typedLit(kernel), "full", method))
     val exploded = grouped.select(
       (keys.map(col) ++ Seq(col("_c"), col("_start"), col("_gn"),
@@ -803,6 +749,58 @@ object Signal {
         (col("pos") < (col("_c") + 1) * chunkSize ||
           col("_c") === expr(s"(_gn - 1) div $chunkSize")))
     exploded.select((keys.map(col) :+ col("pos").cast("int").as("pos") :+ col("value")): _*)
+  }
+
+  /** Long-format chunking shared by [[convolveLong]] and [[welchLong]]:
+    * one row per (keys, `_c` chunk id) holding `_vals` (the chunk's
+    * samples ordered by sample index), `_start` (its first sample
+    * index), `_gn` (the series length) and the op's `carry` aggregates
+    * over its extra per-key `stats`. Every sample lands in its home
+    * chunk `_j div chunkSize`; `halo(j, home, last)` returns the chunk
+    * ids a sample with index `j` lands in (home plus the neighbour that
+    * needs it as halo; `last` is the series' last chunk id), so the
+    * shuffle carries each row at most twice and no task ever holds the
+    * whole series.
+    *
+    * The null contract mirrors [[seriesify]] (bit-identical parity with
+    * the direct path): null coordinates cannot be placed on the axis and
+    * are dropped; null samples become NaN and flow through the kernel.
+    * The sample index is a per-key RANK (row_number over the coordinate
+    * order), not coordinate arithmetic: real-world coordinates are
+    * jittered/non-equispaced (event timestamps), so round((t-cmin)/delta)
+    * silently collapses distinct samples onto one index and corrupts
+    * chunk contents. row_number is a running-frame window — WindowExec
+    * streams it after the per-partition sort, no whole-partition buffer
+    * — and the series length `_n` comes from a small groupBy aggregate
+    * joined back (NOT a whole-partition count(*) window, which would
+    * buffer every series). Net: one hash exchange on the keys reused by
+    * both the join and the window, plus the chunk groupBy.
+    */
+  private def chunkSeries(df: DataFrame, keys: Seq[String], dim: String, value: String,
+                          chunkSize: Int, halo: (Column, Column, Column) => Column,
+                          stats: Seq[Column] = Nil, carry: Seq[Column] = Nil): DataFrame = {
+    val clean = df
+      .filter(col(dim).isNotNull)
+      .withColumn(value, coalesce(col(value).cast("double"), lit(Double.NaN)))
+    val st = clean.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"), stats: _*)
+    val withStats =
+      if (keys.isEmpty) clean.crossJoin(broadcast(st))
+      else clean.join(st, keys)
+    // (coord, value) order, not coord alone: seriesify sorts
+    // struct(c, v) lexicographically, so on duplicate coordinates the
+    // chunked path must rank identically or its chunk contents diverge
+    // from the direct path (and the oracle's ORDER BY t, value)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*)
+      .orderBy(col(dim).cast("double"), col(value))
+    withStats
+      .withColumn("_j", (row_number().over(w) - lit(1)).cast("long"))
+      .withColumn("_c", explode(halo(col("_j"), expr(s"_j div $chunkSize"),
+        expr(s"(_n - 1) div $chunkSize"))))
+      .groupBy((keys.map(col) :+ col("_c")): _*)
+      .agg(
+        expr(s"transform(array_sort(collect_list(named_struct('j', _j, 'v', $value))), s -> s.v)").as("_vals"),
+        (Seq(min(col("_j")).as("_start"), max(col("_n")).as("_gn")) ++ carry): _*)
   }
 
   // ---- b,a filtering (the decimate FIR/IIR building blocks) -----------
@@ -976,12 +974,7 @@ object Signal {
     var w2 = 0.0
     wts.foreach(x => w2 += x * x)
     val nb = w / 2 + 1
-    val demean = detrend match {
-      case "constant" => true
-      case "none" | "" => false
-      case other => throw new IllegalArgumentException(
-        s"spectrogram: unsupported detrend '$other' (constant|none)")
-    }
+    val demean = demeanOf("spectrogram", detrend)
     val base = expr(s"slice(_v, start + 1, $w)")
     val centered =
       if (demean) expr(s"transform(slice(_v, start + 1, $w), x -> x - _m)")
@@ -1061,14 +1054,9 @@ object Signal {
     require(widths.nonEmpty, "cwt: need at least one width")
     val taps = widths.map(a => graft.dsp.Wavelet.ricker((10 * a).toInt, a))
     val sdf = seriesify(df, keys, dim, Seq(value))
-    sdf
-      .withColumn("_c", cwtFlatC(col(value),
-        typedLit(taps.flatten.toSeq), typedLit(taps.map(_.length).toSeq)))
-      .select((keys.map(col) :+ col("n") :+
-        posexplode(col("_c")).as(Seq("_p", "value"))): _*)
-      .withColumn("width_idx", (col("_p") / col("n")).cast("int"))
-      .withColumn("pos", (col("_p") % col("n")).cast("int"))
-      .select((keys.map(col) ++ Seq(col("width_idx"), col("pos"), col("value"))): _*)
+    explodeGrid(sdf, keys, Seq(lit(widths.length), col("n")), Seq("value" ->
+      cwtFlatC(col(value), typedLit(taps.flatten.toSeq), typedLit(taps.map(_.length).toSeq))),
+      posNames = Seq("width_idx", "pos"))
   }
 
   /** scipy.signal.lombscargle lifted onto series: the least-squares
@@ -1226,15 +1214,8 @@ object Signal {
             nperseg: Int, noverlap: Int = -1, window: String = "hann",
             detrend: String = "constant", fs: Double = -1.0,
             newdim: String = "frequency", average: String = "mean"): DataFrame = {
-    val hop = nperseg - (if (noverlap >= 0) noverlap else nperseg / 2)
-    require(hop > 0 && hop <= nperseg,
-      s"welch: need 0 <= noverlap < nperseg, got noverlap=$noverlap nperseg=$nperseg")
-    val demean = detrend match {
-      case "constant" => true
-      case "none" | "" => false
-      case other => throw new IllegalArgumentException(
-        s"welch: unsupported detrend '$other' (constant|none)")
-    }
+    val hop = welchHop("welch", nperseg, noverlap)
+    val demean = demeanOf("welch", detrend)
     val wts = graft.dsp.Resample.periodicWindow(window, nperseg)
     // fs > 0: scipy's explicit sampling-rate argument; fs <= 0 (the
     // default): derive per series from the coordinate spacing, the
@@ -1297,12 +1278,7 @@ object Signal {
   def periodogram(df: DataFrame, keys: Seq[String], dim: String, value: String,
                   window: String = "boxcar", detrend: String = "constant",
                   fs: Double = -1.0, newdim: String = "frequency"): DataFrame = {
-    val demean = detrend match {
-      case "constant" => true
-      case "none" | "" => false
-      case other => throw new IllegalArgumentException(
-        s"periodogram: unsupported detrend '$other' (constant|none)")
-    }
+    val demean = demeanOf("periodogram", detrend)
     val fsCol = if (fs > 0) lit(fs) else lit(1.0) / col("delta")
     val dCol = if (fs > 0) lit(1.0 / fs) else col("delta")
     val sdf = seriesify(df, keys, dim, Seq(value))
@@ -1330,50 +1306,22 @@ object Signal {
                 detrend: String = "constant", fs: Double = -1.0,
                 chunkSize: Int = 65536,
                 newdim: String = "frequency"): DataFrame = {
-    val hop = welchHop(nperseg, noverlap)
+    val hop = welchHop("welchLong", nperseg, noverlap)
     require(chunkSize >= nperseg,
       s"welchLong: chunkSize $chunkSize must be >= nperseg $nperseg")
-    val demean = detrend match {
-      case "constant" => true
-      case "none" | "" => false
-      case other => throw new IllegalArgumentException(
-        s"welchLong: unsupported detrend '$other' (constant|none)")
-    }
+    val demean = demeanOf("welchLong", detrend)
     val wts = graft.dsp.Resample.periodicWindow(window, nperseg)
     var w2 = 0.0
     wts.foreach(v => w2 += v * v)
-    // long-format chunking exactly as convolveLong: rank-based sample
-    // index, per-key stats joined back, halo rows replicated — but the
-    // halo points FORWARD (a segment starting near a chunk's end reads
-    // into the next chunk), so rows with _j % C <= nperseg-2 replicate
-    // DOWN to the previous chunk
-    val clean = df
-      .filter(col(dim).isNotNull)
-      .withColumn(value, coalesce(col(value).cast("double"), lit(Double.NaN)))
-    val stats = clean.groupBy(keys.map(col): _*).agg(
-      count(lit(1)).as("_n"),
-      min(col(dim).cast("double")).as("_cmin"),
-      max(col(dim).cast("double")).as("_cmax"))
-    val withStats =
-      if (keys.isEmpty) clean.crossJoin(broadcast(stats))
-      else clean.join(stats, keys)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(dim).cast("double"), col(value))
-    val c0 = expr(s"_j div $chunkSize")
-    val idx = withStats
-      .withColumn("_j", (row_number().over(w) - lit(1)).cast("long"))
-      .withColumn("_c", explode(
-        when(col("_j") % chunkSize <= nperseg - 2 && c0 >= 1,
-          array(c0 - 1, c0)).otherwise(array(c0))))
-    val grouped = idx
-      .groupBy((keys.map(col) :+ col("_c")): _*)
-      .agg(
-        expr(s"transform(array_sort(collect_list(named_struct('j', _j, 'v', $value))), s -> s.v)").as("_vals"),
-        min(col("_j")).as("_start"),
-        max(col("_n")).as("_gn"),
-        max(col("_cmin")).as("_gmin"),
-        max(col("_cmax")).as("_gmax"))
+    // forward halo: a segment starting near a chunk's end reads into
+    // the next chunk, so a row in the first nperseg-1 samples of its
+    // chunk also lands in the previous chunk
+    val grouped = chunkSeries(df, keys, dim, value, chunkSize,
+      (j, c0, _) => when(j % chunkSize <= nperseg - 2 && c0 >= 1,
+        array(c0 - 1, c0)).otherwise(array(c0)),
+      stats = Seq(min(col(dim).cast("double")).as("_cmin"),
+        max(col(dim).cast("double")).as("_cmax")),
+      carry = Seq(max(col("_cmin")).as("_gmin"), max(col("_cmax")).as("_gmax")))
       .withColumn("_acc", welchPartialC(col("_vals"), col("_start"), chunkSize,
         nperseg, hop, typedLit(wts), demean))
     val parts = grouped.select(
@@ -1404,11 +1352,22 @@ object Signal {
       .select((keys.map(col) ++ Seq(col("pos"), col(newdim), col("psd"))): _*)
   }
 
-  private def welchHop(nperseg: Int, noverlap: Int): Int = {
+  /** Segment hop from scipy's noverlap (default nperseg // 2). */
+  private def welchHop(op: String, nperseg: Int, noverlap: Int): Int = {
     val hop = nperseg - (if (noverlap >= 0) noverlap else nperseg / 2)
     require(hop > 0 && hop <= nperseg,
-      s"need 0 <= noverlap < nperseg, got noverlap=$noverlap nperseg=$nperseg")
+      s"$op: need 0 <= noverlap < nperseg, got noverlap=$noverlap nperseg=$nperseg")
     hop
+  }
+
+  /** scipy's per-segment `detrend` for the Welch family: "constant"
+    * removes each segment's mean, "none" (or "") leaves it.
+    */
+  private def demeanOf(op: String, detrend: String): Boolean = detrend match {
+    case "constant" => true
+    case "none" | "" => false
+    case other => throw new IllegalArgumentException(
+      s"$op: unsupported detrend '$other' (constant|none)")
   }
 
   /** scipy.signal.csd lifted onto series: cross power spectral density
@@ -1422,7 +1381,7 @@ object Signal {
   def csd(df: DataFrame, keys: Seq[String], dim: String, x: String, y: String,
           nperseg: Int, noverlap: Int = -1, window: String = "hann",
           fs: Double = -1.0, newdim: String = "frequency"): DataFrame = {
-    val hop = welchHop(nperseg, noverlap)
+    val hop = welchHop("csd", nperseg, noverlap)
     val wts = graft.dsp.Resample.periodicWindow(window, nperseg)
     val fsCol = if (fs > 0) lit(fs) else lit(1.0) / col("delta")
     val dCol = if (fs > 0) lit(1.0 / fs) else col("delta")
@@ -1462,7 +1421,7 @@ object Signal {
                 y: String, nperseg: Int, noverlap: Int = -1,
                 window: String = "hann", fs: Double = -1.0,
                 newdim: String = "frequency"): DataFrame = {
-    val hop = welchHop(nperseg, noverlap)
+    val hop = welchHop("coherence", nperseg, noverlap)
     val wts = graft.dsp.Resample.periodicWindow(window, nperseg)
     val fsCol = if (fs > 0) lit(fs) else lit(1.0) / col("delta")
     val dCol = if (fs > 0) lit(1.0 / fs) else col("delta")

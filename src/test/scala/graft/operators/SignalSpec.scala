@@ -590,6 +590,99 @@ class SignalSpec extends SparkTestBase {
     assert(!planOf(irregular).contains("raise_error"))
   }
 
+  /** Complete grid of `shape` per key k in {0, 1}, columns k, d1..dN,
+    * v = f(k, row-major index), rows shuffled.
+    */
+  private def shuffledGrid(shape: Seq[Int], f: (Int, Int) => Double): DataFrame = {
+    val cells = shape.foldRight(Seq(Seq.empty[Int]))((n, rest) =>
+      for (i <- 0 until n; r <- rest) yield i +: r)
+    val rows = for (k <- 0 until 2; (c, flat) <- cells.zipWithIndex)
+      yield Row.fromSeq((k +: c) :+ f(k, flat))
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      ("k INT" +: shape.indices.map(i => s"d${i + 1} INT") :+ "v DOUBLE").mkString(", "))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(new scala.util.Random(17).shuffle(rows), 3), schema)
+  }
+
+  private def gridValues(out: DataFrame, k: Int, nd: Int, col: String): Array[Double] =
+    out.filter($"k" === k).orderBy((1 to nd).map(i => $"pos$i"): _*)
+      .select(col).as[Double].collect()
+
+  test("fftNd over a shuffled 2x3x4 grid equals the kernel on the row-major array") {
+    val shape = Array(2, 3, 4)
+    def f(k: Int, i: Int): Double = math.sin(0.7 * i + k) + 0.1 * i
+    val out = Signal.fftNd(shuffledGrid(shape, f), Seq("k"), Seq("d1", "d2", "d3"), "v")
+    assert(out.columns.toSeq == Seq("k", "pos1", "pos2", "pos3", "re", "im"))
+    for (k <- 0 until 2) {
+      val flat = Array.tabulate(shape.product)(f(k, _))
+      val want = Fft.fftNd(flat, null, shape)
+      val pos = out.filter($"k" === k).orderBy("pos1", "pos2", "pos3")
+        .select("pos1", "pos2", "pos3").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
+      assert(pos == (for (i <- 0 until 2; j <- 0 until 3; l <- 0 until 4) yield (i, j, l)))
+      assert(gridValues(out, k, 3, "re").toSeq == want.re.toSeq)
+      assert(gridValues(out, k, 3, "im").toSeq == want.im.toSeq)
+    }
+  }
+
+  test("fftshiftNd on a 3x4 grid rolls the values and each dim's coordinates together") {
+    val shape = Array(3, 4)
+    def f(k: Int, i: Int): Double = 10.0 * (i / 4) + (i % 4) + 100.0 * k
+    val grid = shuffledGrid(shape, f)
+      .withColumn("a", $"d1" * 10 + 5).withColumn("b", $"d2" * 0.5 - 1.0)
+    for (inverse <- Seq(false, true)) {
+      val out = Signal.fftshiftNd(grid, Seq("k"), Seq("a", "b"), "v", inverse)
+      assert(out.columns.toSeq == Seq("k", "pos1", "pos2", "a", "b", "value"))
+      val shift: Array[Double] => Array[Double] =
+        if (inverse) Fft.ifftshift else Fft.fftshift
+      val axisA = shift(Array(5.0, 15.0, 25.0))
+      val axisB = shift(Array(-1.0, -0.5, 0.0, 0.5))
+      for (k <- 0 until 2) {
+        val want = Fft.fftshiftNd(Array.tabulate(12)(f(k, _)), shape, inverse)
+        val rows = out.filter($"k" === k).orderBy("pos1", "pos2").collect()
+        assert(rows.length == 12)
+        rows.zipWithIndex.foreach { case (r, i) =>
+          val (p1, p2) = (r.getAs[Int]("pos1"), r.getAs[Int]("pos2"))
+          assert((p1, p2) == (i / 4, i % 4))
+          assert(r.getAs[Double]("value") == want(i))
+          assert(r.getAs[Double]("a") == axisA(p1) && r.getAs[Double]("b") == axisB(p2))
+          // the value moved with its own cell's coordinates
+          val (d1, d2) = (((r.getAs[Double]("a") - 5) / 10).toInt,
+            ((r.getAs[Double]("b") + 1.0) / 0.5).toInt)
+          assert(r.getAs[Double]("value") == f(k, d1 * 4 + d2))
+        }
+      }
+    }
+  }
+
+  test("medfilt2d on a 3x5 grid equals the kernel") {
+    def f(k: Int, i: Int): Double = ((i * 7 + 3 * k) % 11).toDouble
+    val out = Signal.medfilt2d(shuffledGrid(Seq(3, 5), f), Seq("k"), "d1", "d2", "v")
+    assert(out.columns.toSeq == Seq("k", "pos1", "pos2", "value"))
+    for (k <- 0 until 2) {
+      val want = Filt.medfilt2d(Array.tabulate(15)(f(k, _)), 3, 5)
+      val pos = out.filter($"k" === k).orderBy("pos1", "pos2").select("pos1", "pos2")
+        .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+      assert(pos == (for (i <- 0 until 3; j <- 0 until 5) yield (i, j)))
+      assert(gridValues(out, k, 2, "value").toSeq == want.toSeq)
+    }
+  }
+
+  test("cwt's (width_idx, pos, value) equals the cwtFlat kernel") {
+    val widths = Array(1.0, 2.0, 3.5)
+    val out = Signal.cwt(longDf, Seq("k"), "t", "x", widths)
+    assert(out.columns.toSeq == Seq("k", "width_idx", "pos", "value"))
+    val taps = widths.map(a => graft.dsp.Wavelet.ricker((10 * a).toInt, a))
+    for (k <- Seq("a", "b")) {
+      val x = series(k, "x")
+      val want = graft.dsp.Wavelet.cwtFlat(x, taps.flatten, taps.map(_.length))
+      val rows = out.filter($"k" === k).orderBy("width_idx", "pos").collect()
+      assert(rows.map(r => (r.getInt(1), r.getInt(2))).toSeq ==
+        (for (w <- widths.indices; i <- x.indices) yield (w, i)))
+      assert(rows.map(_.getDouble(3)).toSeq == want.toSeq)
+    }
+  }
+
   private def maxDiff(a: Array[Double], b: Array[Double]): Double = {
     require(a.length == b.length, s"length ${a.length} vs ${b.length}")
     if (a.isEmpty) 0.0 else a.indices.map(i => math.abs(a(i) - b(i))).max
