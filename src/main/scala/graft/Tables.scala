@@ -11,13 +11,70 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
+  /** Each table's schema as parquet schema inference reads the
+    * testdata files: every column nullable, arrays with nullable
+    * elements. `events.ts` is resolved per file by [[eventsTsType]].
+    */
+  private val ddl: Map[String, String] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts %s, user_id BIGINT, event_type STRING, " +
+      "value DOUBLE, props STRING"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+
+  /** One of the ten [[names]] tables, read with its declared schema, so
+    * opening it runs no Spark job (parquet schema inference runs one
+    * per read), with `ts` normalized by [[tsToNanos]].
+    */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    // events.ts is parquet TIMESTAMP(NANOS); Spark only reads it as a
-    // nanos-since-epoch long (which is also the better equispaced
-    // coordinate type). Runtime-settable, but the session builders set
+    require(ddl.contains(table),
+      s"Tables.load: unknown table $table (one of ${names.mkString(", ")})")
+    // an events file whose ts is TIMESTAMP(NANOS) reads as a long only
+    // under nanosAsLong. Runtime-settable, but the session builders set
     // it too so the driver's own session works.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tsToNanos(spark.read.parquet(s"$sfDir/$table.parquet"))
+    val path = s"$sfDir/$table.parquet"
+    val schema =
+      if (table == "events") ddl(table).format(eventsTsType(spark, path)) else ddl(table)
+    tsToNanos(spark.read.schema(schema).parquet(path))
+  }
+
+  /** The Spark type inference gives `events.ts` in the parquet file at
+    * `path`, from one footer read on the driver: TIMESTAMP_NTZ for
+    * TIMESTAMP(MICROS/MILLIS) not adjusted to UTC, TIMESTAMP for
+    * adjusted ones and INT96, BIGINT for a plain INT64 or
+    * TIMESTAMP(NANOS) under nanosAsLong.
+    */
+  private def eventsTsType(spark: SparkSession, path: String): String = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), spark.sessionState.newHadoopConf()))
+    val ts = try {
+      val fields = reader.getFooter.getFileMetaData.getSchema
+      fields.getType(fields.getFieldIndex("ts")).asPrimitiveType
+    } finally reader.close()
+    ts.getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation if t.getUnit != TimeUnit.NANOS =>
+        if (t.isAdjustedToUTC) "TIMESTAMP" else "TIMESTAMP_NTZ"
+      case _ if ts.getPrimitiveTypeName == PrimitiveTypeName.INT96 => "TIMESTAMP"
+      case _ => "BIGINT"
+    }
   }
 
   /** events.ts has flipped physical parquet type across testdata

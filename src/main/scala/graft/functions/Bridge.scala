@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.dsp.{Conv, Fft, Filt, Hilbert, Peaks, Resample, Spectral, Wavelet}
+import graft.dsp.{Conv, Fft, Filt, Hilbert, Peaks, Resample, Spectral, Vec, Wavelet}
 
 /** Static kernel entry points on Catalyst runtime types (ArrayData
   * in/out, UTF8String params). A kernel is declared once: its method
@@ -567,40 +567,34 @@ object Bridge {
   // (ascending-index dot products; argmax ties -> smallest id; argmin
   // ties -> smallest cell), so scores, fits, and oracles are unchanged.
 
-  /** argmax_i ⟨v, cents[i]⟩ -> ids[i]; ties -> the earliest (ids must
-    * ascend, matching the old max(d, −cid) struct rule). */
-  def ivfCell(v: ArrayData, cents: ArrayData, ids: ArrayData): Int = {
-    val x = v.toDoubleArray()
-    var best = 0; var bestD = Double.NegativeInfinity
-    var i = 0
-    val n = cents.numElements()
-    while (i < n) {
-      val c = cents.getArray(i)
-      var s = 0.0; var j = 0
-      while (j < x.length) { s += x(j) * c.getDouble(j); j += 1 }
-      // Double.compare total order: a NaN dot (non-finite embedding)
-      // ranks greatest, matching the old struct-max NaN semantics
-      // instead of being silently skipped
-      if (java.lang.Double.compare(s, bestD) > 0) { bestD = s; best = i }
-      i += 1
-    }
-    ids.getInt(best)
+  /** argmax_i ⟨v, cents[i]⟩ -> ids[i] by [[Vec.argmaxDot]]; ties -> the
+    * earliest (ids must ascend, matching the old max(d, −cid) struct
+    * rule). */
+  def ivfCell(v: ArrayData, cents: ArrayData, ids: ArrayData): Int =
+    ids.getInt(Vec.argmaxDot(v.toDoubleArray(), centroidRows(cents)))
+
+  /** [[ivfCell]] for float vectors, widened per element (x(j).toDouble *
+    * c(j), like dotpF). */
+  def ivfCellF(v: ArrayData, cents: ArrayData, ids: ArrayData): Int = {
+    val f = v.toFloatArray()
+    val x = new Array[Double](f.length)
+    var j = 0
+    while (j < f.length) { x(j) = f(j).toDouble; j += 1 }
+    ids.getInt(Vec.argmaxDot(x, centroidRows(cents)))
   }
 
-  /** [[ivfCell]] for float vectors (x(j).toDouble * c(j), like dotpF). */
-  def ivfCellF(v: ArrayData, cents: ArrayData, ids: ArrayData): Int = {
-    val x = v.toFloatArray()
-    var best = 0; var bestD = Double.NegativeInfinity
-    var i = 0
-    val n = cents.numElements()
-    while (i < n) {
-      val c = cents.getArray(i)
-      var s = 0.0; var j = 0
-      while (j < x.length) { s += x(j).toDouble * c.getDouble(j); j += 1 }
-      if (java.lang.Double.compare(s, bestD) > 0) { bestD = s; best = i }
-      i += 1
+  // the centroid table is a literal: one object for every row of a
+  // task, so each task thread converts it once, keyed by identity
+  private val centroidCache = new ThreadLocal[(ArrayData, Array[Array[Double]])]
+
+  private def centroidRows(cents: ArrayData): Array[Array[Double]] = {
+    val hit = centroidCache.get
+    if (hit != null && (hit._1 eq cents)) hit._2
+    else {
+      val rows = Array.tabulate(cents.numElements())(i => cents.getArray(i).toDoubleArray())
+      centroidCache.set((cents, rows))
+      rows
     }
-    ids.getInt(best)
   }
 
   /** The nProbe best cells by ⟨v, cents[i]⟩ descending (ties -> lower

@@ -243,29 +243,126 @@ object Ann {
     *     shared grid absorbs that ulp-level noise before it can flip a
     *     borderline next-iteration assignment.
     *
-    * Scale shape (one shuffle per Lloyd iteration): assignment is a
-    * map-side expression against broadcast centroid literals; the
-    * re-center is ONE hash aggregate with `dim` sum columns + count —
-    * partial aggregation reduces each partition to ≤ k rows before the
-    * exchange, so the shuffle carries O(k × partitions × dim) values,
-    * never the corpus. The only collect is the k-row centroid table per
-    * iteration (bounded, same contract as [[topkIvf]]'s literal
-    * centroids). At 100 TB the fit runs on a sample (pass a sampled
-    * corpus in) and the resulting cell id becomes a bucketing/partition
-    * column — see the partition-pruning test in PlanShapeSpec.
+    * Scale shape: two paths, chosen by [[graft.Local]] from rows × dim
+    * (the row count from plan statistics or one count).
+    *   - Within [[graft.Local.Budget]]: (id, vector) collects ONCE as
+    *     primitive arrays per partition (a partition stops at a vector
+    *     whose dim puts rows × dim over the budget, and the fit then
+    *     takes the distributed path), and init plus every Lloyd
+    *     iteration run on the driver, assigning with the same
+    *     [[graft.dsp.Vec.argmaxDot]] the cell kernels call and summing
+    *     in collected order. Null ids or vectors, ragged dims and
+    *     duplicate ids are rejected.
+    *   - Over it, one shuffle per Lloyd iteration: assignment is a
+    *     map-side expression against broadcast centroid literals; the
+    *     re-center is ONE hash aggregate with `dim` sum columns + count
+    *     — partial aggregation reduces each partition to ≤ k rows
+    *     before the exchange, so the shuffle carries
+    *     O(k × partitions × dim) values, never the corpus. The only
+    *     collects are the k init rows and the k-row centroid table per
+    *     iteration (bounded, same contract as [[topkIvf]]'s literal
+    *     centroids).
+    * Both give the same centroids: the 1e-6 grid absorbs their
+    * summation orders (LocalSpec pins the two paths equal). At
+    * 100 TB the fit runs on a sample (pass a sampled corpus in) and
+    * the resulting cell id becomes a bucketing/partition column — see
+    * the partition-pruning test in PlanShapeSpec.
     */
   def kmeansFit(corpus: DataFrame, idCol: String, vecCol: String,
                 k: Int, iters: Int = 2): DataFrame = {
     graft.functions.Functions.install(corpus.sparkSession)
     require(k >= 1, "k must be positive")
     require(iters >= 0, "iters must be nonnegative")
-    def quant(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-    def normQuant(v: Array[Double]): Array[Double] = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      val nr = math.sqrt(s)
-      v.map(x => quant(if (nr > 0) x / nr else 0.0))
+    val cents = kmeansLocal(corpus, idCol, vecCol, k, iters)
+      .getOrElse(kmeansDistributed(corpus, idCol, vecCol, k, iters))
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    cents.zipWithIndex.map { case (cv, cid) => (cid, cv) }.toSeq
+      .toDF(idCol, vecCol)
+  }
+
+  private def quant(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+
+  /** Unit-normalize, then quantize every component to the 1e-6 grid. */
+  private def normQuant(v: Array[Double]): Array[Double] = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    val nr = math.sqrt(s)
+    v.map(x => quant(if (nr > 0) x / nr else 0.0))
+  }
+
+  /** The fit on the driver, or None when rows × dim is over the
+    * [[graft.Local]] budget.
+    */
+  private def kmeansLocal(corpus: DataFrame, idCol: String, vecCol: String,
+                          k: Int, iters: Int): Option[Array[Array[Double]]] = {
+    val n = graft.Local.rows(corpus)
+    if (!graft.Local.fits(n)) return None
+    require(n >= k, s"corpus has fewer than $k vectors")
+    val budget = graft.Local.budget
+    val over = "over" // a vector whose dim puts rows × dim over the budget
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    // per partition: ids, vectors, the dim of its first vector and its
+    // first contract violation. A partition stops at the first vector
+    // over the budget, so at most the budget reaches the driver.
+    val parts = graft.Local.collect(
+        corpus.select(col(idCol).cast("long"), asDouble(col(vecCol)))) { it =>
+      val (ids, xs) = (Array.newBuilder[Long], Array.newBuilder[Array[Double]])
+      var (dim, bad) = (-1, "")
+      while (bad.isEmpty && it.hasNext) {
+        val r = it.next()
+        if (r.isNullAt(0) || r.isNullAt(1)) bad = "null id or vector"
+        else {
+          val v = r.getSeq[java.lang.Double](1)
+          if (v.length.toLong * n > budget) bad = over
+          else if (dim >= 0 && v.length != dim) bad = s"ragged dims (${v.length} vs $dim)"
+          else if (v.contains(null)) bad = "null vector element"
+          else { dim = v.length; ids += r.getLong(0); xs += v.iterator.map(_.doubleValue).toArray }
+        }
+      }
+      (ids.result(), xs.result(), dim, bad)
     }
+    if (parts.exists(_._4 == over)) return None
+    val bad = parts.map(_._4).find(_.nonEmpty)
+    require(bad.isEmpty, s"kmeansFit: ${bad.getOrElse("")}")
+    val dims = parts.map(_._3).filter(_ >= 0).distinct
+    require(dims.length == 1, s"kmeansFit: ragged dims (${dims.mkString(" vs ")})")
+    val dim = dims.head
+    val ids = parts.flatMap(_._1)
+    val xs = parts.flatMap(_._2)
+    val sorted = ids.clone()
+    java.util.Arrays.sort(sorted)
+    require((1 until sorted.length).forall(i => sorted(i) != sorted(i - 1)),
+      "kmeansFit: duplicate ids")
+    // init: the k smallest ids, cell c = the c-th smallest
+    var cents = new Array[Array[Double]](k)
+    ids.indices.foreach { i =>
+      val c = java.util.Arrays.binarySearch(sorted, 0, k, ids(i))
+      if (c >= 0) cents(c) = normQuant(xs(i))
+    }
+    for (_ <- 0 until iters) {
+      val sums = Array.ofDim[Double](k, dim)
+      val cnt = new Array[Long](k)
+      xs.foreach { x =>
+        val c = graft.dsp.Vec.argmaxDot(x, cents)
+        cnt(c) += 1
+        val s = sums(c)
+        var j = 0
+        while (j < dim) { s(j) += x(j); j += 1 }
+      }
+      // empty cells keep their previous centroid
+      cents = Array.tabulate(k)(c =>
+        if (cnt(c) == 0) cents(c) else normQuant(sums(c).map(_ / cnt(c).toDouble)))
+    }
+    Some(cents)
+  }
+
+  /** The fit as Spark jobs: a k-row init collect, then per iteration
+    * one aggregate whose k rows collect.
+    */
+  private def kmeansDistributed(corpus: DataFrame, idCol: String, vecCol: String,
+                                k: Int, iters: Int): Array[Array[Double]] = {
     val initRows = corpus
       .select(col(idCol).cast("long").as("_id"), asDouble(col(vecCol)).as("_v"))
       .orderBy(col("_id")).limit(k).collect()
@@ -299,10 +396,7 @@ object Ann {
         cents = next
       }
     }
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    cents.zipWithIndex.map { case (cv, cid) => (cid, cv) }.toSeq
-      .toDF(idCol, vecCol)
+    cents
   }
 
   /** Map-side cell assignment against a trained centroid table — the
@@ -397,7 +491,6 @@ object Ann {
     graft.functions.Functions.install(corpus.sparkSession)
     require(nSub >= 1 && kSub >= 1 && iters >= 0,
       "nSub/kSub must be positive, iters nonnegative")
-    def quant(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
     val initRows = corpus
       .select(col(idCol).cast("long").as("_id"), asDouble(col(vecCol)).as("_v"))
       .orderBy(col("_id")).limit(kSub).collect()

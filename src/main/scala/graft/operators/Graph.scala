@@ -48,28 +48,29 @@ object Graph {
     * edge list with sinks would not silently drop nodes.
     */
   def pageRank(edges: DataFrame, aCol: String, bCol: String,
-               iters: Int = 5, localThreshold: Long = 2000000L): DataFrame =
+               iters: Int = 5, localThreshold: Long = graft.Local.budget / 2): DataFrame =
       graft.CacheUtil.result { scope =>
     require(iters >= 0 && iters <= 50, "iters must be in [0, 50]")
     val undRaw = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-    // Driver fast path (round 22; the bpeTrain precedent): on a small
+    // Driver fast path (round 22; the [[graft.Local]] rule): on a small
     // graph the five supersteps are ~60 stages of 150-250 ms wall with
     // < 10 ms of work each (graph_pagerank 3.7 s warm on 2k edges). At
-    // or below `localThreshold` directed Long edges the edge list
-    // collects ONCE, as primitive long[] per partition (~75 MB of
-    // driver heap at the 2M default, the edge cache included; a boxed
-    // Row collect held ~350 MB), and the loop runs in memory: one
-    // Spark job. Bit-identical: the same long add / multiply /
-    // floor-div over the same multiset (integer sums commute), pinned
-    // by PipelineSpec's fast-vs-distributed test. Other key types and
-    // null endpoints take the distributed path; a 100 TB corpus's edge
-    // list exceeds the threshold by orders of magnitude.
+    // or below `localThreshold` directed Long edges (default: the
+    // Local budget at two longs an edge) the edge list is cached and
+    // counted by the `Local.rows` probe, then collects ONCE from the
+    // cache as primitive long[] per partition, and the loop runs in
+    // memory.
+    // Bit-identical: the same long add / multiply / floor-div over the
+    // same multiset (integer sums commute), pinned by PipelineSpec's
+    // fast-vs-distributed test. Other key types and null endpoints take
+    // the distributed path; a 100 TB corpus's edge list exceeds the
+    // threshold by orders of magnitude.
     val longKeyed = localThreshold > 0 &&
       undRaw.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
     // over threshold the distributed branch reuses the cache and the
     // count: scale pays ONE pass for the probe + sizing
-    val knownCount = if (longKeyed) scope.cache(undRaw).count() else -1L
+    val knownCount = if (longKeyed) graft.Local.rows(scope.cache(undRaw)) else -1L
     val parts = if (longKeyed && knownCount <= localThreshold) collectEdges(undRaw) else null
     if (parts != null) scope.release(undRaw)
     if (parts != null && parts.forall(_._3))
@@ -84,13 +85,13 @@ object Graph {
   private def collectEdges(und: DataFrame): Array[(Array[Long], Array[Long], Boolean)] = {
     val spark = und.sparkSession
     import spark.implicits._
-    und.mapPartitions { it =>
+    graft.Local.collect(und) { it =>
       val (src, dst) = (Array.newBuilder[Long], Array.newBuilder[Long])
       var ok = true
       it.foreach(r => if (r.isNullAt(0) || r.isNullAt(1)) ok = false
         else { src += r.getLong(0); dst += r.getLong(1) })
-      Iterator((src.result(), dst.result(), ok))
-    }.collect()
+      (src.result(), dst.result(), ok)
+    }
   }
 
   /** The distributed Pregel loop over the directed edge list `undRaw`

@@ -8,6 +8,22 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** `body`'s result and the Spark jobs started while it ran, counted
+    * after draining the listener bus.
+    */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftshim.BusInternals
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    BusInternals.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { val a = body; BusInternals.drain(spark.sparkContext); (a, jobs.get) }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkTestBase {

@@ -111,4 +111,36 @@ class ScaleSafetySpec extends SparkTestBase {
     assert(decode(flat) == expected)
     assert(decode(tree) == expected)
   }
+
+  test("kmeansFit over the Local budget collects no corpus rows to the driver") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, MapPartitions}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graftshim.BusInternals
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val (n, k) = (64L, 4)
+    val vecs = spark.range(0, n, 1, 4).selectExpr("id AS vec_id",
+      "transform(sequence(0, 7), d -> CAST((id * 3 + d) % 5 AS FLOAT)) AS embedding")
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        actions.add(f -> qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        actions.add(f -> qe.optimizedPlan)
+    }
+    spark.listenerManager.register(l)
+    try {
+      graft.Local.withBudget(n - 1)(Ann.kmeansFit(vecs, "vec_id", "embedding", k, 2))
+      BusInternals.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    val seen = actions.asScala.toSeq
+    // the k-row init, one per-cell aggregate per iteration, the count
+    def perCell(p: LogicalPlan) = p.collectFirst { case a: Aggregate => a }
+      .exists(_.groupingExpressions.exists(_.toString.contains("_cell")))
+    seen.foreach { case (f, p) =>
+      assert(p.maxRows.exists(_ <= k) || perCell(p), s"$f collected an unbounded plan:\n$p")
+      assert(p.find(_.isInstanceOf[MapPartitions]).isEmpty, s"$f ran a local collect:\n$p")
+    }
+    assert(seen.count { case (_, p) => perCell(p) } == 2, seen.map(_._1))
+  }
 }
