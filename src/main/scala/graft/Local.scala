@@ -24,9 +24,15 @@ import org.apache.spark.sql.{DataFrame, Encoder, Row}
   * materialized cache (138 MB for the JVM's first fit), and 73–85 MB
   * for `pageRank` on 2M directed edges, its edge cache included. Both
   * hold the collected rows twice for a moment: Spark's encoded result,
-  * then the decoded arrays.
+  * then the decoded arrays. The BPE trainer over a materialized frame
+  * of 500,000 seven-byte word types (types + bytes = 4M), 32 merges:
+  * 48–57 MB, its word-type cache included; 153–157 MB when the same
+  * types are aggregated from raw text inside the call, the peak then
+  * being Spark's aggregation rather than the loop. Its initial
+  * symbols share one array per byte value, so each costs a reference.
   *
-  * Sites: `Ann.kmeansFit` and `Graph.pageRank`.
+  * Sites: `Ann.kmeansFit`, `Graph.pageRank` and the BPE trainer
+  * (`TextOps.bpeTrain`, `bpeTrainBytes`).
   */
 object Local {
 

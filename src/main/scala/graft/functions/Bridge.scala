@@ -958,10 +958,6 @@ object Bridge {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       a.map(UTF8String.fromString))
 
-  /** One greedy pass of merge (l, r) over a symbol array. */
-  def bpeMerge(syms: ArrayData, l: UTF8String, r: UTF8String): ArrayData =
-    outS(graft.dsp.Bpe.applyMerge(strArr(syms), l.toString, r.toString))
-
   /** Tokenize one word under an ordered merge table (parallel l/r
     * arrays, rank order).
     */
@@ -1193,8 +1189,6 @@ object Bridge {
       StructField("w", IntegerType, nullable = false),
       StructField("h", IntegerType, nullable = false),
       StructField("psum", LongType, nullable = false))), containsNull = false)),
-    "bpeMerge" -> (Seq(ArrayType(StringType), StringType, StringType)
-      -> ArrayType(StringType, containsNull = false)),
     "bpeEncode" -> (Seq(StringType, ArrayType(StringType), ArrayType(StringType))
       -> ArrayType(StringType, containsNull = false)),
     "byteSyms" -> (Seq(BinaryType)

@@ -345,8 +345,6 @@ object Functions {
     def imageResizeBilinearC(bin: Column, ow: Int, oh: Int): Column =
       call("imageResizeBilinear", bin, lit(ow), lit(oh))
     def imageFramesC(bin: Column): Column = call("imageFrames", bin)
-    def bpeMergeC(syms: Column, l: Column, r: Column): Column =
-      call("bpeMerge", syms, l, r)
     def bpeEncodeC(word: Column, mergesL: Column, mergesR: Column): Column =
       call("bpeEncode", word, mergesL, mergesR)
     def byteSymsC(bin: Column): Column = call("byteSyms", bin)

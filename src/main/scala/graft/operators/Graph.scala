@@ -48,30 +48,30 @@ object Graph {
     * edge list with sinks would not silently drop nodes.
     */
   def pageRank(edges: DataFrame, aCol: String, bCol: String,
-               iters: Int = 5, localThreshold: Long = graft.Local.budget / 2): DataFrame =
+               iters: Int = 5): DataFrame =
       graft.CacheUtil.result { scope =>
     require(iters >= 0 && iters <= 50, "iters must be in [0, 50]")
     val undRaw = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
     // Driver fast path (round 22; the [[graft.Local]] rule): on a small
     // graph the five supersteps are ~60 stages of 150-250 ms wall with
-    // < 10 ms of work each (graph_pagerank 3.7 s warm on 2k edges). At
-    // or below `localThreshold` directed Long edges (default: the
-    // Local budget at two longs an edge) the edge list is cached and
-    // counted by the `Local.rows` probe, then collects ONCE from the
-    // cache as primitive long[] per partition, and the loop runs in
-    // memory.
+    // < 10 ms of work each (graph_pagerank 3.7 s warm on 2k edges).
+    // When the directed Long edges fit the Local budget at two longs an
+    // edge, the edge list is cached and counted by the `Local.rows`
+    // probe, then collects ONCE from the cache as primitive long[] per
+    // partition, and the loop runs in memory. A zero budget skips the
+    // probe.
     // Bit-identical: the same long add / multiply / floor-div over the
     // same multiset (integer sums commute), pinned by PipelineSpec's
     // fast-vs-distributed test. Other key types and null endpoints take
     // the distributed path; a 100 TB corpus's edge list exceeds the
-    // threshold by orders of magnitude.
-    val longKeyed = localThreshold > 0 &&
+    // budget by orders of magnitude.
+    val longKeyed = graft.Local.budget > 0 &&
       undRaw.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
-    // over threshold the distributed branch reuses the cache and the
+    // over the budget the distributed branch reuses the cache and the
     // count: scale pays ONE pass for the probe + sizing
     val knownCount = if (longKeyed) graft.Local.rows(scope.cache(undRaw)) else -1L
-    val parts = if (longKeyed && knownCount <= localThreshold) collectEdges(undRaw) else null
+    val parts = if (longKeyed && graft.Local.fits(2 * knownCount)) collectEdges(undRaw) else null
     if (parts != null) scope.release(undRaw)
     if (parts != null && parts.forall(_._3))
       pageRankLocal(edges.sparkSession, parts, iters,

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.US_ASCII
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -217,109 +219,17 @@ object TextOps {
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
   /** REAL byte-pair-encoding training (Sennrich et al., ACL 2016):
-    * learn `nMerges` merges over the corpus vocabulary. Iteration =
-    * one partial-aggregated shuffle (adjacent-pair counts over word
-    * types, overlaps counted) + a ONE-ROW argmax collect (ties: max
-    * count, then lexicographic pair) + a map-side greedy merge pass
-    * ([[graft.dsp.Bpe.applyMerge]]) over the cached vocabulary frame.
-    *
-    * Scale shape: state is the word-type frame (|V| rows — fits any
-    * cluster; vocabulary grows ~O(corpus^0.6), and at 100 TB you
-    * train on a hashSplit sample anyway), pair counting map-side
-    * partial-aggregates before its single shuffle, and the only
-    * driver traffic is the 1-row argmax per iteration — the same
-    * bounded control-plane collect as Ann.kmeansFit's centroid pull.
-    * Returns (left, right, pairCount) in rank order.
+    * learn `nMerges` merges over the lowercase `[a-z]+` word types
+    * ([[wordTypes]]) with the one trainer, [[bpeFit]]. The regex admits
+    * only ASCII letters, so each char symbol is one byte, string
+    * concatenation is byte concatenation and Spark's string order is
+    * unsigned byte order: the byte fit's merges, decoded as ASCII, are
+    * the char fit's. Returns (left, right, pairCount) in rank order.
     */
-  def bpeTrain(df: DataFrame, textCol: String, nMerges: Int,
-               localThreshold: Long = 200000L): Array[(String, String, Long)] = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    graft.functions.Functions.install(df.sparkSession)
-    val init = wordTypes(df, textCol)
-      .withColumn("syms", expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-    // Driver fast path (optimization round 21 — the byte trainer got
-    // this in r18, VERDICT r18 #6; same argument here): the training
-    // state is the WORD-TYPE histogram, vocabulary-sized, so below a
-    // threshold it collects ONCE and the merge loop runs in-memory —
-    // one Spark job instead of nMerges sequential (shuffle + 1-row
-    // collect) jobs. Identical output by construction: same greedy
-    // kernel ([[graft.dsp.Bpe.applyMerge]]), same argmax tie-break
-    // (max count, then UTF-8 byte order on l then r — Spark's string
-    // ordering and DuckDB's text compare).
-    graft.CacheUtil.eager { scope =>
-      val first = scope.cache(init)
-      if (first.count() <= localThreshold)
-        bpeTrainLocal(first.select(col("syms"), col("cnt")).collect().map(r =>
-          (r.getSeq[String](0).toArray, r.getLong(1))), nMerges)
-      else {
-        var state = first
-        var prev: DataFrame = null
-        val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var t = 0
-        while (t < nMerges) {
-          val top = state.filter(size(col("syms")) >= 2)
-            .select(col("cnt"), explode(expr(
-              "transform(sequence(1, size(syms) - 1), " +
-                "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))")).as("p"))
-            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-            .agg(sum("cnt").as("c"))
-            .orderBy(col("c").desc, col("l"), col("r"))
-            .limit(1).collect()
-          require(top.nonEmpty,
-            s"BPE training ran out of pairs after ${merges.length} merges " +
-              s"(every word is a single symbol); asked for $nMerges")
-          val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-          merges += ((l, r, c))
-          // the argmax job materialized `state`'s cache; the previous
-          // frame fed it and can go now
-          if (prev != null) scope.release(prev)
-          prev = state
-          state = scope.cache(state.withColumn("syms", bpeMergeC(col("syms"), lit(l), lit(r))))
-          t += 1
-        }
-        merges.toArray
-      }
+  def bpeTrain(df: DataFrame, textCol: String, nMerges: Int): Array[(String, String, Long)] =
+    bpeFit(wordTypes(df, textCol), nMerges).map { case (l, r, c) =>
+      (new String(l, US_ASCII), new String(r, US_ASCII), c)
     }
-  }
-
-  /** In-memory char-BPE merge loop over the collected word-type
-    * histogram — exactly the distributed loop's semantics (same greedy
-    * kernel, same argmax tie-break), minus the per-iteration scheduler
-    * round-trip.
-    */
-  private def bpeTrainLocal(words0: Array[(Array[String], Long)],
-                            nMerges: Int): Array[(String, String, Long)] = {
-    var words = words0
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    var t = 0
-    while (t < nMerges) {
-      val counts = new java.util.HashMap[(String, String), java.lang.Long]()
-      words.foreach { case (syms, cnt) =>
-        var i = 0
-        while (i + 1 < syms.length) {
-          counts.merge((syms(i), syms(i + 1)), cnt, (x, y) => x + y)
-          i += 1
-        }
-      }
-      require(!counts.isEmpty,
-        s"BPE training ran out of pairs after ${merges.length} merges " +
-          s"(every word is a single symbol); asked for $nMerges")
-      var bl: String = null; var br: String = null; var bc = Long.MinValue
-      counts.forEach { (k, c) =>
-        val better = c > bc || (c == bc && {
-          val dl = graft.dsp.Unigram.utf8Cmp(k._1, bl)
-          dl < 0 || (dl == 0 && graft.dsp.Unigram.utf8Cmp(k._2, br) < 0)
-        })
-        if (better) { bl = k._1; br = k._2; bc = c }
-      }
-      merges += ((bl, br, bc))
-      words = words.map { case (syms, cnt) =>
-        (graft.dsp.Bpe.applyMerge(syms, bl, br), cnt)
-      }
-      t += 1
-    }
-    merges.toArray
-  }
 
   /** Per-document token counts under a learned merge table: pure
     * map-side (merges ride into the plan as literal arrays — the
@@ -415,142 +325,150 @@ object TextOps {
       .select(col(idCol), col("pos"), element_at(vocabMap, col("_tok")).as("token_id"))
   }
 
-  /** BYTE-level BPE training (round 18 — the GPT-2 byte alphabet,
-    * Sennrich's algorithm applied to UTF-8 bytes; both public): word
-    * types are WHITESPACE-split pieces of the RAW text — case,
-    * digits, punctuation, and multi-byte scripts (CJK, Arabic,
-    * Cyrillic) all participate, closing the documented [a-z]+ gap of
-    * [[bpeTrain]] — and symbols are byte sequences. Same scale shape
-    * as the char-level trainer: state is the |V|-row word-type frame,
-    * pair counting partial-aggregates before one shuffle per
-    * iteration, and the only driver traffic is the 1-row argmax
-    * (ties: max count, then unsigned BYTE order — DuckDB's blob
-    * memcmp, so the oracle replays exactly). Returns
-    * (left bytes, right bytes, pairCount) in rank order.
+  /** BYTE-level BPE training (the GPT-2 byte alphabet, Sennrich's
+    * algorithm applied to UTF-8 bytes; both public): word types are
+    * WHITESPACE-split pieces of the RAW text — case, digits,
+    * punctuation, and multi-byte scripts (CJK, Arabic, Cyrillic) all
+    * participate, closing the documented [a-z]+ gap of [[bpeTrain]] —
+    * and symbols are byte sequences. Returns (left bytes, right bytes,
+    * pairCount) in rank order; the fit is [[bpeFit]].
     */
-  def bpeTrainBytes(df: DataFrame, textCol: String, nMerges: Int,
-                    localThreshold: Long = 200000L
-                   ): Array[(Array[Byte], Array[Byte], Long)] = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    graft.functions.Functions.install(df.sparkSession)
-    val init = df
-      .select(explode(filter(split(col(textCol), "\\s+"),
+  def bpeTrainBytes(df: DataFrame, textCol: String, nMerges: Int
+                   ): Array[(Array[Byte], Array[Byte], Long)] =
+    bpeFit(df.select(explode(filter(split(col(textCol), "\\s+"),
         w => length(w) > 0)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .withColumn("syms", byteSymsC(encode(col("word"), "UTF-8")))
-    // Driver fast path (VERDICT r18 #6): the training state is the
-    // WORD-TYPE histogram — vocabulary-sized, NOT corpus-sized — so
-    // below a threshold it collects ONCE and the merge loop runs
-    // in-memory: one Spark job total instead of nMerges sequential
-    // (shuffle + 1-row collect) jobs — a 50k-merge production vocab
-    // is 50k scheduler round-trips saved. Identical output by
-    // construction: same greedy kernel ([[graft.dsp.Bpe.applyMergeB]]),
-    // same argmax tie-break (max count, then unsigned-byte memcmp on
-    // l then r — Spark's BinaryType ordering AND DuckDB's blob
-    // memcmp). Corpora whose vocabulary exceeds the threshold keep
-    // the distributed loop below.
-    // persist BEFORE count: the threshold probe and the follow-up
-    // (collect or first merge round) both consume the full corpus
-    // scan + word-type aggregation — unpersisted, it would run twice
-    // before training even starts (ADVICE r19)
-    graft.CacheUtil.eager { scope =>
-      val first = scope.cache(init)
-      if (first.count() <= localThreshold)
-        bpeTrainBytesLocal(first.select(col("syms"), col("cnt")).collect().map(r =>
-          (r.getSeq[Array[Byte]](0).toArray, r.getLong(1))), nMerges)
-      else {
-        var state = first
-        val merges = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte], Long)]
-        var t = 0
-        while (t < nMerges) {
-          val top = state.filter(size(col("syms")) >= 2)
-            .select(col("cnt"), explode(expr(
-              "transform(sequence(1, size(syms) - 1), " +
-                "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))")).as("p"))
-            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-            .agg(sum("cnt").as("c"))
-            .orderBy(col("c").desc, col("l"), col("r"))
-            .limit(1).collect()
-          require(top.nonEmpty,
-            s"byte BPE training ran out of pairs after ${merges.length} merges " +
-              s"(every word is a single symbol); asked for $nMerges")
-          val (l, r, c) = (top(0).getAs[Array[Byte]](0),
-            top(0).getAs[Array[Byte]](1), top(0).getLong(2))
-          merges += ((l, r, c))
-          // localCheckpoint, NOT persist (round 19): an iterative
-          // withColumn chain grows the logical plan by one node per
-          // merge, and Catalyst's cost on the ever-deeper (cached but
-          // still fully re-analyzed) plan blows up super-linearly —
-          // measured 6 s at 8 merges but >9 min at 30. Truncating the
-          // lineage each iteration keeps every per-merge plan
-          // constant-depth, so the loop scales linearly in nMerges.
-          // (Superseded checkpoint RDDs are reclaimed by the
-          // ContextCleaner once unreferenced.)
-          state = state.withColumn("syms", bpeMergeBC(col("syms"), lit(l), lit(r)))
-            .localCheckpoint(true)
-          t += 1
-        }
-        merges.toArray
+      .groupBy("word").agg(count(lit(1)).as("cnt")), nMerges)
+
+  /** The one BPE trainer: `nMerges` merges over a (word: string,
+    * cnt: long) word-type frame whose symbols start as the words'
+    * UTF-8 bytes. Each merge is the most frequent adjacent pair
+    * (overlaps counted; ties: max count, then unsigned byte order on
+    * l then r — Spark's BinaryType ordering and DuckDB's blob memcmp,
+    * so the oracles replay the fit exactly), applied to every word by
+    * the greedy [[graft.dsp.Bpe.applyMergeB]].
+    *
+    * Scale shape: the state is the word-type frame, vocabulary-sized
+    * rather than corpus-sized (vocabulary grows ~O(corpus^0.6), and at
+    * 100 TB the fit runs on a hashSplit sample). [[graft.Local]] picks
+    * the path from one aggregate over the cached types, which also
+    * materializes the cache: types + Σ bytes elements, one per initial
+    * symbol and one per count.
+    *   - Within the budget the types collect once through
+    *     [[graft.Local.collect]], each partition packed as its words'
+    *     concatenated bytes, word ends and counts, and the merge loop
+    *     runs on the driver: one job instead of nMerges sequential
+    *     (shuffle + 1-row collect) round-trips.
+    *   - Over it, each merge is one partial-aggregated shuffle of pair
+    *     counts, a one-row argmax collect and a map-side merge pass.
+    *     Each merged state is localCheckpointed, so every argmax plan
+    *     has the same depth and the loop's cost is linear in nMerges
+    *     (a withColumn chain adds a plan node per merge, and Catalyst's
+    *     cost on the deepening plan grows super-linearly).
+    * Both paths give identical merges; PipelineSpec pins them equal
+    * with engineered ties and bytes over 0x7F.
+    */
+  private def bpeFit(types: DataFrame, nMerges: Int
+                    ): Array[(Array[Byte], Array[Byte], Long)] = {
+    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
+    graft.functions.Functions.install(types.sparkSession)
+    val merges = graft.CacheUtil.eager { scope =>
+      val words = scope.cache(types.select(encode(col("word"), "UTF-8").as("word"), col("cnt")))
+      val n = words.agg(count(lit(1)), coalesce(sum(length(col("word"))), lit(0L))).head()
+      if (graft.Local.fits(n.getLong(0) + n.getLong(1))) bpeFitLocal(words, nMerges)
+      else bpeFitDistributed(words, nMerges)
+    }
+    require(merges.length == nMerges,
+      s"BPE training ran out of pairs after ${merges.length} merges " +
+        s"(every word is a single symbol); asked for $nMerges")
+    merges
+  }
+
+  /** [[bpeFit]]'s driver loop over the collected (word bytes, cnt)
+    * frame; stops early when no word has two symbols left.
+    */
+  private def bpeFitLocal(words: DataFrame, nMerges: Int
+                         ): Array[(Array[Byte], Array[Byte], Long)] = {
+    val spark = words.sparkSession
+    import spark.implicits._
+    val parts = graft.Local.collect(words) { it =>
+      val (bytes, ends, cnts) = (Array.newBuilder[Byte], Array.newBuilder[Int], Array.newBuilder[Long])
+      var end = 0
+      it.foreach { r =>
+        val w = r.getAs[Array[Byte]](0)
+        bytes ++= w; end += w.length; ends += end; cnts += r.getLong(1)
+      }
+      (bytes.result(), ends.result(), cnts.result())
+    }
+    // one shared array per byte value: an initial symbol costs a reference
+    val byteSym = Array.tabulate(256)(b => Array(b.toByte))
+    val syms = parts.flatMap { case (bytes, ends, _) =>
+      ends.indices.map { i =>
+        val s = if (i == 0) 0 else ends(i - 1)
+        Array.tabulate(ends(i) - s)(j => byteSym(bytes(s + j) & 0xff))
       }
     }
-  }
-
-  /** Unsigned lexicographic byte compare (memcmp): Spark's BinaryType
-    * ordering and DuckDB's blob compare — the tie-break BOTH training
-    * paths and the oracle must share.
-    */
-  private def cmpBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
-
-  /** In-memory byte-BPE merge loop over the collected word-type
-    * histogram — exactly the distributed loop's semantics (same
-    * greedy kernel, same argmax tie-break), minus the per-iteration
-    * scheduler round-trip.
-    */
-  private def bpeTrainBytesLocal(words0: Array[(Array[Array[Byte]], Long)],
-                                 nMerges: Int
-                                ): Array[(Array[Byte], Array[Byte], Long)] = {
-    var words = words0
+    val cnts = parts.flatMap(_._3)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte], Long)]
-    var t = 0
-    while (t < nMerges) {
+    var more = true
+    while (more && merges.length < nMerges) {
+      if (merges.nonEmpty) {
+        val (l, r, _) = merges.last
+        var w = 0
+        while (w < syms.length) { syms(w) = graft.dsp.Bpe.applyMergeB(syms(w), l, r); w += 1 }
+      }
       val counts = new java.util.HashMap[(java.nio.ByteBuffer, java.nio.ByteBuffer), java.lang.Long]()
-      words.foreach { case (syms, cnt) =>
+      var w = 0
+      while (w < syms.length) {
+        val s = syms(w)
         var i = 0
-        while (i + 1 < syms.length) {
-          val k = (java.nio.ByteBuffer.wrap(syms(i)),
-            java.nio.ByteBuffer.wrap(syms(i + 1)))
-          counts.merge(k, cnt, (x, y) => x + y)
+        while (i + 1 < s.length) {
+          counts.merge((java.nio.ByteBuffer.wrap(s(i)), java.nio.ByteBuffer.wrap(s(i + 1))),
+            cnts(w), (x, y) => x + y)
           i += 1
         }
+        w += 1
       }
-      require(!counts.isEmpty,
-        s"byte BPE training ran out of pairs after ${merges.length} merges " +
-          s"(every word is a single symbol); asked for $nMerges")
       var bestL: Array[Byte] = null
       var bestR: Array[Byte] = null
       var bestC = -1L
       counts.forEach { (k, c) =>
         val l = k._1.array(); val r = k._2.array()
         val better = c > bestC || (c == bestC && {
-          val dl = cmpBytes(l, bestL)
-          dl < 0 || (dl == 0 && cmpBytes(r, bestR) < 0)
+          val dl = java.util.Arrays.compareUnsigned(l, bestL)
+          dl < 0 || (dl == 0 && java.util.Arrays.compareUnsigned(r, bestR) < 0)
         })
         if (better) { bestL = l; bestR = r; bestC = c }
       }
-      merges += ((bestL, bestR, bestC))
-      words = words.map { case (syms, cnt) =>
-        (graft.dsp.Bpe.applyMergeB(syms, bestL, bestR), cnt)
+      more = !counts.isEmpty
+      if (more) merges += ((bestL, bestR, bestC))
+    }
+    merges.toArray
+  }
+
+  /** [[bpeFit]]'s distributed loop over the cached (word bytes, cnt)
+    * frame; stops early when no word has two symbols left.
+    */
+  private def bpeFitDistributed(words: DataFrame, nMerges: Int
+                               ): Array[(Array[Byte], Array[Byte], Long)] = {
+    var state = words.select(byteSymsC(col("word")).as("syms"), col("cnt"))
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte], Long)]
+    var more = true
+    while (more && merges.length < nMerges) {
+      if (merges.nonEmpty) {
+        val (l, r, _) = merges.last
+        state = state.withColumn("syms", bpeMergeBC(col("syms"), lit(l), lit(r)))
+          .localCheckpoint(true)
       }
-      t += 1
+      val top = state.filter(size(col("syms")) >= 2)
+        .select(col("cnt"), explode(expr(
+          "transform(sequence(1, size(syms) - 1), " +
+            "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))")).as("p"))
+        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+        .agg(sum("cnt").as("c"))
+        .orderBy(col("c").desc, col("l"), col("r"))
+        .limit(1).collect()
+      more = top.nonEmpty
+      if (more) merges += ((top(0).getAs[Array[Byte]](0), top(0).getAs[Array[Byte]](1), top(0).getLong(2)))
     }
     merges.toArray
   }

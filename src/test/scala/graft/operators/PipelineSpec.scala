@@ -516,13 +516,68 @@ class PipelineSpec extends SparkTestBase {
       (1L, "xy xy xz zz zz qq qq"),
       (2L, "mnop mnop abc xy zz ÿþ")).toDF("doc_id", "text")
     val local = TextOps.bpeTrainBytes(docs, "text", 10) // tiny vocab -> driver path
-    val dist = TextOps.bpeTrainBytes(docs, "text", 10, localThreshold = 0L)
+    val dist = graft.Local.withBudget(0L)(TextOps.bpeTrainBytes(docs, "text", 10))
     assert(local.length === dist.length)
     local.zip(dist).zipWithIndex.foreach {
       case (((ll, lr, lc), (dl, dr, dc)), i) =>
         assert(ll.toSeq === dl.toSeq && lr.toSeq === dr.toSeq && lc === dc,
           s"merge $i drifted between the driver and distributed paths")
     }
+  }
+
+  test("char BPE: driver fast path and distributed loop produce IDENTICAL merges") {
+    import graft.operators.TextOps
+    // ASCII corpus engineered with count ties: the tie-break (count
+    // desc, then l, then r) must agree between the driver argmax and
+    // Spark's string ordering
+    val docs = Seq(
+      (0L, "abc abd abe xy xy mnop mnop theme"),
+      (1L, "xy xz zz zz qq qq The"),
+      (2L, "mnop abc xy zz the THESIS")).toDF("doc_id", "text")
+    val local = TextOps.bpeTrain(docs, "text", 10)
+    val dist = graft.Local.withBudget(0L)(TextOps.bpeTrain(docs, "text", 10))
+    assert(local.toSeq === dist.toSeq)
+  }
+
+  test("char BPE: the distributed loop's per-merge argmax plans stay constant-depth") {
+    import graft.operators.TextOps
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graftshim.BusInternals
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val docs = Seq(
+      (0L, "the theme thesis mnop abc abd"),
+      (1L, "xy xz zz qq ababab mnop")).toDF("doc_id", "text")
+    // analyzed-plan node count of every argmax collect, in order
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "collect" && qe.analyzed.find(_.isInstanceOf[Sort]).isDefined)
+          sizes.add(qe.analyzed.collect { case p => p }.length)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      graft.Local.withBudget(0L)(TextOps.bpeTrain(docs, "text", 10))
+      BusInternals.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    val seen = sizes.asScala.toSeq
+    assert(seen.length == 10, seen)
+    assert(seen.drop(1).distinct.length == 1,
+      s"argmax plans deepen per merge: ${seen.mkString(", ")}")
+  }
+
+  test("char BPE over the [a-z]+ words equals byte BPE over the same words") {
+    import graft.operators.TextOps
+    val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    val chars = TextOps.bpeTrain(docs, "text", 8)
+    val words = docs.select(expr(
+      "array_join(regexp_extract_all(lower(text), '[a-z]+', 0), ' ')").as("text"))
+    val bytes = TextOps.bpeTrainBytes(words, "text", 8).map { case (l, r, c) =>
+      (new String(l, "US-ASCII"), new String(r, "US-ASCII"), c)
+    }
+    assert(chars.toSeq === bytes.toSeq)
   }
 
   test("unigramTrain caps the collected vocabulary at the MOST FREQUENT types") {
@@ -1642,8 +1697,7 @@ class PipelineSpec extends SparkTestBase {
       (3L, 9L) :+ (3L, 9L)).toDF("a", "b")
     for (it <- Seq(0, 1, 5)) {
       val fast = Graph.pageRank(edges, "a", "b", iters = it)
-      val dist = Graph.pageRank(edges, "a", "b", iters = it,
-        localThreshold = 0L)
+      val dist = graft.Local.withBudget(0L)(Graph.pageRank(edges, "a", "b", iters = it))
       assert(fast.schema == dist.schema,
         s"iters=$it schema: ${fast.schema} vs ${dist.schema}")
       val f = fast.collect().map(r =>

@@ -631,10 +631,10 @@ class PlanShapeSpec extends SparkTestBase {
     // uncached recompute).
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
       .toDF("a", "b")
-    // localThreshold = 0 forces the distributed Pregel path (round 22:
+    // a zero Local budget forces the distributed Pregel path (round 22:
     // small Long-keyed graphs take the driver fast path by default —
     // this test pins the scale path's cached-subtree shape)
-    val pr = Graph.pageRank(edges, "a", "b", iters = 3, localThreshold = 0L)
+    val pr = graft.Local.withBudget(0L)(Graph.pageRank(edges, "a", "b", iters = 3))
     pr.collect()
     val plan = pr.queryExecution.executedPlan.toString
     val cached = "InMemoryTableScan".r.findAllIn(plan).length
