@@ -30,9 +30,13 @@ import org.apache.spark.sql.{DataFrame, Encoder, Row}
   * types are aggregated from raw text inside the call, the peak then
   * being Spark's aggregation rather than the loop. Its initial
   * symbols share one array per byte value, so each costs a reference.
+  * Exact order statistics, 2M values in 1 or 5 cached groups: 86–115
+  * MB. The unigram EM's flat combine held up to 287 MB at 1M lanes, so
+  * a lane counts 8 elements: 50–149 MB at 500k lanes, 2–250 partitions.
   *
-  * Sites: `Ann.kmeansFit`, `Graph.pageRank` and the BPE trainer
-  * (`TextOps.bpeTrain`, `bpeTrainBytes`).
+  * Sites: `Ann.kmeansFit`, `Graph.pageRank`, the BPE trainer, the
+  * exact order statistics (`Stats.exactRankValues`) and the unigram
+  * EM's combine (`TextOps.unigramTrainLarge`).
   */
 object Local {
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Column-level distribution statistics at corpus scale. */
@@ -40,41 +40,43 @@ object Stats {
   /** EXACT per-group median of a numeric column WITHOUT sorting any
     * group into one task — the mega-group order-statistic pattern
     * `percentile`'s per-group sort buffer (q7) cannot survive at
-    * 100 TB and the GK sketch (q15) only approximates. Histogram
-    * descent: each pass bins the group's surviving candidate set into
-    * `nBins` equal-width buckets with ONE partial-aggregatable count
-    * pass over the (cached) column, the driver walks the bounded
-    * (groups × nBins) histogram to find the bucket holding the target
-    * rank, and the next pass descends into it; when a bucket's
-    * population drops under `collectThreshold`, a final bounded
-    * sort_array collect reads the exact order statistic out of it.
-    * Candidates shrink ~nBins× per pass, so 600k-row groups finish in
-    * one descent level; the scan count is O(log_nBins(n/threshold)),
-    * never O(n log n) shuffle-sort.
+    * 100 TB and the GK sketch (q15) only approximates. Open groups
+    * whose values fit the [[graft.Local]] budget (two elements a value:
+    * cell id and value) collect once, packed as primitive arrays, and
+    * each group's target ranks are read from a driver sort. Larger
+    * ones first shrink by histogram descent: each pass bins every open
+    * cell into `nBins` equal-width buckets with ONE partial-aggregated
+    * (count, min, max) pass over the cached column, the driver walks
+    * the bounded (cells × nBins) histogram to the bucket holding each
+    * target rank, and the next pass descends into it; a bucket holding
+    * one distinct value resolves its ranks at once. Candidates shrink
+    * ~nBins× per pass, so the scan count is O(log_nBins(n/budget)),
+    * never an O(n log n) shuffle-sort, and survivors that still do not
+    * fit after `maxPasses` throw instead of collecting.
     *
     * Exactness under floating point: bucket assignment is
     * min(max(floor((v − lo)/w), 0), nBins−1) — monotone non-decreasing
     * in v (IEEE subtraction and positive division are monotone), so
     * buckets are an ORDER-ALIGNED partition of the population no
     * matter where ulp wobble puts edge values, which is all rank
-    * descent needs. Each state's population is defined by the
-    * conjunction of its bucket-equality chain (the identical
-    * expressions the count passes grouped on), never by numeric range
-    * predicates that could disagree with the assignment by an ulp.
+    * descent needs. A cell's population is defined by its
+    * bucket-equality chain (the identical expression the count passes
+    * grouped on), never by numeric range predicates that could
+    * disagree with the assignment by an ulp.
     *
     * Both middle order statistics are tracked (ranks ⌊(n−1)/2⌋ and
     * ⌈(n−1)/2⌉, 0-based), median = their mean — quantile_cont(0.5).
-    * Returns (keyCol: string form, n, med_lo, med_hi, median).
-    * Group count must be bounded (the per-pass driver state is
-    * O(groups), the kmeansFit control-plane shape).
+    * Returns (keyCol: string form, n, med_lo, med_hi, median); a NULL
+    * key is rejected. Each pass's plan is the same whatever the number
+    * of groups, but driver state is O(groups), so the group count
+    * must stay bounded (the kmeansFit control-plane shape).
     */
   def exactMedianHist(df: DataFrame, keyCol: String, valueCol: String,
-                      nBins: Int = 4096, collectThreshold: Int = 100000,
-                      maxPasses: Int = 8): DataFrame = {
+                      nBins: Int = 4096, maxPasses: Int = 8): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     exactRankValues(df, keyCol, valueCol, n => Seq((n - 1) / 2, n / 2),
-      nBins, collectThreshold, maxPasses)
+      nBins, maxPasses)
       .map { case (k, n, rs) =>
         val lo = rs((n - 1) / 2)
         val hi = rs(n / 2)
@@ -85,17 +87,15 @@ object Stats {
   /** EXACT per-group quantile_cont(p) — [[exactMedianHist]]'s descent
     * generalized to arbitrary p (VERDICT r11 #7): target position
     * h = (n−1)·p, the bracketing order statistics at ranks ⌊h⌋ and
-    * ⌈h⌉ descend as independent search states, and the result is the
+    * ⌈h⌉ are the group's target ranks, and the result is the
     * linear interpolation q = v_⌊h⌋ + (h − ⌊h⌋)·(v_⌈h⌉ − v_⌊h⌋) —
     * quantile_cont's formula, written as the same IEEE expression the
     * oracle evaluates so both engines agree bitwise on identical
-    * inputs. Same scale shape as the median: O(log_nBins(n/threshold))
-    * counting scans, never a per-group sort.
+    * inputs. Same scale shape as the median.
     * Returns (keyCol: string form, n, q_lo, q_hi, quantile).
     */
   def exactQuantileHist(df: DataFrame, keyCol: String, valueCol: String,
                         p: Double, nBins: Int = 4096,
-                        collectThreshold: Int = 100000,
                         maxPasses: Int = 8): DataFrame = {
     require(p >= 0.0 && p <= 1.0, "p must be in [0, 1]")
     val spark = df.sparkSession
@@ -106,8 +106,7 @@ object Stats {
       (r1, math.ceil(h).toLong, h - r1)
     }
     exactRankValues(df, keyCol, valueCol,
-      n => { val (r1, r2, _) = pos(n); Seq(r1, r2) },
-      nBins, collectThreshold, maxPasses)
+      n => { val (r1, r2, _) = pos(n); Seq(r1, r2) }, nBins, maxPasses)
       .map { case (k, n, rs) =>
         val (r1, r2, frac) = pos(n)
         val lo = rs(r1)
@@ -116,17 +115,16 @@ object Stats {
       }.toDF(keyCol, "n", "q_lo", "q_hi", "quantile")
   }
 
-  /** Shared descent core: per key, the exact 0-based order statistics
-    * at `ranksOf(n)`. Returns (key, n, rank → value) with keys sorted.
+  /** Shared core: per key, the exact 0-based order statistics at
+    * `ranksOf(n)`. Returns (key, n, rank → value) with keys sorted.
     * See [[exactMedianHist]] for the algorithm and the floating-point
     * exactness argument.
     */
   private def exactRankValues(
       df: DataFrame, keyCol: String, valueCol: String,
-      ranksOf: Long => Seq[Long], nBins: Int, collectThreshold: Int,
+      ranksOf: Long => Seq[Long], nBins: Int,
       maxPasses: Int): Seq[(String, Long, Map[Long, Double])] = {
-    require(nBins >= 2 && collectThreshold >= 1 && maxPasses >= 1,
-      "bad exactRankValues parameters")
+    require(nBins >= 2 && maxPasses >= 1, "bad exactRankValues parameters")
     val spark = df.sparkSession
     import spark.implicits._
     graft.CacheUtil.eager { scope =>
@@ -137,88 +135,87 @@ object Stats {
       val base = vals.groupBy("k")
         .agg(count(lit(1)).as("n"), min("v").as("mn"), max("v").as("mx"))
         .collect()
-        .map(r => (r.getString(0), (r.getLong(1), r.getDouble(2), r.getDouble(3))))
-        .toMap
-      // one search state per (group, middle-rank); chain = the bucket
-      // path taken so far, each level (lo, w, chosen bucket)
-      final case class St(key: String, target: Long, rank: Long,
-                          chain: List[(Double, Double, Int)],
-                          lo: Double, hi: Double, pop: Long,
-                          var result: Option[Double])
-      var states: Seq[St] = base.toSeq.flatMap { case (k, (n, mn, mx)) =>
-        ranksOf(n).distinct.map { r =>
-          if (mn == mx) St(k, r, r, Nil, mn, mx, n, Some(mn))
-          else St(k, r, r, Nil, mn, mx, n, None)
-        }
+      val nulls = base.filter(_.isNullAt(0)).map(_.getLong(1)).sum
+      require(nulls == 0, s"$nulls NULL keys in $keyCol: every value needs a group")
+      // a cell: one group's open target ranks that share a bucket chain,
+      // each as (target, rank within the cell); chain = the buckets
+      // taken so far, each level (lo, w, bucket)
+      final case class Cell(key: String, chain: Vector[(Double, Double, Int)],
+                            lo: Double, hi: Double, pop: Long, ranks: Seq[(Long, Long)]) {
+        def w: Double = (hi - lo) / nBins
       }
-      def binExpr(lo: Double, w: Double): org.apache.spark.sql.Column =
-        least(greatest(floor((col("v") - lit(lo)) / lit(w)).cast("int"),
-          lit(0)), lit(nBins - 1))
-      def chainFilter(st: St): org.apache.spark.sql.Column =
-        st.chain.foldLeft(col("k") === lit(st.key)) {
-          case (acc, (lo, w, b)) => acc && binExpr(lo, w) === lit(b)
-        }
+      val found = scala.collection.mutable.Map.empty[(String, Long), Double]
+      var cells: Seq[Cell] = base.toSeq.flatMap { r =>
+        val (k, n, mn, mx) = (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))
+        val ranks = ranksOf(n).distinct
+        if (mn == mx) { ranks.foreach(t => found((k, t)) = mn); None }
+        else Some(Cell(k, Vector.empty, mn, mx, n, ranks.map(t => t -> t)))
+      }
+      def binOf(lo: Column, w: Column): Column =
+        least(greatest(floor((col("v") - lo) / w).cast("int"), lit(0)), lit(nBins - 1))
+      // every value of an open cell, tagged with the cell's index: one
+      // join with a broadcast cell table, whatever the number of cells.
+      // The chain check stops at the first level a value left, so no
+      // deeper level bins (and casts) an out-of-bucket value.
+      def tagged(open: Seq[Cell]): DataFrame = {
+        val table = open.zipWithIndex.map { case (c, i) =>
+          (i, c.key, c.chain.map(_._1).toArray, c.chain.map(_._2).toArray,
+            c.chain.map(_._3).toArray, c.lo, c.w)
+        }.toDF("cell", "k", "los", "ws", "bins", "lo", "w")
+        vals.join(broadcast(table), "k")
+          .filter(forall(arrays_zip(col("los"), col("ws"), col("bins")),
+            l => binOf(l("los"), l("ws")) === l("bins")))
+      }
+      // two elements a collected value: its cell id and the value
+      def fits(open: Seq[Cell]): Boolean = graft.Local.fits(2 * open.map(_.pop).sum)
       var pass = 0
-      while (states.exists(s => s.result.isEmpty && s.pop > collectThreshold) &&
-        pass < maxPasses) {
+      while (cells.nonEmpty && !fits(cells) && pass < maxPasses) {
         pass += 1
-        val active = states.filter(s => s.result.isEmpty && s.pop > collectThreshold)
-        // ONE job for all active states: union of per-state bucket counts
-        // (states are bounded — a handful of groups × 2 ranks)
-        val hists = active.zipWithIndex.map { case (st, i) =>
-          val w = (st.hi - st.lo) / nBins
-          vals.filter(chainFilter(st))
-            .select(lit(i).as("sid"), binExpr(st.lo, w).as("bin"))
-            .groupBy("sid", "bin").agg(count(lit(1)).as("cnt"))
-        }.reduce(_ union _).collect()
-          .groupBy(_.getInt(0))
-          .map { case (sid, rows) =>
-            sid -> rows.map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1)
-          }
-        states = states.map { st =>
-          val i = active.indexOf(st)
-          if (i < 0) st
-          else {
-            val w = (st.hi - st.lo) / nBins
-            var rank = st.rank
-            var chosen = -1
-            var cnt = 0L
-            val it = hists(i).iterator
-            while (chosen < 0 && it.hasNext) {
-              val (b, c) = it.next()
-              if (rank < c) { chosen = b; cnt = c } else rank -= c
-            }
-            require(chosen >= 0, s"rank walk fell off the histogram for ${st.key}")
-            val nlo = st.lo + chosen * w
-            val nhi = if (chosen == nBins - 1) st.hi else st.lo + (chosen + 1) * w
-            if (nlo == nhi || w == 0)
-              st.copy(rank = rank, pop = cnt, result = Some(nlo))
-            else
-              st.copy(chain = st.chain :+ (st.lo, w, chosen),
-                lo = nlo, hi = nhi, rank = rank, pop = cnt)
+        val hist = tagged(cells).withColumn("bin", binOf(col("lo"), col("w")))
+          .groupBy("cell", "bin").agg(count(lit(1)), min("v"), max("v")).collect()
+          .map(r => r.getInt(0) -> (r.getInt(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
+          .groupBy(_._1).map { case (i, rs) => i -> rs.map(_._2).sortBy(_._1) }
+        cells = cells.zipWithIndex.flatMap { case (c, i) =>
+          val buckets = hist.getOrElse(i, Array.empty[(Int, Long, Double, Double)])
+          // each rank's bucket (index j) and its rank inside it
+          c.ranks.map { case (t, r) =>
+            var (j, rank) = (0, r)
+            while (j < buckets.length && rank >= buckets(j)._2) { rank -= buckets(j)._2; j += 1 }
+            require(j < buckets.length, s"rank walk fell off the histogram for ${c.key}")
+            (j, (t, rank))
+          }.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (j, rs) =>
+            val (b, cnt, bmin, bmax) = buckets(j)
+            val (w, ranks) = (c.w, rs.map(_._2))
+            val nlo = c.lo + b * w
+            val nhi = if (b == nBins - 1) c.hi else c.lo + (b + 1) * w
+            if (bmin == bmax || nlo == nhi || w == 0) {
+              ranks.foreach { case (t, _) => found((c.key, t)) = if (bmin == bmax) bmin else nlo }
+              None
+            } else Some(Cell(c.key, c.chain :+ ((c.lo, w, b)), nlo, nhi, cnt, ranks))
           }
         }
       }
-      // final bounded collect for the survivors
-      val open = states.filter(_.result.isEmpty)
-      if (open.nonEmpty) {
-        val finals = open.zipWithIndex.map { case (st, i) =>
-          vals.filter(chainFilter(st))
-            .select(lit(i).as("sid"), col("v"))
-            .groupBy("sid")
-            .agg(sort_array(collect_list(col("v"))).as("vs"))
-        }.reduce(_ union _).collect()
-          .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-        open.zipWithIndex.foreach { case (st, i) =>
-          val vs = finals(i)
-          require(st.rank < vs.length,
-            s"rank ${st.rank} outside collected bucket (${vs.length}) for ${st.key}")
-          st.result = Some(vs(st.rank.toInt))
+      if (cells.nonEmpty) {
+        if (!fits(cells)) throw new IllegalStateException(
+          s"exact order statistics: ${cells.map(_.pop).sum} values in ${cells.size} open " +
+            s"cells after $pass passes do not fit the Local budget of ${graft.Local.budget} " +
+            "elements (two a value); raise nBins or maxPasses")
+        val parts = graft.Local.collect(tagged(cells).select("cell", "v")) { it =>
+          val (cs, vs) = (Array.newBuilder[Int], Array.newBuilder[Double])
+          it.foreach { r => cs += r.getInt(0); vs += r.getDouble(1) }
+          (cs.result(), vs.result())
+        }
+        val sorted = cells.map(c => new Array[Double](c.pop.toInt)).toArray
+        val filled = new Array[Int](sorted.length)
+        for ((cs, vs) <- parts; j <- cs.indices) { sorted(cs(j))(filled(cs(j))) = vs(j); filled(cs(j)) += 1 }
+        cells.zipWithIndex.foreach { case (c, i) =>
+          require(filled(i) == c.pop, s"collected ${filled(i)} of ${c.pop} values for ${c.key}")
+          java.util.Arrays.sort(sorted(i))
+          c.ranks.foreach { case (t, r) => found((c.key, t)) = sorted(i)(r.toInt) }
         }
       }
-      val byKey = states.groupBy(_.key)
-      base.toSeq.sortBy(_._1).map { case (k, (n, _, _)) =>
-        (k, n, byKey(k).map(s => s.target -> s.result.get).toMap)
+      base.map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq.map { case (k, n) =>
+        (k, n, ranksOf(n).distinct.map(t => t -> found((k, t))).toMap)
       }
     }
   }

@@ -664,22 +664,17 @@ object TextOps {
         val bcVocab = spark0.sparkContext.broadcast((vocab, vocab.map(scores)))
         val mlCap = maxLen
         // Two-level combine (optimization round 22, VERDICT r21 #2):
-        // with many input partitions the per-partition vocab-sized
-        // partials treeReduce on the EXECUTORS, so the driver receives
-        // ONE O(vocab) array per EM round instead of partitions × vocab
-        // BigInteger lanes — the flat collect was O(partitions × vocab)
-        // driver traffic, a 100 TB scale bug at 10⁴–10⁵ input
-        // partitions. Below the threshold the flat collect + driver
-        // merge stays: treeReduce inserts an extra shuffle stage per EM
-        // round, which a ~20-round local fit paid dearly for
-        // (text_unigram_large 2.5 → 4.0 s measured before this gate —
-        // the driver merge of ≤256 partials is microseconds).
-        // BigInteger sums are associative/commutative, so both paths
-        // and any merge tree yield bit-identical totals
-        // (hash-oracle-verified).
+        // partials (vocab + 1 lanes each) that fit the [[graft.Local]]
+        // budget collect flat and merge on the driver; otherwise they
+        // treeReduce on the EXECUTORS and the driver receives ONE
+        // O(vocab) array per round, not partitions × vocab lanes (a
+        // 100 TB scale bug at 10⁴–10⁵ partitions). treeReduce adds a
+        // shuffle stage per round (text_unigram_large 2.5 → 4.0 s when
+        // unconditional). BigInteger sums are associative/commutative,
+        // so both paths give bit-identical totals (hash-oracle-verified).
         val merged: Array[(String, Array[Byte])] = {
           import spark0.implicits._
-          hist.select(col("word"), col("cnt")).as[(String, Long)]
+          val partials = hist.select(col("word"), col("cnt")).as[(String, Long)]
             .mapPartitions { it =>
               val (psA, lqA) = bcVocab.value
               val m = Unigram.UniModel.build(psA, lqA, mlCap)
@@ -705,11 +700,12 @@ object TextOps {
               }
               out(k) = ("", z.toByteArray)
               Iterator.single(out)
-            }.rdd match {
-              case prdd if prdd.getNumPartitions <= 256 =>
-                prdd.collect().reduceLeft(Unigram.mergePartials)
-              case prdd => prdd.treeReduce(Unigram.mergePartials _, depth = 2)
             }
+          // a lane counts as 8 elements (driver heap in [[graft.Local]])
+          val lanes = graft.Width.width(partials.toDF()).toLong * (vocab.length + 1)
+          if (graft.Local.fits(8 * lanes))
+            partials.rdd.collect().reduceLeft(Unigram.mergePartials)
+          else partials.rdd.treeReduce(Unigram.mergePartials _, depth = 2)
         }
         bcVocab.destroy()
         var ll: BigInt = BigInt(0)

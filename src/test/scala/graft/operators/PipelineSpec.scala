@@ -632,6 +632,22 @@ class PipelineSpec extends SparkTestBase {
     assert(fit.stats.toSeq == fit2.stats.toSeq)
   }
 
+  test("unigramTrainLarge: the executor treeReduce combine equals the driver combine") {
+    import graft.operators.TextOps
+    val base = Seq("key", "row", "agg", "scan", "sort", "join")
+    val docs = (0 until 60).map { i =>
+      val w = (0 until 6).map(j => base((i + j) % 6) + base((i + 2 * j + 1) % 6))
+      (i.toLong, w.mkString(" "))
+    }.toDF("doc_id", "text")
+    def fit() = TextOps.unigramTrainLarge(docs, "text", maxLen = 6,
+      seedSize = 64, targetMulti = 8, shrinkKeep = 0.75, finalRounds = 2)
+    val flat = fit()
+    val tree = graft.Local.withBudget(0L)(fit())
+    assert(tree.pieces.toSeq == flat.pieces.toSeq)
+    assert(tree.stats.toSeq == flat.stats.toSeq)
+    assert(tree.totalWords == flat.totalWords)
+  }
+
   test("unigramTrainLarge guards: unreachable target and non-BMP corpora are loud") {
     import graft.operators.TextOps
     val tiny = Seq((0L, "ab ab ab")).toDF("doc_id", "text")
@@ -1290,9 +1306,9 @@ class PipelineSpec extends SparkTestBase {
     rows += ("one" -> 42.0)
     val data = rnd.shuffle(rows.result())
     val df = data.toDF("k", "v").repartition(7)
-    // collectThreshold 16 + nBins 8 forces several descent levels
-    val got = Stats.exactMedianHist(df, "k", "v",
-      nBins = 8, collectThreshold = 16, maxPasses = 16)
+    // a 16-element Local budget + nBins 8 forces several descent levels
+    val got = graft.Local.withBudget(16L)(Stats.exactMedianHist(df, "k", "v",
+      nBins = 8, maxPasses = 16))
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
     data.groupBy(_._1).foreach { case (k, kv) =>
@@ -1319,8 +1335,8 @@ class PipelineSpec extends SparkTestBase {
     val data = rnd.shuffle(rows.result())
     val df = data.toDF("k", "v").repartition(7)
     for (p <- Seq(0.0, 0.25, 0.5, 0.95, 1.0)) {
-      val got = Stats.exactQuantileHist(df, "k", "v", p,
-        nBins = 8, collectThreshold = 16, maxPasses = 16)
+      val got = graft.Local.withBudget(16L)(Stats.exactQuantileHist(df, "k", "v", p,
+        nBins = 8, maxPasses = 16))
         .collect().map(r => r.getString(0) ->
           (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
       data.groupBy(_._1).foreach { case (k, kv) =>
@@ -1338,14 +1354,122 @@ class PipelineSpec extends SparkTestBase {
     }
     // p=0.5 agrees with the median machinery (lo + 0.5*(hi-lo) vs
     // (lo+hi)/2 — same value up to one ulp of rounding difference)
-    val med = Stats.exactMedianHist(df, "k", "v",
-      nBins = 8, collectThreshold = 16, maxPasses = 16)
+    val med = graft.Local.withBudget(16L)(Stats.exactMedianHist(df, "k", "v",
+      nBins = 8, maxPasses = 16))
       .collect().map(r => r.getString(0) -> r.getDouble(4)).toMap
-    val q50 = Stats.exactQuantileHist(df, "k", "v", 0.5,
-      nBins = 8, collectThreshold = 16, maxPasses = 16)
+    val q50 = graft.Local.withBudget(16L)(Stats.exactQuantileHist(df, "k", "v", 0.5,
+      nBins = 8, maxPasses = 16))
       .collect().map(r => r.getString(0) -> r.getDouble(4)).toMap
     med.foreach { case (k, m) =>
       assert(math.abs(q50(k) - m) <= math.ulp(m), s"$k p50 != median") }
+  }
+
+  /** `median` and `quantile` at p in {0, 0.25, 0.5, 0.95, 1} over
+    * `data` equal a driver sort: NaN greatest, zeros compared
+    * numerically, NaN equal to NaN.
+    */
+  private def assertRankStats(data: Seq[(String, Double)])(
+      median: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      quantile: (org.apache.spark.sql.DataFrame, Double) => org.apache.spark.sql.DataFrame
+  ): Unit = {
+    val df = data.toDF("k", "v").repartition(7)
+    val ref = data.groupBy(_._1).map { case (k, kv) =>
+      k -> kv.map(_._2).sortWith((a, b) => !a.isNaN && (b.isNaN || a < b)).toIndexedSeq
+    }
+    def same(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
+    def rows(out: org.apache.spark.sql.DataFrame) = out.collect().map(r => r.getString(0) ->
+      (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
+    val med = rows(median(df))
+    assert(med.keySet == ref.keySet)
+    ref.foreach { case (k, vs) =>
+      val n = vs.length
+      val (lo, hi) = (vs((n - 1) / 2), vs(n / 2))
+      val (gn, glo, ghi, gmed) = med(k)
+      assert(gn == n && same(glo, lo) && same(ghi, hi) && same(gmed, (lo + hi) / 2.0),
+        s"$k median: ($gn, $glo, $ghi, $gmed) vs ($n, $lo, $hi)")
+    }
+    for (p <- Seq(0.0, 0.25, 0.5, 0.95, 1.0)) {
+      val got = rows(quantile(df, p))
+      assert(got.keySet == ref.keySet)
+      ref.foreach { case (k, vs) =>
+        val n = vs.length
+        val h = (n - 1) * p
+        val (lo, hi) = (vs(math.floor(h).toInt), vs(math.ceil(h).toInt))
+        val (gn, glo, ghi, gq) = got(k)
+        assert(gn == n && same(glo, lo) && same(ghi, hi) &&
+          same(gq, lo + (h - math.floor(h)) * (hi - lo)),
+          s"$k at p=$p: ($gn, $glo, $ghi, $gq) vs ($n, $lo, $hi)")
+      }
+    }
+  }
+
+  /** Heavy ties, signed zeros, a singleton, a constant group, odd and
+    * even sizes; `nonFinite` adds +-Infinity and NaN groups.
+    */
+  private def edgeGroups(nonFinite: Boolean): Seq[(String, Double)] = {
+    val rnd = new scala.util.Random(13)
+    val rows = Seq.newBuilder[(String, Double)]
+    (1 to 301).foreach(i => rows += ("ties" -> (if (i % 3 == 0) 1.5 else 2.5)))
+    Seq(-0.0, 0.0, 0.0, -0.0, -0.0, 1.0, -1.0, 0.0).foreach(v => rows += ("zeros" -> v))
+    rows += ("one" -> 7.0)
+    (1 to 40).foreach(_ => rows += ("const" -> -3.5))
+    (1 to 99).foreach(_ => rows += ("odd" -> rnd.nextGaussian()))
+    (1 to 100).foreach(_ => rows += ("even" -> rnd.nextGaussian() * 1e6))
+    if (nonFinite) {
+      val (inf, nan) = (Double.PositiveInfinity, Double.NaN)
+      Seq(-inf, -1.0, 0.0, 3.0, inf, inf).foreach(v => rows += ("inf" -> v))
+      Seq(nan, 1.0, nan, -2.0, 5.0).foreach(v => rows += ("nan" -> v))
+      Seq(nan, nan, nan).foreach(v => rows += ("allnan" -> v))
+    }
+    rnd.shuffle(rows.result())
+  }
+
+  test("exact order statistics: edge values equal a driver sort") {
+    assertRankStats(edgeGroups(nonFinite = true))(
+      Stats.exactMedianHist(_, "k", "v"), Stats.exactQuantileHist(_, "k", "v", _))
+  }
+
+  test("exact order statistics: finite edge values equal a driver sort, forced descent") {
+    assertRankStats(edgeGroups(nonFinite = false))(
+      df => graft.Local.withBudget(16L)(
+        Stats.exactMedianHist(df, "k", "v", nBins = 8, maxPasses = 16)),
+      (df, p) => graft.Local.withBudget(16L)(
+        Stats.exactQuantileHist(df, "k", "v", p, nBins = 8, maxPasses = 16)))
+  }
+
+  test("exact order statistics reject NULL group keys, naming the column and count") {
+    val df = Seq[(String, Double)](("a", 1.0), (null, 2.0), ("b", 3.0), (null, 4.0),
+      ("a", 5.0), (null, 6.0)).toDF("grp", "v")
+    for (run <- Seq(() => Stats.exactMedianHist(df, "grp", "v"),
+        () => Stats.exactQuantileHist(df, "grp", "v", 0.95))) {
+      val ex = intercept[IllegalArgumentException](run())
+      assert(ex.getMessage.contains("grp") && ex.getMessage.contains("3 NULL"), ex.getMessage)
+    }
+  }
+
+  test("exact order statistics: forced-descent plans do not grow with the group count") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graftshim.BusInternals
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def largestPlan(groups: Int): Int = {
+      val rnd = new scala.util.Random(groups)
+      val df = (0 until groups).flatMap(g => (0 until 100).map(_ => (s"g$g", rnd.nextDouble())))
+        .toDF("k", "v")
+      val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+      val l = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          sizes.add(qe.analyzed.collect { case p => p }.length)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        graft.Local.withBudget(16L)(Stats.exactMedianHist(df, "k", "v", nBins = 8, maxPasses = 16))
+        BusInternals.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(l)
+      import scala.jdk.CollectionConverters._
+      sizes.asScala.max
+    }
+    assert(largestPlan(2) == largestPlan(20))
   }
 
   test("BloomAgg: no false negatives, FPR near prediction, merge-order and probe-path invariant") {

@@ -143,4 +143,68 @@ class ScaleSafetySpec extends SparkTestBase {
     }
     assert(seen.count { case (_, p) => perCell(p) } == 2, seen.map(_._1))
   }
+
+  test("exact order statistics over the Local budget: bounded actions, loud non-convergence") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LocalRelation, MapPartitions}
+    import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graftshim.BusInternals
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val (b, nBins) = (64L, 8)
+    def actionsOf(body: => Unit): Seq[QueryExecution] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      val l = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+      }
+      spark.listenerManager.register(l)
+      try { body; BusInternals.drain(spark.sparkContext) }
+      finally spark.listenerManager.unregister(l)
+      seen.asScala.toSeq
+    }
+    object Stages extends AdaptiveSparkPlanHelper
+    // output rows of the first node of `plan` (pre-order) that counts them
+    def rowsOut(plan: SparkPlan): Long =
+      Stages.collect(plan) { case p if p.metrics.contains("numOutputRows") => p }
+        .head.metrics("numOutputRows").value
+    val rnd = new scala.util.Random(5)
+    val df = (0 until 3).flatMap(g => (0 until 400).map(_ => (s"g$g", rnd.nextGaussian())))
+      .toDF("k", "v").repartition(4)
+    val seen = actionsOf(graft.Local.withBudget(b)(
+      Stats.exactQuantileHist(df, "k", "v", 0.95, nBins = nBins)))
+    val kinds = seen.map { qe =>
+      val p = qe.analyzed
+      val keys = p.collectFirst { case a: Aggregate => a.groupingExpressions.map(_.toString) }
+      // the broadcast cell table: one row per cell
+      val cells = p.collectFirst {
+        case j: Join if j.right.output.exists(_.name == "cell") =>
+          j.right.collectFirst { case r: LocalRelation => r.data.length }.get
+      }
+      if (p.exists(_.isInstanceOf[MapPartitions])) {
+        val values = Stages.collect(qe.executedPlan) { case m: MapPartitionsExec => rowsOut(m.child) }
+        assert(values.sum <= b / 2, s"collected ${values.sum} values:\n$p")
+        "collect"
+      } else if (cells.isDefined) {
+        assert(keys.exists(k => k.length == 2 && k(0).startsWith("cell") && k(1).startsWith("bin")),
+          s"not a level aggregate:\n$p")
+        val out = rowsOut(qe.executedPlan)
+        assert(out <= cells.get * nBins, s"$out rows from ${cells.get} cells:\n$p")
+        "level"
+      } else {
+        assert(keys.exists(k => k.length == 1 && k(0).startsWith("k")), s"unexpected action:\n$p")
+        "base"
+      }
+    }
+    assert(kinds.head == "base" && kinds.last == "collect" && kinds.count(_ == "collect") == 1 &&
+      kinds.count(_ == "level") >= 1, kinds)
+    // 1e-300 .. 1e300 in one group: one pass leaves 600 values in its lowest bucket
+    val wide = (-300 to 300).map(e => ("w", math.pow(10, e))).toDF("k", "v")
+    val failed = actionsOf {
+      val ex = intercept[IllegalStateException](graft.Local.withBudget(b)(
+        Stats.exactMedianHist(wide, "k", "v", nBins = nBins, maxPasses = 1)))
+      assert(ex.getMessage.contains("600") && ex.getMessage.contains(s"$b"), ex.getMessage)
+    }
+    assert(failed.nonEmpty && failed.forall(!_.analyzed.exists(_.isInstanceOf[MapPartitions])))
+  }
 }

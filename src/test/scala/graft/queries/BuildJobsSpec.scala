@@ -21,7 +21,7 @@ class BuildJobsSpec extends SparkTestBase {
     "dedup_clusters" -> 14, "dedup_semantic" -> 4, "emb_knn_graph_ivfpq" -> 11,
     "emb_outliers" -> 5, "emb_outliers_ivfpq" -> 22, "emb_pca_recon" -> 2,
     "emb_standardize" -> 2, "graph_pagerank" -> 12, "graph_pagerank_ivfpq" -> 39,
-    "q16_exact_median" -> 12, "q24_exact_p95" -> 13, "sig_rfft_pregrouped" -> 1,
+    "q16_exact_median" -> 5, "q24_exact_p95" -> 5, "sig_rfft_pregrouped" -> 1,
     "sink_compacted" -> 1, "sink_partitioned" -> 1, "src_evolved" -> 1,
     "src_manifest_bloom" -> 2, "src_manifest_clone" -> 4,
     "src_manifest_constraint" -> 4, "src_manifest_pruned" -> 3,
